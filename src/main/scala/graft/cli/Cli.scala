@@ -142,6 +142,10 @@ object Query {
       "[--k N] [--slop N] [--ordered] [--edits N] [--prefix-len N] [--min-match N] " +
       "[--not <terms>] [--should <terms>] [--role X] [--tool Y] [--from ts] [--to ts] " +
       "[--naive] [--conv <prefix>] [--snapshot N] | Query <root> '<lucene query>' --lucene"
+    // an unknown mode must die with the usage, not run some other mode
+    if (!Set("AND", "OR", "SHOULD", "PHRASE", "NEAR", "PREFIX", "FUZZY",
+        "WILDCARD").contains(mode))
+      sys.error(s"unknown --mode '$mode' — " + usage)
     def numOpt(name: String): Option[Long] = opt(name).map { s =>
       s.toLongOption.getOrElse(sys.error(
         s"$name expects an integer, got '$s' — " + usage))

@@ -9,22 +9,29 @@ import graft.model.{CorpusStats, QueryFilter, QuerySpec, SearchHit, TermStats}
 
 /** Query engine over a built index (SURVEY.md §3.1 Spark lifecycle, §7.5).
   *
-  * Two interchangeable execution paths, rank-identical by construction and
-  * by test (EngineParitySpec):
+  * Every public query mode is a thin facade: it analyzes its text, plans
+  * its terms in the corpus view or in one view per scope (dictionary or
+  * scoped dfs, stop cap, df-asc order) and hands ONE private clause value
+  * ([[Clauses]]: scored required and should terms, minShould, prohibited
+  * terms, weightless filters, boosts, an optional proximity part) to ONE
+  * shard-local executor ([[execute]]). The executor scans the pruned
+  * postings once, decodes them and splits each shard's cursors by role in
+  * `mapPartitions` (zero per-query shuffle), applies the presence gates,
+  * then runs the walk the clause shape picks and merges the per-shard
+  * top-k on the driver (network O(shards × k)):
   *
-  *  - `queryNaive` — declarative Catalyst plan over the uncompressed tf
-  *    relation: broadcast dictionary join (J3) → stop-term cap (F4) →
-  *    df-asc ordering (O1) → left-semi intersection chain (J1) → BM25
-  *    per (doc, term) → deterministic canonical-order sum (A4) → top-k
-  *    (O2/O4, TakeOrderedAndProject). The correctness backstop and the
-  *    SQL-oracle twin.
+  * | clause shape                                  | walk                        |
+  * |-----------------------------------------------|-----------------------------|
+  * | required only (+ filters)                     | `Wand.andTopKSegments`      |
+  * | no required, minShould ≤ 1                    | `Wand.orTopKSegments` (filters required, prohibited probed) |
+  * | no required, minShould > 1                    | `Wand.shouldTopKSegments`   |
+  * | required + any of should / prohibited / proximity | one `Wand.andAllWith` walk: per candidate the admission bound, NOT probes, the ordinal predicate, SHOULD probes, then the canonical fold |
+  * | proximity on a positions-free index           | one rescan: complete AND candidates → docs join → verify plus canonical fold from the tokens |
   *
-  *  - `query` — compressed path: term_stats lookup (driver, broadcast-
-  *    sized) → partition-pruned posting scan (parquet row-group skipping
-  *    on the sorted `term` column) → shard-local AND-intersection / WAND
-  *    in `mapPartitions` (zero per-query shuffle) → per-shard top-k →
-  *    driver k-way merge. This is the scale path: per-query work is
-  *    O(postings of the query terms), network is O(shards × k).
+  * `queryNaive` is the declarative Catalyst twin kept as the correctness
+  * backstop (EngineParitySpec): broadcast dictionary join (J3) → stop-term
+  * cap (F4) → df-asc ordering (O1) → left-semi intersection chain (J1) →
+  * BM25 per (doc, term) → canonical-order sum (A4) → top-k (O2/O4).
   *
   * Query-time semantics carried over from the reference:
   *  - terms analyzed with the SAME analyzer as the build
@@ -62,20 +69,33 @@ object SearchEngine {
   def plan(spark: SparkSession, root: String, spec: QuerySpec,
            stats: CorpusStats, applyStopCap: Boolean = true,
            pinned: Option[Manifest] = None): Plan = {
-    import spark.implicits._
     if (spec.terms.isEmpty) return Plan(Vector.empty, Vector.empty, spec.mode, spec.k)
     val m = pinned.getOrElse(pinnedManifest(root))
-    val found = termStatsFor(spark, root, m)
-      .filter($"term".isin(spec.terms: _*))
-      .select($"term", $"df", $"maxTf")
-      .collect().toVector
-      .map(r => TermStats(r.getString(0), r.getLong(1), r.getInt(2)))
+    val found = dictionary(spark, root, m, spec.terms)
     val cap = StopTermCap * stats.nDocs
     val (kept0, dropped) =
       if (applyStopCap) found.partition(_.df <= cap) else (found, Vector.empty)
     val kept = kept0.sortBy(t => (t.df, t.term)) // O1: rarest first
     Plan(kept, dropped.map(_.term).toVector, spec.mode, spec.k)
   }
+
+  /** The dictionary rows of `terms` (absent terms have none): one filtered
+    * scan of the tiny term_stats table, no scan at all for no terms. */
+  private def dictionary(spark: SparkSession, root: String, m: Manifest,
+                         terms: Seq[String]): Vector[TermStats] =
+    if (terms.isEmpty) Vector.empty
+    else termStatsRows(termStatsFor(spark, root, m).filter(col("term").isin(terms: _*)))
+
+  private def termStatsRows(frame: DataFrame): Vector[TermStats] =
+    frame.select(col("term"), col("df"), col("maxTf")).collect().toVector
+      .map(r => TermStats(r.getString(0), r.getLong(1), r.getInt(2)))
+
+  /** The term-query modes; SHOULD, phrase, NEAR and the expansions have
+    * their own entry points. */
+  private def requireMode(mode: String): Unit =
+    require(mode == "AND" || mode == "OR",
+      s"mode must be AND or OR, got '$mode' (SHOULD, PHRASE, NEAR and the " +
+      "expansions have their own entry points)")
 
   /** Compressed scale path. Returns exact global top-k hits.
     * `convPrefix` scopes the search to conversations whose id starts with
@@ -86,15 +106,19 @@ object SearchEngine {
             mode: String = "AND", k: Int = 10,
             convPrefix: Option[String] = None,
             filter: QueryFilter = QueryFilter.Empty,
-            after: Option[SearchHit] = None): Vector[SearchHit] =
+            after: Option[SearchHit] = None): Vector[SearchHit] = {
+    requireMode(mode)
     convPrefix match {
       case Some(pre) =>
         require(after.isEmpty, ScopedAfterError)
         queryScoped(spark, root, queryText, mode, k, Seq(pre), filter)
       case None =>
-        queryResolved(spark, root, pinnedManifest(root), queryText, mode, k,
-          filter, after)
+        val m = pinnedManifest(root)
+        termQuery(spark, root, m,
+          Analyzer.analyzeQueryFor(m.analyzerVersion, queryText), mode, k,
+          Nil, filter, after)
     }
+  }
 
   /** search_after (r7) is single-walk only: a multi-scope union keeps
     * each doc's BEST-instance score, and a per-scope after-cursor walk
@@ -184,6 +208,7 @@ object SearchEngine {
               k: Int = 10, scopes: Seq[String] = Nil,
               filter: QueryFilter = QueryFilter.Empty,
               after: Option[SearchHit] = None): Vector[SearchHit] = {
+    requireMode(mode)
     require(after.isEmpty || scopes.isEmpty, ScopedAfterError)
     val retained = IndexManifest.versions(root)
     require(retained.contains(snapshotId),
@@ -192,20 +217,12 @@ object SearchEngine {
     withExpiryDiagnosis(root, snapshotId) {
       // the manifest parse itself can lose the race with expiry (cold
       // cache miss after versions() listed the snapshot) — keep it
-      // inside the diagnosis wrapper so it fails loudly, not raw
+      // inside the diagnosis wrapper so it fails loudly, not raw.
+      // Scoped time travel: scope/segment/df memos key by snapshot id
       val m = IndexManifest.readVersionCached(root, snapshotId)
-      if (scopes.isEmpty)
-        queryResolved(spark, root, m, queryText, mode, k, filter, after)
-      else {
-        // scoped time travel: the scoped path already pins one manifest
-        // end-to-end, and scope/segment/df memos key by snapshot id
-        val terms = Analyzer.analyzeQueryFor(m.analyzerVersion, queryText)
-        if (terms.isEmpty) Vector.empty
-        else memoized(root,
-          QueryKey(terms, mode, k, scopes, m.snapshotId, filter.cacheKey)) {
-          queryScopedUncached(spark, root, m, terms, mode, k, scopes, filter)
-        }
-      }
+      val terms = Analyzer.analyzeQueryFor(m.analyzerVersion, queryText)
+      if (terms.isEmpty && scopes.nonEmpty) Vector.empty
+      else termQuery(spark, root, m, terms, mode, k, scopes, filter, after)
     }
   }
 
@@ -229,28 +246,6 @@ object SearchEngine {
         else throw e
     }
 
-  /** Unscoped query against ONE pinned snapshot (see [[pinnedManifest]]). */
-  private def queryResolved(spark: SparkSession, root: String, m: Manifest,
-                            queryText: String, mode: String, k: Int,
-                            filter: QueryFilter = QueryFilter.Empty,
-                            after: Option[SearchHit] = None): Vector[SearchHit] = {
-    val stats = CorpusStats(m.nDocs, m.avgdl, m.analyzerVersion)
-    val terms = Analyzer.analyzeQueryFor(stats.analyzerVersion, queryText)
-    memoized(root,
-      QueryKey(terms, mode, k, Nil, m.snapshotId, filter.cacheKey,
-        afterKey(after))) {
-      val (fterms, tsRanges) = resolveFilter(spark, root, m, filter)
-      val spec = QuerySpec(terms, mode, k)
-      val p = plan(spark, root, spec, stats, pinned = Some(m))
-      // terms absent from the dictionary are silently DROPPED and the
-      // rest searched (reference SearchServiceImpl.java:145-148
-      // filter(Objects::nonNull)); empty only when nothing survives
-      if (p.terms.isEmpty) Vector.empty
-      else executePlan(spark, root, p, stats,
-        combineRanges(None, tsRanges), Some(m), fterms, after)
-    }
-  }
-
   /** Multi-scope search (reference multi-site: per-site results computed
     * with per-site statistics, then unioned — SearchServiceImpl.java:
     * 127-162, O5). Scopes are conv-id prefixes and expected disjoint
@@ -266,64 +261,88 @@ object SearchEngine {
   def queryScoped(spark: SparkSession, root: String, queryText: String,
                   mode: String, k: Int, scopes: Seq[String],
                   filter: QueryFilter = QueryFilter.Empty): Vector[SearchHit] = {
+    requireMode(mode)
     val m = pinnedManifest(root)
     val terms = Analyzer.analyzeQueryFor(m.analyzerVersion, queryText)
-    if (terms.isEmpty || scopes.isEmpty) return Vector.empty
-    memoized(root,
-      QueryKey(terms, mode, k, scopes, m.snapshotId, filter.cacheKey)) {
-      queryScopedUncached(spark, root, m, terms, mode, k, scopes, filter)
-    }
+    if (terms.isEmpty || scopes.isEmpty) Vector.empty
+    else termQuery(spark, root, m, terms, mode, k, scopes, filter)
   }
 
-  private def queryScopedUncached(spark: SparkSession, root: String,
-                                  m: Manifest,
-                                  terms: Vector[String], mode: String, k: Int,
-                                  scopes: Seq[String],
-                                  filter: QueryFilter = QueryFilter.Empty): Vector[SearchHit] = {
-    // filters compose with scopes: per-scope STATISTICS stay those of the
-    // whole scope (filters never re-weigh — Lucene FILTER semantics), the
-    // walk runs over scope ∩ ts segments, field cursors probe in-walk
-    val (fterms, tsRanges) = resolveFilter(spark, root, m, filter)
-    val all = scopes.flatMap { pre =>
-      scopedKeptPlan(spark, root, m, terms, pre, mode, k) match {
-        case None => Vector.empty
-        case Some((p, stats, ranges)) =>
-          // ALL segments in ONE scan: the shard-local WAND walks the
-          // ascending segment list with one cursor pass and one heap —
-          // a scope fragmented by out-of-order appends costs one Spark
-          // job, not one per segment
-          executePlan(spark, root, p, stats,
-            combineRanges(Some(ranges), tsRanges), Some(m), fterms)
+  /** AND/OR over analyzed terms against ONE pinned snapshot (see
+    * [[pinnedManifest]]), in the corpus view or per scope. Terms absent
+    * from the dictionary (or the scope) are silently DROPPED and the rest
+    * searched (reference SearchServiceImpl.java:145-148
+    * filter(Objects::nonNull)); empty only when nothing survives. Filters
+    * compose with scopes: per-scope STATISTICS stay those of the whole
+    * scope (filters never re-weigh — Lucene FILTER semantics), the walk
+    * runs over scope ∩ ts segments, field cursors probe in-walk. */
+  private def termQuery(spark: SparkSession, root: String, m: Manifest,
+                        terms: Vector[String], mode: String, k: Int,
+                        scopes: Seq[String], filter: QueryFilter,
+                        after: Option[SearchHit] = None): Vector[SearchHit] =
+    memoized(root,
+      QueryKey(terms, mode, k, scopes, m.snapshotId, filter.cacheKey,
+        afterKey(after))) {
+      val (fterms, tsRanges) = resolveFilter(spark, root, m, filter)
+      overViews(spark, root, m, scopes, k, terms) { v =>
+        val ts = kept(v, terms, capped = true)
+        if (ts.isEmpty) Vector.empty
+        else execute(spark, root, m, modeClauses(ts, mode, fterms), v.stats, k,
+          combineRanges(v.ranges, tsRanges), after)
       }
     }
-    unionBest(all, k)
-  }
 
-  /** Per-scope AND/OR planning — segments, per-scope stats, scoped dfs
-    * with the df>0 drop, the per-scope stop cap and canonical (df, term)
-    * order. ONE definition shared by [[queryScopedUncached]] and
-    * [[queryNot]]'s scoped branch (r6 review: a drifting copy). None =
-    * empty scope or no surviving term. */
-  private def scopedKeptPlan(spark: SparkSession, root: String, m: Manifest,
-                             terms: Vector[String], pre: String,
-                             mode: String, k: Int)
-      : Option[(Plan, CorpusStats, Seq[(Long, Long)])] = {
-    val segs = scopeSegments(spark, root, m, pre)
-    if (segs.isEmpty) None
-    else {
-      val n = segs.map(_.n).sum
-      val stats = CorpusStats(n, segs.map(_.sumDl).sum.toDouble / n,
-        m.analyzerVersion)
-      val ranges = segs.map(s => (s.lo, s.hi))
-      val dfs = scopedTermDf(spark, root, m, pre, terms, ranges)
-      val kept = terms
-        .flatMap(t => dfs.get(t).filter(_ > 0).map(df => (t, df)))
-        .filter { case (_, df) => df <= StopTermCap * n }
-        .sortBy { case (t, df) => (df, t) }
-        .map { case (t, df) => TermStats(t, df, 0) }
-      if (kept.isEmpty) None
-      else Some((Plan(kept.toVector, Vector.empty, mode, k), stats, ranges))
-    }
+  /** The statistics one query is planned and scored in: the whole corpus
+    * (`ranges` None) or one conv-prefix scope with per-scope N, avgdl,
+    * dfs and docId segments (the reference's per-site semantics,
+    * LemmaRepository.findBySiteAndLemma). `dfs` looks up term dfs. */
+  private final case class View(stats: CorpusStats,
+                                ranges: Option[Seq[(Long, Long)]],
+                                dfs: Seq[String] => Map[String, Long])
+
+  /** Answer `body` in the corpus view, or in every scope's view and union
+    * the answers. A scope resolves its segments (memoized) and then the
+    * dfs of the query's whole term `universe` in ONE memoized pass; an
+    * empty scope answers nothing. The corpus view probes the dictionary
+    * once per lookup, except for terms whose df `known` already holds
+    * (an expansion's). ALL of a scope's segments go to ONE scan: the
+    * shard-local walk takes the ascending segment list with one cursor
+    * pass and one heap, so a scope fragmented by out-of-order appends
+    * costs one Spark job, not one per segment. */
+  private def overViews(spark: SparkSession, root: String, m: Manifest,
+                        scopes: Seq[String], k: Int, universe: Seq[String],
+                        known: Map[String, Long] = Map.empty)
+                       (body: View => Vector[SearchHit]): Vector[SearchHit] =
+    if (scopes.isEmpty) body(corpusView(spark, root, m, known))
+    else unionBest(scopes.flatMap { pre =>
+      val segs = scopeSegments(spark, root, m, pre)
+      if (segs.isEmpty) Vector.empty
+      else {
+        val n = segs.map(_.n).sum
+        val ranges = segs.map(s => (s.lo, s.hi))
+        val dfs = scopedTermDf(spark, root, m, pre, universe, ranges)
+        body(View(CorpusStats(n, segs.map(_.sumDl).sum.toDouble / n,
+          m.analyzerVersion), Some(ranges), _ => dfs))
+      }
+    }, k)
+
+  /** The corpus view: manifest statistics, dictionary dfs. */
+  private def corpusView(spark: SparkSession, root: String, m: Manifest,
+                         known: Map[String, Long] = Map.empty): View =
+    View(CorpusStats(m.nDocs, m.avgdl, m.analyzerVersion), None,
+      ts => known ++ dictionary(spark, root, m, ts.filterNot(known.contains))
+        .map(t => t.term -> t.df))
+
+  /** A view's planned survivors of `terms`: df > 0, the stop cap
+    * df <= 0.9·N when `capped`, canonical (df, term) order (O1: rarest
+    * first). */
+  private def kept(v: View, terms: Seq[String],
+                   capped: Boolean): Vector[TermStats] = {
+    val dfs = v.dfs(terms)
+    terms.toVector
+      .flatMap(t => dfs.get(t).filter(_ > 0).map(TermStats(t, _, 0)))
+      .filter(t => !capped || t.df <= StopTermCap * v.stats.nDocs)
+      .sortBy(t => (t.df, t.term))
   }
 
   /** Multi-scope union: overlapping scopes keep each doc's best-scoring
@@ -579,9 +598,10 @@ object SearchEngine {
   }
 
   /** Per-query latency telemetry (VERDICT r02 item 10): set
-    * GRAFT_QUERY_TELEMETRY=1 to emit one stderr JSON line per query with
-    * the phase breakdown (plan/scan+wand/merge, shard-local wand time from
-    * an accumulator, path taken) — latency regressions become diagnosable
+    * GRAFT_QUERY_TELEMETRY=1 to emit one stderr JSON line per executed
+    * clause value, at [[execute]]'s single exit, with the phase breakdown
+    * (scan+walk+merge, shard-local walk time from an accumulator, the walk
+    * and the scan path taken) — latency regressions become diagnosable
     * from the bench artifact alone. */
   private val telemetry = sys.env.get("GRAFT_QUERY_TELEMETRY").contains("1")
 
@@ -589,9 +609,7 @@ object SearchEngine {
     * case; several = a scope fragmented by out-of-order appends) + the
     * manifest-range shard-prune transform for the posting scan
     * (partition-column pruning — the scan never lists the other shard
-    * dirs). ONE definition shared by executePlan / positionalVerifyTopK /
-    * phraseCandidates (r6 review: three drifting copies). Empty segs =
-    * empty scope. */
+    * dirs), for [[execute]]'s posting scan. Empty segs = empty scope. */
   private def segsAndPrune(m: Manifest, ranges: Option[Seq[(Long, Long)]])
       : (Vector[(Long, Long)], DataFrame => DataFrame) = {
     val segs: Vector[(Long, Long)] = ranges match {
@@ -680,42 +698,236 @@ object SearchEngine {
         boost = boostOf.getOrElse(term, 1.0))
     }.toSeq
 
+  /** Run a planned AND/OR [[Plan]] (`plan` → `executePlan` is the
+    * two-phase form of [[query]]): AND makes its terms required, OR makes
+    * them should-match-one; `filters` are encoded field terms. */
   def executePlan(spark: SparkSession, root: String, p: Plan,
                   stats: CorpusStats,
                   ranges: Option[Seq[(Long, Long)]] = None,
                   pinned: Option[Manifest] = None,
                   filters: Vector[String] = Vector.empty,
                   after: Option[SearchHit] = None): Vector[SearchHit] = {
-    import spark.implicits._
-    val m = pinned.getOrElse(pinnedManifest(root))
-    val textTerms = p.terms.map(_.term)
-    // FILTER clauses (r7): pre-encoded field terms ride the same scan and
-    // cursor machinery as the query terms. AND mode puts them IN the
-    // intersection (weightless members — a rare filter list then DRIVES
-    // the walk); OR/SHOULD probe them per candidate (Wand required
-    // probes). Scores and statistics are untouched either way.
-    val termList = textTerms ++ filters
-    val dfByTerm = p.terms.map(t => t.term -> t.df).toMap ++
-      filters.map(_ -> 0L) // placeholder: buildCursors uses local counts
-    // canonical contribution order: df asc, term asc (§7.8.1); filter
-    // slots append after the scored terms and always contribute 0.0
-    val canonical = p.terms.sortBy(t => (t.df, t.term)).map(_.term)
-      .zipWithIndex.toMap ++
-      filters.zipWithIndex.map { case (t, i) => t -> (textTerms.size + i) }
-    val nDocs = stats.nDocs
-    val avgdl = stats.avgdl
-    val mode = p.mode
-    val k = p.k
-    val nText = textTerms.size
-    val nFilters = filters.size
-    val nTerms = termList.size
-    // "SHOULD:<m>" rides the mode string so Plan / scopedKeptPlan / memo
-    // keys need no new field; [[queryShould]] is the only producer
-    val minShould: Int =
-      if (mode.startsWith("SHOULD:")) mode.stripPrefix("SHOULD:").toInt else 0
-    val (segs, shardPrune) = segsAndPrune(m, ranges)
-    if (segs.isEmpty) return Vector.empty // empty scope
+    requireMode(p.mode)
+    execute(spark, root, pinned.getOrElse(pinnedManifest(root)),
+      modeClauses(p.terms, p.mode, filters), stats, p.k, ranges, after)
+  }
 
+  private def modeClauses(terms: Vector[TermStats], mode: String,
+                          filters: Vector[String]): Clauses =
+    if (mode == "AND") Clauses(terms, filters = filters)
+    else Clauses(Vector.empty, should = terms, minShould = 1, filters = filters)
+
+  /** The clause value a query executes as (Lucene's Weight, before any
+    * shard is touched): scored `required` (MUST) and `should` (SHOULD)
+    * terms with their planned dfs, the SHOULD count requirement
+    * `minShould`, unscored `prohibited` (MUST_NOT) terms, weightless
+    * `filters` (encoded field terms — Lucene FILTER clauses), per-term
+    * boosts, and an optional proximity part over required terms. The term
+    * sets are disjoint: callers resolve clause overlaps after planning. */
+  private final case class Clauses(required: Vector[TermStats],
+                                   should: Vector[TermStats] = Vector.empty,
+                                   minShould: Int = 0,
+                                   prohibited: Vector[String] = Vector.empty,
+                                   filters: Vector[String] = Vector.empty,
+                                   boosts: Map[String, Double] = Map.empty,
+                                   proximity: Option[Proximity] = None)
+
+  /** A proximity clause: `slots` (sorted distinct terms) fix the capture
+    * order of per-term ordinals; `posPred` decides on posting ordinals
+    * (positional index), `verify` on the re-analyzed token stream
+    * (positions-free rescan). */
+  private final case class Proximity(slots: Vector[String],
+                                     posPred: Array[Array[Int]] => Boolean,
+                                     verify: Vector[String] => Boolean)
+
+  /** One shard's cursors split by clause role. */
+  private final class ShardCursors(val required: Seq[Wand.TermCursor],
+                                   val filters: Seq[Wand.TermCursor],
+                                   val should: Seq[Wand.TermCursor],
+                                   val prohibited: Seq[Wand.TermCursor])
+
+  /** The task-side half of [[execute]] (Lucene's Weight→Scorer split): a
+    * clause value bound to its statistics, walk segments and k. It
+    * rebuilds each shard's cursors by role and runs the walk the clause
+    * shape picks (the object scaladoc's table). Plain JVM code, shipped to
+    * every scan task. */
+  private final class ClauseWeight(c: Clauses, stats: CorpusStats, k: Int,
+                                   segs: Vector[(Long, Long)],
+                                   after: Option[SearchHit]) extends Serializable {
+    private val requiredSet = c.required.map(_.term).toSet
+    private val shouldSet = c.should.map(_.term).toSet
+    private val prohibitedSet = c.prohibited.toSet
+    // canonical contribution order (§7.8.1): the scored terms by (df asc,
+    // term asc), then the prohibited and filter slots, which add 0.0
+    private val scored = (c.required ++ c.should).sortBy(t => (t.df, t.term))
+    private val canonical =
+      (scored.map(_.term) ++ c.prohibited ++ c.filters).zipWithIndex.toMap
+    // 0 dfs are placeholders: prohibited terms are never scored, and
+    // filters use their per-shard counts (buildCursors)
+    private val dfByTerm = scored.map(t => t.term -> t.df).toMap ++
+      (c.prohibited ++ c.filters).map(_ -> 0L)
+    private val boostArr = scored.map(t => c.boosts.getOrElse(t.term, 1.0))
+    // Lucene's at-least-one rule when no MUST clause survives
+    private val minMatch =
+      if (c.required.isEmpty) math.max(1, c.minShould) else c.minShould
+    private val plainAnd =
+      c.should.isEmpty && c.prohibited.isEmpty && c.proximity.isEmpty
+    private val slotOf =
+      c.proximity.map(_.slots.zipWithIndex.toMap).getOrElse(Map.empty[String, Int])
+
+    val walkName: String =
+      if (c.required.isEmpty) (if (minMatch <= 1) "or" else "should")
+      else if (plainAnd) "and" else "and-probes"
+
+    /** Decode a task's posting rows, group them by shard and split each
+      * shard's cursors by role. Presence gates: a doc's postings are
+      * complete within its shard, so a required or filter list absent
+      * from the shard, or fewer SHOULD lists than the count requirement,
+      * means no doc here can match. */
+    def shards(rows: Iterator[org.apache.spark.sql.Row],
+               withPos: Boolean): Iterator[(Int, ShardCursors)] =
+      // one partition may pack several whole shards: group the (few)
+      // keys, never the rows
+      decodeByTerm(rows, withPos).groupBy(_._1._1).iterator.flatMap {
+        case (shard, termChunks) =>
+          val all = buildCursors(termChunks, dfByTerm, canonical,
+            stats.nDocs, stats.avgdl, c.boosts)
+          val filters = all.filterNot(_.scored)
+          val required = all.filter(t => requiredSet(t.term))
+          val should = all.filter(t => shouldSet(t.term))
+          if (filters.size < c.filters.size ||
+              required.size < c.required.size || should.size < minMatch) None
+          else Some(shard -> new ShardCursors(required, filters, should,
+            all.filter(t => prohibitedSet(t.term))))
+      }
+
+    /** The shard's top-k by the walk the clause shape picks. */
+    def topK(r: ShardCursors): Iterator[SearchHit] =
+      if (c.required.isEmpty) {
+        // minShould <= 1 is rank-identical to OR (spec-pinned law,
+        // WandSpec) and takes the WAND/BMW-pruned walk (VERDICT r7
+        // item 1a); more takes the count-qualified walk
+        if (minMatch <= 1)
+          Wand.orTopKSegments(r.should, k, segs, required = r.filters,
+            after = after, prohibited = r.prohibited).iterator
+        else
+          Wand.shouldTopKSegments(r.should, minMatch, k, segs,
+            required = r.filters, prohibited = r.prohibited,
+            after = after).iterator
+      }
+      // filters join the intersection as weightless members: a rare
+      // filter list then DRIVES the walk
+      else if (plainAnd)
+        Wand.andTopKSegments(r.required ++ r.filters, k, segs, after).iterator
+      else probedAndTopK(r)
+
+    /** Required + any of SHOULD / MUST_NOT / proximity: ONE lazy AND walk
+      * over the required (+ filter) cursors; the intersection is
+      * enumerated COMPLETELY, never k-cut before the probes (a cut could
+      * keep only excluded or unverified docs). Per candidate, cheapest
+      * rejection first: the admission bound `(s + Σ per-shard SHOULD
+      * upper bounds) · BoolBoundSlack >= heap threshold` (`>=` keeps
+      * ties probed — exactness), the monotone NOT probes, the ordinal
+      * decode + proximity predicate, then the SHOULD probes and the
+      * canonical fold. Candidates ascend, so every probe list is one
+      * forward merge, never a restart. */
+    private def probedAndTopK(r: ShardCursors): Iterator[SearchHit] = {
+      val heap = new Wand.TopK(k, after)
+      val shouldArr = r.should.toArray
+      val negArr = r.prohibited.toArray
+      var shouldUbSum = 0.0
+      shouldArr.foreach(t => shouldUbSum += t.upperBound)
+      val contribs = new Array[Double](canonical.size)
+      val posBySlot = new Array[Array[Int]](slotOf.size) // reused per match
+      def proximate(arr: Array[Wand.TermCursor]): Boolean =
+        c.proximity.forall { p =>
+          var i = 0
+          while (i < arr.length) {
+            val so = slotOf.getOrElse(arr(i).term, -1)
+            if (so >= 0) posBySlot(so) = arr(i).positions
+            i += 1
+          }
+          p.posPred(posBySlot)
+        }
+      val walk = Wand.andAllWith(r.required ++ r.filters, segs) { (d, s, arr) =>
+        if ((s + shouldUbSum) * BoolBoundSlack >= heap.threshold &&
+            !Wand.presentInAny(negArr, d) && proximate(arr)) {
+          java.util.Arrays.fill(contribs, 0.0)
+          var i = 0
+          while (i < arr.length) { // required + weightless filters
+            contribs(arr(i).canonical) = arr(i).score
+            i += 1
+          }
+          var matched = 0
+          i = 0
+          while (i < shouldArr.length) {
+            shouldArr(i).advanceTo(d)
+            if (!shouldArr(i).exhausted && shouldArr(i).docId == d) {
+              contribs(shouldArr(i).canonical) = shouldArr(i).score
+              matched += 1
+            }
+            i += 1
+          }
+          if (matched >= minMatch) heap.offer(d, Wand.canonicalSum(contribs))
+        }
+      }
+      while (walk.hasNext) walk.next() // drain (lazy iterator)
+      heap.results.iterator
+    }
+
+    /** The rescan's candidates: the COMPLETE required (+ filter)
+      * intersection minus prohibited docs, ascending. */
+    def candidates(r: ShardCursors): Iterator[Long] = {
+      val negArr = r.prohibited.toArray
+      Wand.andAllWith(r.required ++ r.filters, segs)((d, _, _) => d)
+        .filterNot(Wand.presentInAny(negArr, _))
+    }
+
+    /** Rescan twin of the walk's proximity predicate, SHOULD count and
+      * canonical fold, from a candidate's analyzed token stream: tf, dl
+      * and df are the numbers the postings hold, so the score is
+      * bit-equal to the positional walk's. */
+    def scoreTokens(toks: Vector[String]): Option[Double] =
+      if (!c.proximity.forall(_.verify(toks))) None
+      else {
+        val dl = toks.length
+        var matched = 0
+        var s = 0.0
+        var i = 0
+        while (i < scored.length) { // canonical (df, term) order
+          val t = scored(i)
+          var tf = 0
+          toks.foreach(x => if (x == t.term) tf += 1)
+          if (tf > 0) {
+            if (shouldSet(t.term)) matched += 1
+            s += boostArr(i) * Bm25.score(tf, t.df, dl, stats.nDocs, stats.avgdl)
+          }
+          i += 1
+        }
+        if (matched >= minMatch) Some(s) else None
+      }
+  }
+
+  /** THE shard-local executor: every query mode runs its planned clause
+    * value through here. One posting scan of the clause terms (shard- and
+    * term-pruned), one decode and role split per shard, the presence
+    * gates, the walk the clause shape picks ([[ClauseWeight]]), and the
+    * driver merge of the per-shard top-k — one Spark job on the aligned
+    * path. Proximity on a positions-free index takes the rescan instead
+    * ([[rescanTopK]]). */
+  private def execute(spark: SparkSession, root: String, m: Manifest,
+                      c: Clauses, stats: CorpusStats, k: Int,
+                      ranges: Option[Seq[(Long, Long)]],
+                      after: Option[SearchHit] = None): Vector[SearchHit] = {
+    import spark.implicits._
+    val terms = c.required.map(_.term) ++ c.should.map(_.term) ++
+      c.prohibited ++ c.filters
+    require(terms.distinct.size == terms.size,
+      s"clause term sets must be disjoint, got ${terms.mkString(",")}")
+    val (segs, shardPrune) = segsAndPrune(m, ranges)
+    val w = new ClauseWeight(c, stats, k, segs, after)
+    val rescan = c.proximity.nonEmpty && !m.positions
+    val withPos = c.proximity.nonEmpty && m.positions
     val wandNanos =
       if (telemetry) Some(spark.sparkContext.longAccumulator("graft.wandNanos"))
       else None
@@ -723,60 +935,11 @@ object SearchEngine {
     // Per-shard grouping must be COMPLETE inside each task: posting files
     // are term-sorted, so if a shard's rows split across scan tasks at
     // row-group boundaries, term-A chunks and term-B chunks land in
-    // different tasks — AND would see cursors.size < nTerms per fragment
-    // and silently drop the shard's hits, OR would emit partial-score
-    // duplicates (EngineParitySpec split-scan test pins this).
-    //
-    // ONE streaming pass over the task's rows (VERDICT r03 item 2): each
-    // row is decoded to its compressed BlockedList immediately and the
-    // Row object dropped, so task memory is exactly the selected terms'
-    // compressed posting bytes — never a second, Row-wrapped copy of the
-    // whole selection (the r03 rows.toVector held both at once).
-    def shardLocalTopK(selected: DataFrame): Array[SearchHit] =
-      selected
-        .select(postingScanColumns(withPos = false): _*)
-        .mapPartitions { rows =>
-          val t0 = System.nanoTime()
-          val byTerm = decodeByTerm(rows, withPos = false)
-          // one partition may pack several whole shards: group the (few)
-          // keys, never the rows
-          val byShard = byTerm.groupBy(_._1._1)
-          val out = byShard.iterator.flatMap { case (_, termChunks) =>
-            val all = buildCursors(termChunks, dfByTerm, canonical,
-              nDocs, avgdl)
-            // a doc's postings are complete within its shard: a missing
-            // filter list ⇒ no doc here carries that field value ⇒ empty
-            val (cursors, filterCur) = all.partition(_.scored)
-            val hits =
-              if (filterCur.size < nFilters) Vector.empty
-              else if (mode == "AND") {
-                // a term absent from this shard ⇒ empty local intersection;
-                // filters join the intersection as weightless members
-                if (cursors.size < nText) Vector.empty
-                else Wand.andTopKSegments(cursors ++ filterCur, k, segs,
-                  after)
-              } else if (minShould > 1) {
-                // fewer than minMatch scored terms present ⇒ no doc here
-                // can reach the count requirement
-                if (cursors.size < minShould) Vector.empty
-                else Wand.shouldTopKSegments(cursors, minShould, k, segs,
-                  required = filterCur, after = after)
-              } else Wand.orTopKSegments(cursors, k, segs,
-                // minShould == 1 is rank-identical to OR (spec-pinned
-                // law, WandSpec) — dispatching it here buys the full
-                // WAND/BMW pruning the exhaustive count walk lacks
-                // (VERDICT r7 item 1a)
-                required = filterCur, after = after)
-            hits
-          }.toVector
-          wandNanos.foreach(_.add(System.nanoTime() - t0))
-          out.iterator
-        }
-        .collect()
-
-    // Execution path choice (VERDICT r02 item 2 — the r02 per-query
-    // `repartition($"shard")` fixed split-scan correctness but cost an 8×
-    // cold-latency regression: a shuffle stage per query):
+    // different tasks — AND would see fewer cursors than terms per
+    // fragment and silently drop the shard's hits, OR would emit
+    // partial-score duplicates (EngineParitySpec split-scan test pins
+    // this). Execution path choice (VERDICT r02 item 2 — a per-query
+    // `repartition($"shard")` costs a shuffle stage per query):
     //  - every shard dir holds ONE parquet file (the layout every build/
     //    maintenance write produces) → scan with split sizing pinned to
     //    the largest file, so one task = one whole shard file and the
@@ -784,21 +947,103 @@ object SearchEngine {
     //    through the serving cache (which pins the aligned frame);
     //  - multi-file shard dirs (external/legacy layout) → fall back to
     //    the repartition, trading latency for unconditional correctness.
+    // ONE streaming pass over the task's rows (VERDICT r03 item 2): each
+    // row decodes to its compressed BlockedList immediately and the Row
+    // drops ([[decodeByTerm]]).
     val t0 = System.nanoTime()
-    val (scanFrame, pathName, needShuffle) = resolvedPostingsScan(spark, root, m)
-    val selected = shardPrune(scanFrame).filter($"term".isin(termList: _*))
-    val perShard =
-      shardLocalTopK(if (needShuffle) selected.repartition($"shard") else selected)
+    val (hits, shardHits, pathName) =
+      if (segs.isEmpty) (Vector.empty[SearchHit], 0, "empty-scope")
+      else {
+        val (scanFrame, path, needShuffle) =
+          resolvedPostingsScan(spark, root, m, needPositions = withPos)
+        val selected0 = shardPrune(scanFrame).filter($"term".isin(terms: _*))
+        val selected =
+          (if (needShuffle) selected0.repartition($"shard") else selected0)
+            .select(postingScanColumns(withPos): _*)
+        if (rescan) {
+          val (h, n) = rescanTopK(spark, root, m, w, selected, k)
+          (h, n, path)
+        } else {
+          val perShard = selected.mapPartitions { rows =>
+            val t = System.nanoTime()
+            val out = w.shards(rows, withPos).flatMap { case (_, r) => w.topK(r) }
+              .toVector
+            wandNanos.foreach(_.add(System.nanoTime() - t))
+            out.iterator
+          }.collect()
+          (perShard.toVector.sortBy(h => (-h.score, h.docId)).take(k),
+            perShard.length, path)
+        }
+      }
     val execMs = (System.nanoTime() - t0) / 1e6
-
-    val merged = perShard.toVector.sortBy(h => (-h.score, h.docId)).take(k)
     if (telemetry) System.err.println(
-      f"""{"graft_query_telemetry":{"mode":"$mode","terms":$nTerms,"k":$k,""" +
-      f""""path":"$pathName","exec_ms":$execMs%.1f,""" +
+      f"""{"graft_query_telemetry":{"walk":"${if (rescan) "rescan" else w.walkName}",""" +
+      f""""terms":${terms.size},"k":$k,"path":"$pathName","exec_ms":$execMs%.1f,""" +
       f""""wand_ms":${wandNanos.map(_.value / 1e6).getOrElse(-1.0)}%.1f,""" +
-      f""""shard_hits":${perShard.length},"hits":${merged.size}}}""")
-    merged
+      f""""shard_hits":$shardHits,"hits":${hits.size}}}""")
+    hits
   }
+
+  /** Proximity on a positions-free index (the rescan fallback):
+    *  1. enumerate the COMPLETE required-AND candidates (NOT probes
+    *     applied, no top-k cut before the verify, else hits could be
+    *     dropped) in one shard-aligned scan, pinned once
+    *     (localCheckpoint): one evaluation feeds the count, the shard list
+    *     and the join;
+    *  2. prune the docs scan to the shards that produced candidates;
+    *  3. join docs←candidates (broadcast when the candidate count is
+    *     small), verify + score each re-analyzed token stream
+    *     ([[ClauseWeight.scoreTokens]]), take the global top-k.
+    * A phrase of frequent terms degrades to a partial corpus re-tokenize
+    * here — the positional format exists for exactly that workload
+    * (VERDICT r05 item 2). Returns the hits and the candidate count. */
+  private def rescanTopK(spark: SparkSession, root: String, m: Manifest,
+                         w: ClauseWeight, selected: DataFrame,
+                         k: Int): (Vector[SearchHit], Int) = {
+    import spark.implicits._
+    val cand = selected.mapPartitions { rows =>
+      w.shards(rows, withPos = false).flatMap { case (shard, r) =>
+        w.candidates(r).map(d => (shard, d))
+      }
+    }.toDF("shard", "docId").localCheckpoint(true)
+    try {
+      // ONE action serves the emptiness probe and the broadcast decision
+      // (VERDICT r05 hygiene item 4)
+      val candCount = cand.count()
+      if (candCount == 0L) (Vector.empty, 0)
+      else {
+        val candShards =
+          cand.select($"shard").distinct().as[Int].collect().toSeq // O(shards)
+        val candFrame = cand.select($"docId")
+        val joinCand =
+          if (candCount <= PhraseBroadcastMax) broadcast(candFrame) else candFrame
+        val ver = m.analyzerVersion
+        val hits = IndexSnapshot.docsFor(spark, root, m, candShards)
+          .select($"docId", $"text")
+          .join(joinCand, "docId")
+          .select($"docId", $"text").as[(Long, String)]
+          .mapPartitions(_.flatMap { case (d, txt) =>
+            w.scoreTokens(Analyzer.tokensFor(ver, txt)).map(SearchHit(d, _))
+          })
+          .orderBy($"score".desc, $"docId".asc).limit(k) // TakeOrderedAndProject
+          .collect().toVector
+        (hits, candCount.toInt)
+      }
+    } finally {
+      // ADVICE r05 item 1: unpersist on a localCheckpoint-backed frame is
+      // a CacheManager no-op; the blocks free via the ContextCleaner when
+      // cand drops out of scope here. Kept as documentation of intent —
+      // if the checkpoint is ever swapped for cache(), this is the spot.
+      cand.unpersist(); ()
+    }
+  }
+
+  /** Relative inflation on the admission bound of the probed AND walk
+    * ([[ClauseWeight]]): covers float-association slack between
+    * `required score + shouldUbSum` and the canonical-order total, orders
+    * of magnitude below any real adjacent-score gap. Over-admission only
+    * costs probes; under-admission would break exactness. */
+  private val BoolBoundSlack = 1.0 + 1e-12
 
   /** Candidate-set size below which the verification join broadcasts the
     * candidate side (a phrase's AND intersection is usually tiny next to
@@ -814,7 +1059,8 @@ object SearchEngine {
     * (PhraseSpec pins this), so phrase results are the AND results
     * filtered by adjacency.
     *
-    * Execution — TWO paths, rank-identical (PhraseSpec pins equality):
+    * Execution — TWO paths of [[execute]], rank-identical (PhraseSpec
+    * pins equality):
     *  - POSITIONAL index (r6 format rev, `IndexBuilder.build(positions =
     *    true)`, recorded in the manifest): adjacency is verified against
     *    each term's token ordinals INSIDE the shard-local posting walk
@@ -822,18 +1068,9 @@ object SearchEngine {
     *    no docs join, no re-tokenize, per-shard top-k heap, driver merge.
     *    A phrase query then costs an AND query plus per-match ordinal
     *    probes: the Lucene PhraseQuery shape.
-    *  - positions-free index (rescan fallback):
-    *     1. enumerate the COMPLETE AND intersection with scores via one
-    *        shard-aligned posting scan ([[Wand.andAll]] — no top-k cut
-    *        before the phrase filter, else hits could be dropped);
-    *     2. pin the candidate frame (localCheckpoint) and prune the docs
-    *        scan to the shards that produced candidates;
-    *     3. join docs←candidates (broadcast when the candidate count is
-    *        small), keep docs whose token stream containsSlice the
-    *        phrase, take the global top-k.
-    *    A phrase of frequent terms degrades to a partial corpus
-    *    re-tokenize on this path — the positional format exists for
-    *    exactly that workload (VERDICT r05 item 2).
+    *  - positions-free index: the rescan fallback ([[rescanTopK]]) — the
+    *    complete AND candidates join docs and the re-analyzed token
+    *    stream is verified.
     *
     * `scopes` (conv-id prefixes, r6): per-scope statistics and segments
     * exactly like [[queryScoped]] — per scope, df/N/avgdl are scoped, the
@@ -852,14 +1089,9 @@ object SearchEngine {
     val m = pinned.getOrElse(pinnedManifest(root))
     val seq = Analyzer.tokensFor(m.analyzerVersion, phraseText)
     if (seq.isEmpty) return Vector.empty
-    val slots = seq.distinct.sorted // fixed capture order for posBySlot
-    val slotOfTerm = slots.zipWithIndex.toMap
-    val seqSlots = seq.map(slotOfTerm).toArray
     memoized(root,
       QueryKey(seq, "PHRASE", k, scopes, m.snapshotId, filter.cacheKey)) {
-      proximityTopK(spark, root, m, slots, k, scopes,
-        verify = toks => toks.containsSlice(seq),
-        posPred = pos => phraseMatchPositions(pos, seqSlots), filter)
+      proximityTopK(spark, root, m, proximity(seq, None), k, scopes, filter)
     }
   }
 
@@ -903,91 +1135,55 @@ object SearchEngine {
                filter: QueryFilter = QueryFilter.Empty): Vector[SearchHit] = {
     require(slop >= 0, s"slop must be >= 0, got $slop")
     val m = pinned.getOrElse(pinnedManifest(root))
-    if (ordered) {
-      val seq = Analyzer.tokensFor(m.analyzerVersion, queryText)
-      if (seq.isEmpty) return Vector.empty
-      val slots = seq.distinct.sorted
-      val slotOfTerm = slots.zipWithIndex.toMap
-      val seqSlots = seq.map(slotOfTerm).toArray
-      memoized(root,
-        QueryKey(seq, s"ONEAR:$slop", k, scopes, m.snapshotId, filter.cacheKey)) {
-        proximityTopK(spark, root, m, slots, k, scopes,
-          // slotOfTerm hoisted OUT of the per-doc verify closure (r6
-          // review): the rescan path runs this per candidate row
-          verify = toks =>
-            orderedNearMatchPositions(occurrencesBySlot(toks, slotOfTerm), seqSlots, slop),
-          posPred = pos => orderedNearMatchPositions(pos, seqSlots, slop),
-          filter)
-      }
-    } else {
-      val terms = Analyzer.analyzeQueryFor(m.analyzerVersion, queryText)
-      if (terms.isEmpty) return Vector.empty
-      val slots = terms.distinct.sorted
-      val idx = terms.zipWithIndex.toMap
-      val n = terms.size
-      memoized(root,
-        QueryKey(terms, s"NEAR:$slop", k, scopes, m.snapshotId, filter.cacheKey)) {
-        proximityTopK(spark, root, m, slots, k, scopes,
-          verify = toks => nearMatch(toks, idx, n, slop),
-          posPred = pos => nearMatchPositions(pos, slop), filter)
-      }
+    val seq = Analyzer.tokensFor(m.analyzerVersion, queryText)
+    if (seq.isEmpty) return Vector.empty
+    // ordered NEAR keeps the query SEQUENCE; unordered is over the
+    // distinct term set (memo keys as the respective analyses)
+    val key =
+      if (ordered) QueryKey(seq, s"ONEAR:$slop", k, scopes, m.snapshotId, filter.cacheKey)
+      else QueryKey(seq.distinct, s"NEAR:$slop", k, scopes, m.snapshotId, filter.cacheKey)
+    memoized(root, key) {
+      proximityTopK(spark, root, m, proximity(seq, Some(slop), ordered), k,
+        scopes, filter)
     }
   }
 
-  /** Shared phrase/NEAR dispatcher: plan with PER-SCOPE (or corpus)
-    * statistics, no stop cap, missing-term ⇒ empty; then the positional
-    * in-walk verify on a positions-carrying index, the docs-join rescan
-    * otherwise. `slots` fixes the posBySlot capture order (sorted
-    * distinct terms). */
+  /** The proximity clause of an analyzed token sequence: the exact phrase
+    * (`slop` None), the order-free slop window, or (`ordered`) the
+    * in-order subsequence window. Slots are the sorted distinct terms. */
+  private def proximity(seq: Vector[String], slop: Option[Int],
+                        ordered: Boolean = false): Proximity = {
+    val slots = seq.distinct.sorted
+    val slotOf = slots.zipWithIndex.toMap
+    val seqSlots = seq.map(slotOf).toArray
+    slop match {
+      case None =>
+        Proximity(slots, pos => phraseMatchPositions(pos, seqSlots),
+          toks => toks.containsSlice(seq))
+      case Some(n) if ordered =>
+        Proximity(slots, pos => orderedNearMatchPositions(pos, seqSlots, n),
+          toks => orderedNearMatchPositions(occurrencesBySlot(toks, slotOf), seqSlots, n))
+      case Some(n) =>
+        Proximity(slots, pos => nearMatchPositions(pos, n),
+          toks => nearMatch(toks, slotOf, slots.size, n))
+    }
+  }
+
+  /** Shared phrase/NEAR planner: per view (corpus or per scope) no stop
+    * cap and ANY proximity term absent ⇒ empty, then [[execute]] with the
+    * proximity clause. FILTER clauses (r7) compose: field cursors join
+    * the walk as weightless members and the ts segments intersect the
+    * walk ranges; scores and (scoped) statistics stay unfiltered. */
   private def proximityTopK(spark: SparkSession, root: String, m: Manifest,
-                            slots: Vector[String], k: Int,
-                            scopes: Seq[String],
-                            verify: Vector[String] => Boolean,
-                            posPred: Array[Array[Int]] => Boolean,
-                            filter: QueryFilter = QueryFilter.Empty): Vector[SearchHit] = {
-    // FILTER clauses (r7) compose with phrase/NEAR: on the positional
-    // path, field cursors probe presence inside the shard-local walk
-    // (before the ordinal decode — the cheaper reject first) and the ts
-    // segments intersect the walk ranges; on the rescan path, role/tool/
-    // ts evaluate as column predicates on the docs join the verify
-    // already does. Scores and (scoped) statistics stay unfiltered.
+                            prox: Proximity, k: Int, scopes: Seq[String],
+                            filter: QueryFilter): Vector[SearchHit] = {
     val (fterms, tsRanges) = resolveFilter(spark, root, m, filter)
-    if (scopes.isEmpty) {
-      val stats = CorpusStats(m.nDocs, m.avgdl, m.analyzerVersion)
-      val p = plan(spark, root, QuerySpec(slots, "AND", k), stats,
-        applyStopCap = false, pinned = Some(m))
-      if (p.terms.size < slots.size) Vector.empty
-      else if (m.positions)
-        positionalVerifyTopK(spark, root, m, p, stats, k, slots, posPred,
-          combineRanges(None, tsRanges), fterms)
-      else candidateVerifyTopK(spark, root, m, p, stats, k, verify,
-        combineRanges(None, tsRanges), filter)
-    } else {
-      val all = scopes.flatMap { pre =>
-        val segs = scopeSegments(spark, root, m, pre)
-        if (segs.isEmpty) Vector.empty
-        else {
-          val n = segs.map(_.n).sum
-          val stats = CorpusStats(n, segs.map(_.sumDl).sum.toDouble / n,
-            m.analyzerVersion)
-          val ranges = segs.map(s => (s.lo, s.hi))
-          val dfs = scopedTermDf(spark, root, m, pre, slots, ranges)
-          // proximity semantics: ANY term absent from the scope ⇒ empty
-          if (slots.exists(t => dfs.getOrElse(t, 0L) <= 0L)) Vector.empty
-          else {
-            val kept = slots.map(t => TermStats(t, dfs(t), 0))
-              .sortBy(t => (t.df, t.term))
-            val p = Plan(kept, Vector.empty, "AND", k)
-            if (m.positions)
-              positionalVerifyTopK(spark, root, m, p, stats, k, slots,
-                posPred, combineRanges(Some(ranges), tsRanges), fterms)
-            else candidateVerifyTopK(spark, root, m, p, stats, k, verify,
-              combineRanges(Some(ranges), tsRanges), filter)
-          }
-        }
-      }
-      // union; overlapping scopes keep the best-scoring instance per doc
-      unionBest(all, k)
+    overViews(spark, root, m, scopes, k, prox.slots) { v =>
+      val ts = kept(v, prox.slots, capped = false)
+      if (ts.size < prox.slots.size) Vector.empty
+      else execute(spark, root, m,
+        Clauses(ts, filters = fterms, proximity = Some(prox)), v.stats, k,
+        combineRanges(v.ranges, tsRanges))
     }
   }
 
@@ -1183,11 +1379,8 @@ object SearchEngine {
     if (pre.isEmpty) return Vector.empty
     memoized(root,
       QueryKey(Vector(pre), "PREFIX", k, scopes, m.snapshotId, filter.cacheKey)) {
-      val found = termStatsFor(spark, root, m)
-        .filter($"term".startsWith(pre))
-        .select($"term", $"df", $"maxTf")
-        .collect().toVector
-        .map(r => TermStats(r.getString(0), r.getLong(1), r.getInt(2)))
+      val found = termStatsRows(termStatsFor(spark, root, m)
+        .filter($"term".startsWith(pre)))
       if (found.size > MaxPrefixExpansions)
         throw new IllegalArgumentException(
           s"prefix '$pre*' expands to ${found.size} dictionary terms " +
@@ -1252,11 +1445,7 @@ object SearchEngine {
       val cut =
         if (prefixLength > 0) banded.filter($"term".startsWith(q.take(prefixLength)))
         else banded
-      val found = cut
-        .filter(levenshtein($"term", lit(q)) <= maxEdits)
-        .select($"term", $"df", $"maxTf")
-        .collect().toVector
-        .map(r => TermStats(r.getString(0), r.getLong(1), r.getInt(2)))
+      val found = termStatsRows(cut.filter(levenshtein($"term", lit(q)) <= maxEdits))
       if (found.size > MaxPrefixExpansions)
         throw new IllegalArgumentException(
           s"fuzzy '$q'~$maxEdits expands to ${found.size} dictionary terms " +
@@ -1296,10 +1485,7 @@ object SearchEngine {
       val cut =
         if (litPrefix.nonEmpty) base.filter($"term".startsWith(litPrefix))
         else base
-      val found = cut.filter($"term".like(like))
-        .select($"term", $"df", $"maxTf")
-        .collect().toVector
-        .map(r => TermStats(r.getString(0), r.getLong(1), r.getInt(2)))
+      val found = termStatsRows(cut.filter($"term".like(like)))
       if (found.size > MaxPrefixExpansions)
         throw new IllegalArgumentException(
           s"wildcard '$pat' expands to ${found.size} dictionary terms " +
@@ -1334,10 +1520,10 @@ object SearchEngine {
     * Execution: the positive intersection must be enumerated COMPLETELY
     * before exclusion — a WAND k-cut on positives could keep only
     * excluded docs and drop includable hits (the phrase/NEAR lesson) —
-    * so the lazy [[Wand.andAll]] stream drives a per-shard heap, with a
-    * forward [[Wand.TermCursor.advanceTo]] probe per negative term per
-    * candidate (candidates ascend, so the probes are one monotone merge
-    * per negative list, never a restart). A NOT query costs its AND query
+    * so this is [[queryBool]] with no SHOULD clause: the probed AND walk
+    * of [[execute]], one forward probe per negative term per candidate
+    * (candidates ascend, so the probes are one monotone merge per
+    * negative list, never a restart). A NOT query costs its AND query
     * plus one posting merge per negative term; the heap-threshold
     * shortcut skips the probes for candidates that cannot enter the
     * top-k anyway (`>=` keeps threshold ties probed — exactness). */
@@ -1345,143 +1531,9 @@ object SearchEngine {
                notText: String, k: Int = 10, scopes: Seq[String] = Nil,
                pinned: Option[Manifest] = None,
                filter: QueryFilter = QueryFilter.Empty,
-               after: Option[SearchHit] = None): Vector[SearchHit] = {
-    require(after.isEmpty || scopes.isEmpty, ScopedAfterError)
-    val m = pinned.getOrElse(pinnedManifest(root))
-    val pos = Analyzer.analyzeQueryFor(m.analyzerVersion, queryText)
-    // exclusion is SET semantics: sorted-distinct negatives, so
-    // `--not "join join"` and `--not "join"` share one memo entry and
-    // one probe cursor (ADVICE r06)
-    val neg = Analyzer.analyzeQueryFor(m.analyzerVersion, notText).distinct.sorted
-    if (pos.isEmpty) return Vector.empty
-    if (neg.isEmpty)
-      return if (scopes.isEmpty)
-        queryResolved(spark, root, m, queryText, "AND", k, filter, after)
-      else memoized(root,
-        QueryKey(pos, "AND", k, scopes, m.snapshotId, filter.cacheKey)) {
-        queryScopedUncached(spark, root, m, pos, "AND", k, scopes, filter)
-      }
-    val negSet = neg.toSet
-    // memo key: positives, a space separator (no analyzed token can
-    // contain one), then negatives — unambiguous vs any plain-AND key
-    memoized(root,
-      QueryKey(pos ++ (" " +: neg), "ANDNOT", k, scopes, m.snapshotId,
-        filter.cacheKey, afterKey(after))) {
-      val (fterms, tsRanges) = resolveFilter(spark, root, m, filter)
-      // POST-PLAN overlap check, per branch: a prohibited term that
-      // SURVIVES positive planning makes every candidate excluded —
-      // answer empty without a scan. (Checked after planning, not on raw
-      // tokens: an overlap the planner DROPS — unknown or stop-capped —
-      // must behave as AND-minus-negative over the remaining positives,
-      // the oracle's filtered-AND semantics. And andNotTopK needs the
-      // sets disjoint: a term on both sides would be routed to the
-      // positive cursors and never probed.)
-      if (scopes.isEmpty) {
-        val stats = CorpusStats(m.nDocs, m.avgdl, m.analyzerVersion)
-        val p = plan(spark, root, QuerySpec(pos, "AND", k), stats,
-          pinned = Some(m))
-        if (p.terms.isEmpty || p.terms.exists(t => negSet(t.term)))
-          Vector.empty
-        else andNotTopK(spark, root, m, p, neg, stats, k,
-          combineRanges(None, tsRanges), fterms, after)
-      } else {
-        // positives mirror queryScopedUncached exactly (shared planner)
-        val all = scopes.flatMap { sc =>
-          scopedKeptPlan(spark, root, m, pos, sc, "AND", k) match {
-            case None => Vector.empty
-            case Some((p, _, _)) if p.terms.exists(t => negSet(t.term)) =>
-              Vector.empty
-            case Some((p, stats, ranges)) =>
-              andNotTopK(spark, root, m, p, neg, stats, k,
-                combineRanges(Some(ranges), tsRanges), fterms)
-          }
-        }
-        unionBest(all, k)
-      }
-    }
-  }
-
-  /** Shard-local executor for [[queryNot]]: complete positive AND via the
-    * lazy [[Wand.andAllWith]] walk, ascending-candidate exclusion probes
-    * against the negative cursors, per-shard heap, driver merge. */
-  private def andNotTopK(spark: SparkSession, root: String, m: Manifest,
-                         p: Plan, negTerms: Vector[String],
-                         stats: CorpusStats, k: Int,
-                         ranges: Option[Seq[(Long, Long)]],
-                         fterms: Vector[String] = Vector.empty,
-                         after: Option[SearchHit] = None): Vector[SearchHit] = {
-    import spark.implicits._
-    val posTerms = p.terms.map(_.term)
-    val posSet = posTerms.toSet
-    require(!negTerms.exists(posSet),
-      "andNotTopK requires disjoint positive/negative sets (caller " +
-      "resolves overlaps post-plan)")
-    val nPos = posTerms.size
-    val nFilters = fterms.size
-    // negatives and filters ride the same scan and cursor machinery;
-    // df/canonical for them are placeholders (negatives never scored,
-    // filters weightless by construction — buildCursors)
-    val dfByTerm = p.terms.map(t => t.term -> t.df).toMap ++
-      negTerms.map(_ -> 0L) ++ fterms.map(_ -> 0L)
-    val canonical = p.terms.sortBy(t => (t.df, t.term)).map(_.term)
-      .zipWithIndex.toMap ++
-      negTerms.zipWithIndex.map { case (t, i) => t -> (nPos + i) } ++
-      fterms.zipWithIndex.map { case (t, i) => t -> (nPos + negTerms.size + i) }
-    val nDocs = stats.nDocs
-    val avgdl = stats.avgdl
-    val (segs, shardPrune) = segsAndPrune(m, ranges)
-    if (segs.isEmpty) return Vector.empty
-    val allTerms = posTerms ++ negTerms ++ fterms
-    val (scanFrame, _, needShuffle) = resolvedPostingsScan(spark, root, m)
-    val selected0 = shardPrune(scanFrame).filter($"term".isin(allTerms: _*))
-    val selected = if (needShuffle) selected0.repartition($"shard") else selected0
-    val perShard = selected
-      .select(postingScanColumns(withPos = false): _*)
-      .mapPartitions { rows =>
-        val byTerm = decodeByTerm(rows, withPos = false)
-        byTerm.groupBy(_._1._1).iterator.flatMap { case (_, termChunks) =>
-          val (fieldChunks, restChunks) = termChunks.partition {
-            case ((_, t), _) => Analyzer.isFieldTerm(t)
-          }
-          val (posChunks, negChunks) = restChunks.partition {
-            case ((_, t), _) => posSet(t)
-          }
-          val posCursors = buildCursors(posChunks, dfByTerm, canonical,
-            nDocs, avgdl)
-          val filterCursors = buildCursors(fieldChunks, dfByTerm, canonical,
-            nDocs, avgdl)
-          // a positive absent from this shard ⇒ empty local intersection
-          // (same for a filter: no doc here carries the value); a negative
-          // absent from this shard just excludes nothing here
-          if (posCursors.size < nPos || filterCursors.size < nFilters)
-            Iterator.empty
-          else {
-            val negArr = buildCursors(negChunks, dfByTerm, canonical,
-              nDocs, avgdl).toArray
-            val heap = new Wand.TopK(k, after)
-            // filters join the positive intersection as weightless
-            // members (a rare filter list then drives the walk)
-            val walk = Wand.andAllWith(posCursors ++ filterCursors, segs) { (d, s, _) =>
-              if (s >= heap.threshold) {
-                var excluded = false
-                var i = 0
-                while (i < negArr.length && !excluded) {
-                  negArr(i).advanceTo(d)
-                  if (!negArr(i).exhausted && negArr(i).docId == d)
-                    excluded = true
-                  i += 1
-                }
-                if (!excluded) heap.offer(d, s)
-              }
-            }
-            while (walk.hasNext) walk.next() // drain (lazy iterator)
-            heap.results.iterator
-          }
-        }
-      }
-      .collect()
-    perShard.toVector.sortBy(h => (-h.score, h.docId)).take(k)
-  }
+               after: Option[SearchHit] = None): Vector[SearchHit] =
+    queryBool(spark, root, queryText, "", notText, 0, k, scopes, pinned,
+      filter, after)
 
   /** Boolean SHOULD / minimum_should_match top-k (Lucene BooleanQuery
     * with ONLY optional clauses + setMinimumNumberShouldMatch, r7 —
@@ -1504,15 +1556,17 @@ object SearchEngine {
     * a clause is unsatisfiable. minMatch > n is unsatisfiable → empty;
     * minMatch < 1 is an error.
     *
-    * Execution: [[Wand.shouldTopKSegments]] inside the shard-local
-    * posting walk — candidates are enumerated from the
-    * (n − minMatch + 1) RAREST surviving lists (pigeonhole: a doc in
-    * ≥ minMatch of n lists appears in at least one of them), while the
-    * hottest minMatch − 1 lists are only PROBED with monotone advanceTo.
-    * A 2-of-5 query never walks its two hottest postings — at 100 TB the
-    * walk cost is bounded by the rare lists, exactly the WAND shape plain
-    * OR gets from its block-max bounds. Per-shard top-k heaps, O(shards
-    * × k) to the driver; zero per-query shuffle on the aligned scan path.
+    * Execution: [[queryBool]] with SHOULD clauses only, so
+    * [[Wand.shouldTopKSegments]] inside the shard-local posting walk
+    * (minMatch = 1 takes the rank-identical OR walk) — candidates are
+    * enumerated from the (n − minMatch + 1) RAREST surviving lists
+    * (pigeonhole: a doc in ≥ minMatch of n lists appears in at least one
+    * of them), while the hottest minMatch − 1 lists are only PROBED with
+    * monotone advanceTo. A 2-of-5 query never walks its two hottest
+    * postings — at 100 TB the walk cost is bounded by the rare lists,
+    * exactly the WAND shape plain OR gets from its block-max bounds.
+    * Per-shard top-k heaps, O(shards × k) to the driver; zero per-query
+    * shuffle on the aligned scan path.
     *
     * `scopes`: per-scope statistics/segments exactly like [[queryScoped]]
     * (per-scope df/N/avgdl and stop cap, best-instance union). Time
@@ -1523,36 +1577,8 @@ object SearchEngine {
                   filter: QueryFilter = QueryFilter.Empty,
                   after: Option[SearchHit] = None): Vector[SearchHit] = {
     require(minMatch >= 1, s"minMatch must be >= 1, got $minMatch")
-    require(after.isEmpty || scopes.isEmpty, ScopedAfterError)
-    val m = pinned.getOrElse(pinnedManifest(root))
-    val terms = Analyzer.analyzeQueryFor(m.analyzerVersion, queryText).distinct
-    if (terms.isEmpty || minMatch > terms.size) return Vector.empty
-    val mode = s"SHOULD:$minMatch"
-    // matched-count semantics are order-free: sort the memo key so
-    // permuted queries share one entry
-    memoized(root,
-      QueryKey(terms.sorted, mode, k, scopes, m.snapshotId, filter.cacheKey,
-        afterKey(after))) {
-      val (fterms, tsRanges) = resolveFilter(spark, root, m, filter)
-      if (scopes.isEmpty) {
-        val stats = CorpusStats(m.nDocs, m.avgdl, m.analyzerVersion)
-        val p = plan(spark, root, QuerySpec(terms, "OR", k), stats,
-          pinned = Some(m))
-        if (p.terms.size < minMatch) Vector.empty
-        else executePlan(spark, root, p.copy(mode = mode), stats,
-          combineRanges(None, tsRanges), Some(m), fterms, after)
-      } else {
-        val all = scopes.flatMap { sc =>
-          scopedKeptPlan(spark, root, m, terms, sc, mode, k) match {
-            case Some((p, stats, ranges)) if p.terms.size >= minMatch =>
-              executePlan(spark, root, p, stats,
-                combineRanges(Some(ranges), tsRanges), Some(m), fterms)
-            case _ => Vector.empty
-          }
-        }
-        unionBest(all, k)
-      }
-    }
+    queryBool(spark, root, "", queryText, "", minMatch, k, scopes, pinned,
+      filter, after)
   }
 
   /** The COMBINED Lucene BooleanQuery (r7): MUST + SHOULD + MUST_NOT +
@@ -1590,20 +1616,21 @@ object SearchEngine {
     * brute-force oracle. A hit's score never depends on what was
     * filtered or prohibited.
     *
-    * Execution (must present): the [[andNotTopK]] lazy-AND shape with
-    * per-candidate monotone SHOULD probes — candidates enumerate from
-    * the MUST intersection (+ weightless FILTER cursors), negatives
-    * exclude, present SHOULD cursors add score and count toward
-    * minShouldMatch; admission pre-check `mustScore + Σ(per-shard SHOULD
-    * upper bounds) ≥ heap threshold` (inflated by 1e-12 relative — far
+    * Execution: one [[Clauses]] value through [[execute]]. Must present:
+    * the probed AND walk — candidates enumerate from the MUST
+    * intersection (+ weightless FILTER cursors), negatives exclude,
+    * present SHOULD cursors add score and count toward minShouldMatch;
+    * the admission pre-check `mustScore + Σ(per-shard SHOULD upper
+    * bounds) ≥ heap threshold` (inflated by [[BoolBoundSlack]] — far
     * above the ≤ n·ulp float-association slack between the bound's sum
     * order and the canonical fold, far below any real score gap — so
     * the BMW shortcut can never drop an exact-top-k hit) skips the probe
-    * work for inadmissible candidates. No must: the count-qualified
-    * [[Wand.shouldTopKSegments]] walk with prohibited + filter probes.
-    * Per-shard heaps, O(shards × k) to the driver, zero per-query
-    * shuffle on the aligned scan path — a combined query costs its AND
-    * walk plus one forward merge per SHOULD/NOT list.
+    * work for inadmissible candidates. Only MUST (+ FILTER): the plain
+    * AND walk. No must: the OR walk (minShouldMatch ≤ 1) or the
+    * count-qualified [[Wand.shouldTopKSegments]] walk, with prohibited +
+    * filter probes. Per-shard heaps, O(shards × k) to the driver, zero
+    * per-query shuffle on the aligned scan path — a combined query costs
+    * its AND walk plus one forward merge per SHOULD/NOT list.
     *
     * `scopes`: per-scope stats/segments exactly like [[queryScoped]]
     * (MUST and SHOULD survivors re-planned per scope with scoped dfs,
@@ -1634,15 +1661,6 @@ object SearchEngine {
     val autoSatisfied = shouldRaw.count(mustSet)
     val shouldKept = shouldRaw.filterNot(t => mustSet(t) || negSet(t))
     val minEff = math.max(0, minShouldMatch - autoSatisfied)
-    // ---- degenerate delegation: each law IS the dedicated mode ----
-    // degenerate delegation only when UNBOOSTED (the dedicated modes
-    // have no boost parameter; the main path handles every shape)
-    if (boostOf.isEmpty && must.isEmpty && negs.isEmpty)
-      return queryShould(spark, root, shouldText,
-        math.max(1, minShouldMatch), k, scopes, Some(m), filter, after)
-    if (boostOf.isEmpty && shouldKept.isEmpty && minEff == 0 && must.nonEmpty)
-      return queryNot(spark, root, mustText, notText, k, scopes, Some(m),
-        filter, after)
     if (must.isEmpty && shouldKept.isEmpty) return Vector.empty
     if (minEff > shouldKept.size && must.nonEmpty) return Vector.empty
     if (must.isEmpty && math.max(1, minEff) > shouldKept.size)
@@ -1655,173 +1673,25 @@ object SearchEngine {
         s"BOOL:$minEff" + boostKey(boostOf), k, scopes, m.snapshotId,
         filter.cacheKey, afterKey(after))) {
       val (fterms, tsRanges) = resolveFilter(spark, root, m, filter)
-      if (scopes.isEmpty) {
-        val stats = CorpusStats(m.nDocs, m.avgdl, m.analyzerVersion)
-        val pMust = plan(spark, root, QuerySpec(must, "AND", k), stats,
-          pinned = Some(m))
-        val pShould = plan(spark, root, QuerySpec(shouldKept, "OR", k),
-          stats, pinned = Some(m))
-        if (must.nonEmpty && pMust.terms.isEmpty) Vector.empty
-        else if (pMust.terms.exists(t => negSet(t.term))) Vector.empty
-        else if (pShould.terms.size < minEff) Vector.empty
-        else if (must.isEmpty && pShould.terms.size < math.max(1, minEff))
+      // both clause families see the per-view cap/drop rule of their
+      // dedicated modes; a scope computes their dfs in ONE pass
+      overViews(spark, root, m, scopes, k, must ++ shouldKept) { v =>
+        val mustKept = kept(v, must, capped = true)
+        val shouldSurv = kept(v, shouldKept, capped = true)
+        // POST-PLAN overlap check: a prohibited term that SURVIVES MUST
+        // planning excludes every candidate — empty without a scan. An
+        // overlap the planner DROPS (unknown or stop-capped) behaves as
+        // AND-minus-negative over the remaining MUST terms, the oracle's
+        // filtered-AND semantics (checking raw tokens diverged, r6 review)
+        if (must.nonEmpty && mustKept.isEmpty) Vector.empty
+        else if (mustKept.exists(t => negSet(t.term))) Vector.empty
+        else if (shouldSurv.size < (if (must.isEmpty) math.max(1, minEff) else minEff))
           Vector.empty
-        else boolTopK(spark, root, m, pMust.terms, pShould.terms, negs,
-          minEff, stats, k, combineRanges(None, tsRanges), fterms, after,
-          boostOf)
-      } else {
-        val all = scopes.flatMap { sc =>
-          scopedKeptPlan(spark, root, m, must ++ shouldKept, sc, "BOOL", k) match {
-            case None => Vector.empty
-            case Some((pAll, stats, ranges)) =>
-              // ONE scoped df pass over must ∪ should, then split: both
-              // clause families see the same per-scope cap/drop rules as
-              // their dedicated modes (scopedKeptPlan IS that rule)
-              val mustKept = pAll.terms.filter(t => mustSet(t.term))
-              val shouldKeptScoped = pAll.terms.filterNot(t => mustSet(t.term))
-              if (must.nonEmpty && mustKept.size == 0) Vector.empty
-              else if (mustKept.exists(t => negSet(t.term))) Vector.empty
-              else if (shouldKeptScoped.size < minEff) Vector.empty
-              else if (must.isEmpty &&
-                  shouldKeptScoped.size < math.max(1, minEff)) Vector.empty
-              else boolTopK(spark, root, m, mustKept, shouldKeptScoped,
-                negs, minEff, stats, k,
-                combineRanges(Some(ranges), tsRanges), fterms,
-                boostOf = boostOf)
-          }
-        }
-        unionBest(all, k)
+        else execute(spark, root, m,
+          Clauses(mustKept, shouldSurv, minEff, negs, fterms, boostOf),
+          v.stats, k, combineRanges(v.ranges, tsRanges), after)
       }
     }
-  }
-
-  /** Relative inflation on the combined-query admission bound (see
-    * [[queryBool]] scaladoc): covers float-association slack between
-    * `mustScore + shouldUbSum` and the canonical-order total, orders of
-    * magnitude below any real adjacent-score gap. Over-admission only
-    * costs probes; under-admission would break exactness. */
-  private val BoolBoundSlack = 1.0 + 1e-12
-
-  /** Shard-local combined-BooleanQuery executor (see [[queryBool]]).
-    * `mustTerms`/`shouldTerms` are the PLANNED survivors; one canonical
-    * (df asc, term asc) order spans their union. */
-  private def boolTopK(spark: SparkSession, root: String, m: Manifest,
-                       mustTerms: Vector[TermStats],
-                       shouldTerms: Vector[TermStats],
-                       negTerms: Vector[String], minEff: Int,
-                       stats: CorpusStats, k: Int,
-                       ranges: Option[Seq[(Long, Long)]],
-                       fterms: Vector[String] = Vector.empty,
-                       after: Option[SearchHit] = None,
-                       boostOf: Map[String, Double] = Map.empty): Vector[SearchHit] = {
-    import spark.implicits._
-    val mustList = mustTerms.map(_.term)
-    val shouldList = shouldTerms.map(_.term)
-    val mustSet = mustList.toSet
-    val shouldSet = shouldList.toSet
-    val nMust = mustList.size
-    val nFilters = fterms.size
-    val scored = (mustTerms ++ shouldTerms).sortBy(t => (t.df, t.term))
-    val dfByTerm = scored.map(t => t.term -> t.df).toMap ++
-      negTerms.map(_ -> 0L) ++ fterms.map(_ -> 0L)
-    val canonical = scored.map(_.term).zipWithIndex.toMap ++
-      negTerms.zipWithIndex.map { case (t, i) => t -> (scored.size + i) } ++
-      fterms.zipWithIndex.map { case (t, i) =>
-        t -> (scored.size + negTerms.size + i) }
-    val nCanon = scored.size + negTerms.size + nFilters
-    val nDocs = stats.nDocs
-    val avgdl = stats.avgdl
-    // no-must branch needs Lucene's at-least-one rule
-    val minMatch = if (nMust == 0) math.max(1, minEff) else minEff
-    val (segs, shardPrune) = segsAndPrune(m, ranges)
-    if (segs.isEmpty) return Vector.empty
-    val allTerms = mustList ++ shouldList ++ negTerms ++ fterms
-    val (scanFrame, _, needShuffle) = resolvedPostingsScan(spark, root, m)
-    val selected0 = shardPrune(scanFrame).filter($"term".isin(allTerms: _*))
-    val selected = if (needShuffle) selected0.repartition($"shard") else selected0
-    val perShard = selected
-      .select(postingScanColumns(withPos = false): _*)
-      .mapPartitions { rows =>
-        val byTerm = decodeByTerm(rows, withPos = false)
-        byTerm.groupBy(_._1._1).iterator.flatMap { case (_, termChunks) =>
-          val (fieldChunks, restChunks) = termChunks.partition {
-            case ((_, t), _) => Analyzer.isFieldTerm(t)
-          }
-          val (mustChunks, rest2) = restChunks.partition {
-            case ((_, t), _) => mustSet(t)
-          }
-          val (shouldChunks, negChunks) = rest2.partition {
-            case ((_, t), _) => shouldSet(t)
-          }
-          val mustCursors = buildCursors(mustChunks, dfByTerm, canonical,
-            nDocs, avgdl, boostOf)
-          val filterCursors = buildCursors(fieldChunks, dfByTerm, canonical,
-            nDocs, avgdl)
-          val shouldArr = buildCursors(shouldChunks, dfByTerm, canonical,
-            nDocs, avgdl, boostOf).toArray
-          // a must/filter term absent from this shard ⇒ no candidate here;
-          // fewer than minMatch SHOULD lists present ⇒ no doc here can
-          // reach the count (a doc's postings are complete in its shard)
-          if (mustCursors.size < nMust || filterCursors.size < nFilters ||
-              shouldArr.length < minMatch)
-            Iterator.empty
-          else {
-            val negArr = buildCursors(negChunks, dfByTerm, canonical,
-              nDocs, avgdl).toArray
-            val heap = new Wand.TopK(k, after)
-            if (nMust == 0) {
-              // pure SHOULD (+ NOT/FILTER): minMatch == 1 is rank-identical
-              // to OR (spec-pinned law) and dispatches to the WAND/BMW-
-              // pruned walk; minMatch > 1 takes the count-qualified walk
-              // (itself bound-pruned since r8 — VERDICT r7 item 1)
-              if (minMatch == 1)
-                Wand.orTopKSegments(shouldArr.toIndexedSeq, k, segs,
-                  required = filterCursors, after = after,
-                  prohibited = negArr.toIndexedSeq)
-                  .iterator
-              else
-                Wand.shouldTopKSegments(shouldArr.toIndexedSeq, minMatch, k,
-                  segs, required = filterCursors,
-                  prohibited = negArr.toIndexedSeq, after = after)
-                  .iterator
-            } else {
-              // per-shard constant: Σ upper bounds of the PRESENT should
-              // lists — the admission bound's optional-score headroom
-              var shouldUbSum = 0.0
-              shouldArr.foreach(c => shouldUbSum += c.upperBound)
-              val contribs = new Array[Double](nCanon)
-              val walk = Wand.andAllWith(mustCursors ++ filterCursors, segs) {
-                (d, s, arr) =>
-                if ((s + shouldUbSum) * BoolBoundSlack >= heap.threshold &&
-                    !Wand.presentInAny(negArr, d)) {
-                  java.util.Arrays.fill(contribs, 0.0)
-                  var i = 0
-                  while (i < arr.length) { // must + weightless filters
-                    contribs(arr(i).canonical) = arr(i).score
-                    i += 1
-                  }
-                  var matched = 0
-                  i = 0
-                  while (i < shouldArr.length) {
-                    shouldArr(i).advanceTo(d)
-                    if (!shouldArr(i).exhausted && shouldArr(i).docId == d) {
-                      contribs(shouldArr(i).canonical) = shouldArr(i).score
-                      matched += 1
-                    }
-                    i += 1
-                  }
-                  if (matched >= minMatch)
-                    heap.offer(d, Wand.canonicalSum(contribs))
-                }
-              }
-              while (walk.hasNext) walk.next() // drain (lazy iterator)
-              heap.results.iterator
-            }
-          }
-        }
-      }
-      .collect()
-    perShard.toVector.sortBy(h => (-h.score, h.docId)).take(k)
   }
 
   /** Phrase-as-clause (r7): the combined BooleanQuery with a PHRASE (or
@@ -1854,16 +1724,17 @@ object SearchEngine {
     * canonical (df, term) order — a composed hit whose SHOULD terms are
     * all absent scores exactly like its plain-phrase hit.
     *
-    * Execution: positional index — ONE shard-local walk over the
+    * Execution: one [[Clauses]] value with a proximity part through
+    * [[execute]]. Positional index — ONE shard-local walk over the
     * required cursors (phrase + must + weightless filters), per
     * candidate: admission bound (mustScore + Σ SHOULD UBs, the
     * [[BoolBoundSlack]] inflation), MUST_NOT probes, the ordinal
     * predicate on the phrase slots, SHOULD probes, canonical-fold offer.
-    * Positions-free index — rescan fallback: the required-AND candidate
-    * frame joins docs once and EVERYTHING (phrase window, negatives,
-    * SHOULD count, the full canonical fold) evaluates from the analyzed
-    * token stream in-task; bit-equal to the positional path because tf,
-    * dl and df are the same numbers by construction. */
+    * Positions-free index — the rescan: the required-AND candidates
+    * (negatives probed) join docs once and the phrase window, SHOULD
+    * count and the full canonical fold evaluate from the analyzed token
+    * stream in-task; bit-equal to the positional path because tf, dl and
+    * df are the same numbers by construction. */
   def queryBoolPhrase(spark: SparkSession, root: String, phraseText: String,
                       slop: Option[Int] = None, mustText: String = "",
                       shouldText: String = "", notText: String = "",
@@ -1893,256 +1764,38 @@ object SearchEngine {
     val shouldKept = shouldRaw.filterNot(t => requiredSet(t) || negSet(t))
     val minEff = math.max(0, minShouldMatch - autoSatisfied)
     if (minEff > shouldKept.size) return Vector.empty
-    if (boostOf.isEmpty && mustExtra.isEmpty && shouldKept.isEmpty &&
-        negs.isEmpty && minEff == 0)
-      return slop match { // pure phrase/NEAR (+filters): the dedicated mode
-        case None => phraseTopK(spark, root, phraseText, k, Nil, Some(m), filter)
-        case Some(n) => nearTopK(spark, root, phraseText, n, k, Nil, Some(m),
-          filter = filter)
-      }
-    val slotOfTerm = slots.zipWithIndex.toMap
-    val seqSlots = seq.map(slotOfTerm).toArray
-    val (posPred, verify): (Array[Array[Int]] => Boolean, Vector[String] => Boolean) =
-      slop match {
-        case None =>
-          (pos => phraseMatchPositions(pos, seqSlots),
-            toks => toks.containsSlice(seq))
-        case Some(n) =>
-          // NEAR is over DISTINCT terms (window holds every distinct
-          // term) — idx/nTerms must be the deduped view, like nearTopK
-          val dterms = seq.distinct
-          val idx = dterms.zipWithIndex.toMap
-          (pos => nearMatchPositions(pos, n),
-            toks => nearMatch(toks, idx, dterms.size, n))
-      }
     memoized(root,
       QueryKey(seq ++ (" " +: mustExtra) ++ (" " +: negs) ++ (" " +: shouldKept),
         s"BOOLPHRASE:${slop.getOrElse(-1)}:$minEff" + boostKey(boostOf),
         k, Nil, m.snapshotId, filter.cacheKey)) {
       val (fterms, tsRanges) = resolveFilter(spark, root, m, filter)
-      val stats = CorpusStats(m.nDocs, m.avgdl, m.analyzerVersion)
+      val v = corpusView(spark, root, m)
       // phrase slots: no cap, unknown ⇒ EMPTY (the phrase contract) —
       // must: AND drop-unknown + cap (drop-and-continue: the phrase
       // still drives, reference parity) — should: OR cap, survivors
       // bound the count requirement
-      val pSlots = plan(spark, root, QuerySpec(slots, "AND", k), stats,
-        applyStopCap = false, pinned = Some(m))
-      val pMust = plan(spark, root, QuerySpec(mustExtra, "AND", k), stats,
-        pinned = Some(m))
-      val pShould = plan(spark, root, QuerySpec(shouldKept, "OR", k), stats,
-        pinned = Some(m))
-      if (pSlots.terms.size < slots.size) Vector.empty
-      else if (pMust.terms.exists(t => negSet(t.term))) Vector.empty
-      else if (pShould.terms.size < minEff) Vector.empty
-      else {
-        val required = pSlots.terms ++ pMust.terms
-        val ranges = combineRanges(None, tsRanges)
-        if (m.positions)
-          boolPhrasePositional(spark, root, m, required, pShould.terms,
-            negs, minEff, stats, k, slots, posPred, ranges, fterms, boostOf)
-        else
-          boolPhraseRescan(spark, root, m, required, pShould.terms, negs,
-            minEff, stats, k, verify, ranges, filter, boostOf)
-      }
-    }
-  }
-
-  /** Positional executor for [[queryBoolPhrase]]: the [[boolTopK]] walk
-    * with the phrase-slot ordinal predicate gating admission. */
-  private def boolPhrasePositional(spark: SparkSession, root: String,
-                                   m: Manifest,
-                                   requiredTerms: Vector[TermStats],
-                                   shouldTerms: Vector[TermStats],
-                                   negTerms: Vector[String], minEff: Int,
-                                   stats: CorpusStats, k: Int,
-                                   slots: Vector[String],
-                                   posPred: Array[Array[Int]] => Boolean,
-                                   ranges: Option[Seq[(Long, Long)]],
-                                   fterms: Vector[String],
-                                   boostOf: Map[String, Double] = Map.empty): Vector[SearchHit] = {
-    import spark.implicits._
-    require(m.positions, "positional composed query needs positions")
-    val reqList = requiredTerms.map(_.term)
-    val reqSet = reqList.toSet
-    val shouldList = shouldTerms.map(_.term)
-    val shouldSet = shouldList.toSet
-    val nReq = reqList.size
-    val nFilters = fterms.size
-    val scored = (requiredTerms ++ shouldTerms).sortBy(t => (t.df, t.term))
-    val dfByTerm = scored.map(t => t.term -> t.df).toMap ++
-      negTerms.map(_ -> 0L) ++ fterms.map(_ -> 0L)
-    val canonical = scored.map(_.term).zipWithIndex.toMap ++
-      negTerms.zipWithIndex.map { case (t, i) => t -> (scored.size + i) } ++
-      fterms.zipWithIndex.map { case (t, i) =>
-        t -> (scored.size + negTerms.size + i) }
-    val nCanon = scored.size + negTerms.size + nFilters
-    val slotOf = slots.zipWithIndex.toMap
-    val nSlots = slots.size
-    val nDocs = stats.nDocs
-    val avgdl = stats.avgdl
-    val (segs, shardPrune) = segsAndPrune(m, ranges)
-    if (segs.isEmpty) return Vector.empty
-    val allTerms = reqList ++ shouldList ++ negTerms ++ fterms
-    val (scanFrame, _, needShuffle) =
-      resolvedPostingsScan(spark, root, m, needPositions = true)
-    val selected0 = shardPrune(scanFrame).filter($"term".isin(allTerms: _*))
-    val selected = if (needShuffle) selected0.repartition($"shard") else selected0
-    val perShard = selected
-      .select(postingScanColumns(withPos = true): _*)
-      .mapPartitions { rows =>
-        val byTerm = decodeByTerm(rows, withPos = true)
-        byTerm.groupBy(_._1._1).iterator.flatMap { case (_, termChunks) =>
-          val (fieldChunks, restChunks) = termChunks.partition {
-            case ((_, t), _) => Analyzer.isFieldTerm(t)
-          }
-          val (reqChunks, rest2) = restChunks.partition {
-            case ((_, t), _) => reqSet(t)
-          }
-          val (shouldChunks, negChunks) = rest2.partition {
-            case ((_, t), _) => shouldSet(t)
-          }
-          val reqCursors = buildCursors(reqChunks, dfByTerm, canonical,
-            nDocs, avgdl, boostOf)
-          val filterCursors = buildCursors(fieldChunks, dfByTerm, canonical,
-            nDocs, avgdl)
-          val shouldArr = buildCursors(shouldChunks, dfByTerm, canonical,
-            nDocs, avgdl, boostOf).toArray
-          if (reqCursors.size < nReq || filterCursors.size < nFilters ||
-              shouldArr.length < minEff)
-            Iterator.empty
-          else {
-            val negArr = buildCursors(negChunks, dfByTerm, canonical,
-              nDocs, avgdl).toArray
-            val heap = new Wand.TopK(k)
-            var shouldUbSum = 0.0
-            shouldArr.foreach(c => shouldUbSum += c.upperBound)
-            val contribs = new Array[Double](nCanon)
-            val posBySlot = new Array[Array[Int]](nSlots) // reused per match
-            val walk = Wand.andAllWith(reqCursors ++ filterCursors, segs) {
-              (d, s, arr) =>
-              // cheapest rejections first: admission bound, then the
-              // monotone NOT probes, then the ordinal decode + phrase
-              // predicate, then the SHOULD probes + canonical fold
-              if ((s + shouldUbSum) * BoolBoundSlack >= heap.threshold &&
-                  !Wand.presentInAny(negArr, d)) {
-                var i = 0
-                while (i < arr.length) {
-                  val so = slotOf.getOrElse(arr(i).term, -1)
-                  if (so >= 0) posBySlot(so) = arr(i).positions
-                  i += 1
-                }
-                if (posPred(posBySlot)) {
-                  java.util.Arrays.fill(contribs, 0.0)
-                  i = 0
-                  while (i < arr.length) { // required + weightless filters
-                    contribs(arr(i).canonical) = arr(i).score
-                    i += 1
-                  }
-                  var matched = 0
-                  i = 0
-                  while (i < shouldArr.length) {
-                    shouldArr(i).advanceTo(d)
-                    if (!shouldArr(i).exhausted && shouldArr(i).docId == d) {
-                      contribs(shouldArr(i).canonical) = shouldArr(i).score
-                      matched += 1
-                    }
-                    i += 1
-                  }
-                  if (matched >= minEff)
-                    heap.offer(d, Wand.canonicalSum(contribs))
-                }
-              }
-            }
-            while (walk.hasNext) walk.next() // drain (lazy iterator)
-            heap.results.iterator
-          }
-        }
-      }
-      .collect()
-    perShard.toVector.sortBy(h => (-h.score, h.docId)).take(k)
-  }
-
-  /** Rescan executor for [[queryBoolPhrase]] (positions-free indexes):
-    * required-AND candidates join docs ONCE; the phrase window, the
-    * negatives, the SHOULD count and the FULL canonical fold all
-    * evaluate from the analyzed token stream in-task — tf, dl and df
-    * are the same numbers the postings hold, so scores stay bit-equal
-    * to the positional path. */
-  private def boolPhraseRescan(spark: SparkSession, root: String,
-                               m: Manifest,
-                               requiredTerms: Vector[TermStats],
-                               shouldTerms: Vector[TermStats],
-                               negTerms: Vector[String], minEff: Int,
-                               stats: CorpusStats, k: Int,
-                               verify: Vector[String] => Boolean,
-                               ranges: Option[Seq[(Long, Long)]],
-                               filter: QueryFilter,
-                               boostOf: Map[String, Double] = Map.empty): Vector[SearchHit] = {
-    import spark.implicits._
-    val p = Plan(requiredTerms, Vector.empty, "AND", k)
-    val cand = phraseCandidates(spark, root, m, p, stats, ranges)
-      .localCheckpoint(true)
-    try {
-      val candCount = cand.count()
-      if (candCount == 0L) return Vector.empty
-      val candShards = cand.select($"shard").distinct().as[Int].collect().toSeq
-      val candFrame = cand.select($"docId")
-      val joinCand =
-        if (candCount <= PhraseBroadcastMax)
-          org.apache.spark.sql.functions.broadcast(candFrame)
-        else candFrame
-      val ver = m.analyzerVersion
-      val fieldPred = fieldPredOf(filter)
-      // closure payload: tiny (query-sized) arrays
-      val scoredTerms = (requiredTerms ++ shouldTerms)
-        .sortBy(t => (t.df, t.term)).toArray
-      val boostArr = scoredTerms.map(t => boostOf.getOrElse(t.term, 1.0))
-      val shouldSet = shouldTerms.map(_.term).toSet
-      val negSet = negTerms.toSet
-      val nDocs = stats.nDocs
-      val avgdl = stats.avgdl
-      val minM = minEff
-      IndexSnapshot.docsFor(spark, root, m, candShards)
-        .filter(fieldPred)
-        .select($"docId", $"text")
-        .join(joinCand, "docId")
-        .select($"docId", $"text").as[(Long, String)]
-        .mapPartitions(_.flatMap { case (d, txt) =>
-          val toks = Analyzer.tokensFor(ver, txt)
-          if (!verify(toks) || toks.exists(negSet)) None
-          else {
-            val dl = toks.length
-            var matched = 0
-            var s = 0.0
-            var i = 0
-            while (i < scoredTerms.length) { // canonical (df, term) order
-              val t = scoredTerms(i)
-              var tf = 0
-              toks.foreach(x => if (x == t.term) tf += 1)
-              if (tf > 0) {
-                if (shouldSet(t.term)) matched += 1
-                s += boostArr(i) * graft.query.Bm25.score(tf, t.df, dl, nDocs, avgdl)
-              }
-              i += 1
-            }
-            if (matched >= minM) Some(SearchHit(d, s)) else None
-          }
-        })
-        .orderBy($"score".desc, $"docId".asc).limit(k)
-        .collect().toVector
-    } finally {
-      cand.unpersist(); ()
+      val slotsKept = kept(v, slots, capped = false)
+      val mustKept = kept(v, mustExtra, capped = true)
+      val shouldSurv = kept(v, shouldKept, capped = true)
+      if (slotsKept.size < slots.size) Vector.empty
+      else if (mustKept.exists(t => negSet(t.term))) Vector.empty
+      else if (shouldSurv.size < minEff) Vector.empty
+      else execute(spark, root, m,
+        Clauses(slotsKept ++ mustKept, shouldSurv, minEff, negs, fterms,
+          boostOf, Some(proximity(seq, slop))),
+        v.stats, k, combineRanges(None, tsRanges))
     }
   }
 
   /** Shared scoring-BooleanQuery rewrite tail for the multi-term query
-    * family ([[prefixTopK]], [[fuzzyTopK]], [[wildcardTopK]]): the standard OR/BM25 top-k
-    * over an already-expanded (and already size-capped) term set.
-    * Unscoped: one OR plan with global stats. Scoped: per scope, re-weigh
-    * the globally capped expansion with SCOPED dfs — terms absent from a
-    * scope drop out (a scope-local dictionary expansion by construction) —
-    * run the ordinary scoped OR over the scope's segments, then union with
-    * each doc's best-scoring instance, the queryScoped rule. */
+    * family ([[prefixTopK]], [[fuzzyTopK]], [[wildcardTopK]]): the
+    * standard OR/BM25 top-k over an already-expanded (and already
+    * size-capped) term set, no stop cap. Unscoped: global stats and the
+    * expansion's own dfs (no further dictionary probe). Scoped: per
+    * scope, re-weigh the globally capped expansion with SCOPED dfs —
+    * terms absent from a scope drop out (a scope-local dictionary
+    * expansion by construction) — then union with each doc's
+    * best-scoring instance, the queryScoped rule. */
   private def expansionTopK(spark: SparkSession, root: String, m: Manifest,
                             found: Vector[TermStats], k: Int,
                             scopes: Seq[String],
@@ -2150,223 +1803,18 @@ object SearchEngine {
     // field terms can never enter `found`: the dictionary the expansions
     // probe (term_stats) excludes the reserved namespace by construction
     // (IndexBuilder.termStatsAgg) — a `*user` wildcard cannot surface
-    // role postings. Filters ride executePlan like every OR query.
+    // role postings. Filters ride the OR walk like every OR query.
     val (fterms, tsRanges) = resolveFilter(spark, root, m, filter)
+    val expansion = found.map(_.term)
     if (found.isEmpty) Vector.empty
-    else if (scopes.isEmpty) {
-      val stats = CorpusStats(m.nDocs, m.avgdl, m.analyzerVersion)
-      val p = Plan(found.sortBy(t => (t.df, t.term)), Vector.empty, "OR", k)
-      executePlan(spark, root, p, stats, combineRanges(None, tsRanges),
-        Some(m), fterms)
-    } else {
-      val expansion = found.map(_.term)
-      val all = scopes.flatMap { sc =>
-        val segs = scopeSegments(spark, root, m, sc)
-        if (segs.isEmpty) Vector.empty
-        else {
-          val n = segs.map(_.n).sum
-          val stats = CorpusStats(n, segs.map(_.sumDl).sum.toDouble / n,
-            m.analyzerVersion)
-          val ranges = segs.map(s0 => (s0.lo, s0.hi))
-          val dfs = scopedTermDf(spark, root, m, sc, expansion, ranges)
-          val kept = expansion
-            .flatMap(t => dfs.get(t).filter(_ > 0).map(df => TermStats(t, df, 0)))
-            .sortBy(t => (t.df, t.term))
-          if (kept.isEmpty) Vector.empty
-          else executePlan(spark, root,
-            Plan(kept, Vector.empty, "OR", k), stats,
-            combineRanges(Some(ranges), tsRanges), Some(m), fterms)
-        }
-      }
-      unionBest(all, k)
+    else overViews(spark, root, m, scopes, k, expansion,
+        known = found.map(t => t.term -> t.df).toMap) { v =>
+      val ts = kept(v, expansion, capped = false)
+      if (ts.isEmpty) Vector.empty
+      else execute(spark, root, m,
+        Clauses(Vector.empty, should = ts, minShould = 1, filters = fterms),
+        v.stats, k, combineRanges(v.ranges, tsRanges))
     }
-  }
-
-  /** Shared verify-by-rescan executor for [[phraseTopK]]/[[nearTopK]] on a
-    * positions-free index: complete AND candidates (optionally restricted
-    * to scope segments), then a shard-pruned docs join keeping rows whose
-    * re-analyzed token stream satisfies `verify`, then the global top-k. */
-  /** Doc-COLUMN twin of the field-posting fold, ONE definition for both
-    * rescan executors (r7 review: the two copies + Spark's space-only
-    * `trim` diverged from Analyzer.fold's Java trim, which strips every
-    * char <= U+0020 — a doc with role "user\t" matched on a positional
-    * index and vanished on the rescan path). `[\x00-\x20]` IS Java
-    * String.trim's exact rule; Spark's lower() is locale-independent
-    * (UTF8String), matching fold's Locale.ROOT for this charset, and
-    * translate handles the ё fold. */
-  private def fieldPredOf(filter: QueryFilter): org.apache.spark.sql.Column =
-    filter.fieldEqs.map { case (f, v) =>
-      translate(lower(regexp_replace(col(f),
-        "^[\\x00-\\x20]+|[\\x00-\\x20]+$", "")), "\u0451", "\u0435") ===
-        Analyzer.fold(v.trim)
-    }.foldLeft(org.apache.spark.sql.functions.lit(true))(_ && _)
-
-  private def candidateVerifyTopK(spark: SparkSession, root: String,
-                                  m: Manifest, p: Plan, stats: CorpusStats,
-                                  k: Int,
-                                  verify: Vector[String] => Boolean,
-                                  ranges: Option[Seq[(Long, Long)]],
-                                  filter: QueryFilter = QueryFilter.Empty): Vector[SearchHit] = {
-    import spark.implicits._
-    val cand = phraseCandidates(spark, root, m, p, stats, ranges)
-      .localCheckpoint(true) // one evaluation feeds shards, count, join
-    try {
-      // ONE action serves the emptiness probe and the broadcast decision
-      // (VERDICT r05 hygiene item 4; the frame is pinned, but two jobs
-      // were still two jobs)
-      val candCount = cand.count()
-      if (candCount == 0L) return Vector.empty
-      val candShards =
-        cand.select($"shard").distinct().as[Int].collect().toSeq // O(shards)
-      val candFrame = cand.select($"docId", $"score")
-      val joinCand =
-        if (candCount <= PhraseBroadcastMax)
-          org.apache.spark.sql.functions.broadcast(candFrame)
-        else candFrame
-      val ver = m.analyzerVersion
-      // rescan path reads docs rows anyway: role/tool evaluate as column
-      // predicates with the SAME fold as the field postings
-      // (lower + ё→е, column-side via translate — FieldFilterSpec pins
-      // path equality). ts ranges were already intersected into `ranges`
-      // by the caller — no ts column predicate needed here.
-      val fieldPred = fieldPredOf(filter)
-      IndexSnapshot.docsFor(spark, root, m, candShards)
-        .filter(fieldPred)
-        .select($"docId", $"text")
-        .join(joinCand, "docId")
-        .select($"docId", $"score", $"text").as[(Long, Double, String)]
-        .mapPartitions(_.collect {
-          case (d, s, txt) if verify(Analyzer.tokensFor(ver, txt)) =>
-            SearchHit(d, s)
-        })
-        .orderBy($"score".desc, $"docId".asc).limit(k) // TakeOrderedAndProject
-        .collect().toVector
-    } finally {
-      // ADVICE r05 item 1: unpersist on a localCheckpoint-backed frame is
-      // a CacheManager no-op; the blocks free via the ContextCleaner when
-      // cand drops out of scope here. Kept as documentation of intent —
-      // if the checkpoint is ever swapped for cache(), this is the spot.
-      cand.unpersist(); ()
-    }
-  }
-
-  /** Positional phrase/NEAR executor (r6 format rev): the same
-    * shard-aligned AND walk as [[phraseCandidates]], but each match's
-    * per-term token ordinals are pulled from the cursors at the match
-    * point ([[Wand.andAllWith]]) and `pred` decides in-task — verified
-    * hits feed a per-shard top-k heap and the driver merges O(shards×k)
-    * rows. No docs join, no re-analysis, no candidate materialization:
-    * a phrase query costs an AND query plus ordinal probes. `posBySlot`
-    * is indexed by `slots` order (sorted distinct terms). */
-  private def positionalVerifyTopK(spark: SparkSession, root: String,
-                                   m: Manifest, p: Plan, stats: CorpusStats,
-                                   k: Int, slots: Vector[String],
-                                   pred: Array[Array[Int]] => Boolean,
-                                   ranges: Option[Seq[(Long, Long)]],
-                                   fterms: Vector[String] = Vector.empty): Vector[SearchHit] = {
-    import spark.implicits._
-    require(m.positions, "positional verify needs a positions-built index")
-    val textTerms = p.terms.map(_.term)
-    val termList = textTerms ++ fterms
-    val dfByTerm = p.terms.map(t => t.term -> t.df).toMap ++
-      fterms.map(_ -> 0L)
-    val canonical = p.terms.sortBy(t => (t.df, t.term)).map(_.term)
-      .zipWithIndex.toMap ++
-      fterms.zipWithIndex.map { case (t, i) => t -> (textTerms.size + i) }
-    val slotOf = slots.zipWithIndex.toMap
-    val nSlots = slots.size
-    val nDocs = stats.nDocs
-    val avgdl = stats.avgdl
-    val nText = textTerms.size
-    val nFilters = fterms.size
-    val (segs, shardPrune) = segsAndPrune(m, ranges)
-    if (segs.isEmpty) return Vector.empty
-    val (scanFrame, _, needShuffle) =
-      resolvedPostingsScan(spark, root, m, needPositions = true)
-    val selected0 = shardPrune(scanFrame).filter($"term".isin(termList: _*))
-    val selected = if (needShuffle) selected0.repartition($"shard") else selected0
-    val perShard = selected
-      .select(postingScanColumns(withPos = true): _*)
-      .mapPartitions { rows =>
-        val byTerm = decodeByTerm(rows, withPos = true)
-        byTerm.groupBy(_._1._1).iterator.flatMap { case (_, termChunks) =>
-          val (fieldChunks, textChunks) = termChunks.partition {
-            case ((_, t), _) => Analyzer.isFieldTerm(t)
-          }
-          val cursors = buildCursors(textChunks, dfByTerm, canonical,
-            nDocs, avgdl)
-          val filterArr = buildCursors(fieldChunks, dfByTerm, canonical,
-            nDocs, avgdl).toArray
-          // a term absent from this shard ⇒ empty local intersection
-          // (ditto a filter value: no doc here carries it)
-          if (cursors.size < nText || filterArr.length < nFilters)
-            Iterator.empty
-          else {
-            val heap = new Wand.TopK(k)
-            val posBySlot = new Array[Array[Int]](nSlots) // reused per match
-            val walk = Wand.andAllWith(cursors, segs) { (d, s, arr) =>
-              // threshold shortcut (Lucene impact-style): a candidate whose
-              // score cannot enter the heap is rejected by offer() no
-              // matter what the verify says — skip the ordinal decode and
-              // the predicate entirely. `>=` keeps threshold ties verified
-              // (offer admits a tie only on a smaller docId), so the
-              // result stays the exact top-k of verified hits. Filter
-              // probes run BEFORE the ordinal decode (cheap forward
-              // merges vs a positions read).
-              if (s >= heap.threshold && Wand.presentInAll(filterArr, d)) {
-                var i = 0
-                while (i < arr.length) {
-                  posBySlot(slotOf(arr(i).term)) = arr(i).positions
-                  i += 1
-                }
-                if (pred(posBySlot)) heap.offer(d, s)
-              }
-            }
-            while (walk.hasNext) walk.next() // drain (lazy iterator)
-            heap.results.iterator
-          }
-        }
-      }
-      .collect()
-    perShard.toVector.sortBy(h => (-h.score, h.docId)).take(k)
-  }
-
-  /** The complete scored AND intersection as a distributed frame
-    * (shard, docId, score) — [[executePlan]]'s shard-aligned decode pass
-    * with [[Wand.andAll]] in place of the top-k executor; scope segments
-    * restrict the walk and prune the shard scan. */
-  private def phraseCandidates(spark: SparkSession, root: String,
-                               m: Manifest, p: Plan,
-                               stats: CorpusStats,
-                               ranges: Option[Seq[(Long, Long)]]): DataFrame = {
-    import spark.implicits._
-    val termList = p.terms.map(_.term)
-    val dfByTerm = p.terms.map(t => t.term -> t.df).toMap
-    val canonical = p.terms.sortBy(t => (t.df, t.term)).map(_.term)
-      .zipWithIndex.toMap
-    val nDocs = stats.nDocs
-    val avgdl = stats.avgdl
-    val nTerms = termList.size
-    val (segs, shardPrune) = segsAndPrune(m, ranges)
-    if (segs.isEmpty)
-      return spark.emptyDataset[(Int, Long, Double)]
-        .toDF("shard", "docId", "score")
-    val (scanFrame, _, needShuffle) = resolvedPostingsScan(spark, root, m)
-    val selected0 = shardPrune(scanFrame).filter($"term".isin(termList: _*))
-    val selected = if (needShuffle) selected0.repartition($"shard") else selected0
-    selected
-      .select(postingScanColumns(withPos = false): _*)
-      .mapPartitions { rows =>
-        val byTerm = decodeByTerm(rows, withPos = false)
-        byTerm.groupBy(_._1._1).iterator.flatMap { case (shard, termChunks) =>
-          val cursors = buildCursors(termChunks, dfByTerm, canonical,
-            nDocs, avgdl)
-          // a term absent from this shard ⇒ empty local intersection
-          if (cursors.size < nTerms) Iterator.empty
-          else Wand.andAll(cursors, segs).map(h => (shard, h.docId, h.score))
-        }
-      }
-      .toDF("shard", "docId", "score")
   }
 
   /** Naive Catalyst path over the uncompressed tf relation — correctness
@@ -2374,6 +1822,7 @@ object SearchEngine {
   def queryNaive(spark: SparkSession, root: String, queryText: String,
                  mode: String = "AND", k: Int = 10): DataFrame = {
     import spark.implicits._
+    requireMode(mode)
     val stats = statsOf(spark, root)
     val spec = QuerySpec(
       Analyzer.analyzeQueryFor(stats.analyzerVersion, queryText), mode, k)
@@ -2431,12 +1880,13 @@ object SearchEngine {
   def queryWithSnippets(spark: SparkSession, root: String, queryText: String,
                         mode: String = "AND", k: Int = 10)
       : Seq[(Long, Double, String, String, Int)] = {
-    import org.apache.spark.sql.functions.col
+    requireMode(mode)
     val m = pinnedManifest(root) // ONE snapshot for both rank and lookup
-    val hits = queryResolved(spark, root, m, queryText, mode, k)
-    if (hits.isEmpty) return Nil
     val version = m.analyzerVersion
-    val terms = Analyzer.analyzeQueryFor(version, queryText).toSet
+    val analyzed = Analyzer.analyzeQueryFor(version, queryText)
+    val hits = termQuery(spark, root, m, analyzed, mode, k, Nil, QueryFilter.Empty)
+    if (hits.isEmpty) return Nil
+    val terms = analyzed.toSet
     val normalize: String => String =
       if (version == Analyzer.StemVersion) graft.analysis.Stemmer.stem else identity
     val ids = hits.map(_.docId)
@@ -2645,17 +2095,6 @@ object SearchEngine {
   private val cachedPostingsAligned =
     scala.collection.concurrent.TrieMap.empty[String, Boolean]
 
-  /** Pin the CURRENT snapshot's postings + dictionary in executor memory
-    * for low-latency serving (reference analog: MySQL buffer pool
-    * residency); prefers the shard-aligned scan so the cached
-    * partitioning already groups whole shards and queries run
-    * shuffle-free. Re-invoking after
-    * an external writer committed a newer snapshot REFRESHES the pins
-    * (drops the stale frames, rebuilds, restamps) — a getOrElseUpdate
-    * would silently keep serving-bypassing stale entries forever. The
-    * snapshot stamp is written only after BOTH frames are built from the
-    * same pinned manifest, so an interleaved disable can never leave one
-    * stale frame passing cacheMatches under a newer stamp. */
   /** Pin the snapshot's postings + term stats in executor memory.
     *
     * `positions = false` (default) PRUNES the position streams from the

@@ -340,6 +340,7 @@ class EngineParitySpec extends AnyFunSuite {
         val got = SearchEngine.query(spark, splitRoot, q, mode, k)
         assert(got == oracle.topK(q, mode, k), s"split-scan '$q' [$mode] k=$k")
       }
+      clauseShapesMatchOracle(splitRoot, "aligned")
 
       // now break the layout invariant: rewrite one shard dir into TWO
       // parquet files (chunks of one term may straddle them) — the engine
@@ -374,10 +375,58 @@ class EngineParitySpec extends AnyFunSuite {
         assert(got == oracle.topK(q, mode, k),
           s"multi-file-shard fallback '$q' [$mode] k=$k")
       }
+      clauseShapesMatchOracle(splitRoot, "multi-file-shard fallback")
     } finally {
       spark.conf.set("spark.sql.files.maxPartitionBytes", oldMax)
       spark.conf.set("spark.sql.files.openCostInBytes", oldCost)
     }
+  }
+
+  /** Every clause shape the shard-local executor walks — MUST_NOT, the
+    * count-qualified SHOULD, the combined BooleanQuery and the
+    * positions-free phrase/NEAR rescan — against the oracle on `r`. */
+  private def clauseShapesMatchOracle(r: String, label: String): Unit = {
+    assert(SearchEngine.queryNot(spark, r, "needlemid w0000", "roleuser", 20)
+      == oracle.andNotTopK("needlemid w0000", "roleuser", 20), s"$label: NOT")
+    assert(SearchEngine.queryShould(spark, r, "needlemid w0000 w0001", 2, 20)
+      == oracle.shouldTopK("needlemid w0000 w0001", 2, 20), s"$label: SHOULD")
+    assert(SearchEngine.queryBool(spark, r, "needlemid", "w0000 w0001",
+        "roleuser", 1, 20)
+      == oracle.boolTopK("needlemid", "w0000 w0001", "roleuser", 1, 20),
+      s"$label: BOOL")
+    assert(SearchEngine.phraseTopK(spark, r, "stopish needlemid", 20)
+      == oracle.phraseTopK("stopish needlemid", 20), s"$label: PHRASE")
+    assert(SearchEngine.nearTopK(spark, r, "stopish needlemid", 3, 20)
+      == oracle.nearTopK("stopish needlemid", 3, 20), s"$label: NEAR")
+  }
+
+  test("unknown modes refuse instead of silently running OR") {
+    val m = IndexManifest.read(root).get
+    val stats = SearchEngine.statsOf(spark, root)
+    val p = SearchEngine.plan(spark, root,
+      graft.model.QuerySpec(Vector("needlemid"), "AND", 10), stats)
+    Seq("ANDD", "SHOULD:2").foreach { bad =>
+      val calls: Seq[(String, () => Any)] = Seq(
+        "query" -> (() => SearchEngine.query(spark, root, "needlemid", bad)),
+        "queryAt" -> (() =>
+          SearchEngine.queryAt(spark, root, m.snapshotId, "needlemid", bad)),
+        "queryScoped" -> (() => SearchEngine.queryScoped(spark, root,
+          "needlemid", bad, 10, Seq("conv-0000001"))),
+        "queryWithSnippets" -> (() =>
+          SearchEngine.queryWithSnippets(spark, root, "needlemid", bad)),
+        "queryNaive" -> (() =>
+          SearchEngine.queryNaive(spark, root, "needlemid", bad)),
+        "executePlan" -> (() =>
+          SearchEngine.executePlan(spark, root, p.copy(mode = bad), stats)))
+      calls.foreach { case (name, call) =>
+        withClue(s"$name(mode = $bad): ") {
+          intercept[IllegalArgumentException](call())
+        }
+      }
+    }
+    val cli = intercept[RuntimeException](graft.cli.Query.main(
+      Array(root, "needlemid w0000", "--mode", "ANDD")))
+    assert(cli.getMessage.contains("usage: Query"), cli.getMessage)
   }
 
   test("chunking: hot-term lists split at the chunk cap and merge correctly") {

@@ -19,7 +19,10 @@ import graft.oracle.Oracle
   *    mode, bit-equal;
   *  - the clause-overlap algebra extended to phrase slots (MUST∩slot
   *    dedupes, NOT∩slot ⇒ empty, SHOULD∩slot auto-satisfies);
-  *  - composition with typed field filters (post-filter law).
+  *  - composition with typed field filters (post-filter law);
+  *  - a seeded random cross-check: each seed draws one clause shape
+  *    (must/should/not/filter/phrase/slop/boost/k) and runs it on both
+  *    index variants against the oracle, bit for bit.
   */
 class BoolPhraseSpec extends AnyFunSuite {
 
@@ -121,6 +124,53 @@ class BoolPhraseSpec extends AnyFunSuite {
         "stopish needlemid", None, "", "w0000", "", 0, 100000, None, roleF)
       val expected = unfiltered.filter(h => oracle.docPasses(roleF)(h.docId))
       assert(got == expected, s"[$label] filter law")
+    }
+  }
+
+  test("seeded random clause shapes: both paths bit-equal to the oracle") {
+    val musts = Vector("", "w0000", "w0002", "needlemid", "roleuser",
+      "absentterm", "w0003 w0004", "stopish w0001")
+    val shoulds = Vector("", "w0000 w0001", "w0002", "w0005 w0006 w0007",
+      "needlemid", "stopish w0003", "absentterm w0004")
+    val nots = Vector("", "", "roleuser", "w0001", "w0008 w0009", "absentterm")
+    val phrases = Vector("stopish needlemid", "roleuser w0000",
+      "roletool toolbash", "w0000 w0001")
+    val filters = Vector(QueryFilter.Empty, QueryFilter.Empty,
+      QueryFilter(role = Some("user")), QueryFilter(tool = Some("bash")))
+    val all = 100000
+    (1 to 20).foreach { seed =>
+      val rng = new scala.util.Random(seed)
+      def pick[A](xs: Vector[A]): A = xs(rng.nextInt(xs.size))
+      val must = pick(musts)
+      val should = pick(shoulds)
+      val not = pick(nots)
+      val mm = rng.nextInt(3)
+      val k = 1 + rng.nextInt(30)
+      val f = pick(filters)
+      val phrase = if (rng.nextBoolean()) Some(pick(phrases)) else None
+      val slop = if (rng.nextBoolean()) Some(rng.nextInt(5)) else None
+      val boostable = (must + " " + should).split(' ').filter(_.nonEmpty)
+      val boosts =
+        if (boostable.isEmpty || rng.nextBoolean()) Map.empty[String, Double]
+        else Map(boostable(rng.nextInt(boostable.length)) -> (0.5 + rng.nextInt(8) * 0.5))
+      // the oracle scores unfiltered; filters never re-weigh (post-filter law)
+      val unfiltered = phrase match {
+        case Some(ph) => oracle.boolPhraseTopK(ph, slop, must, should, not, mm,
+          all, boosts)
+        case None => oracle.boolTopK(must, should, not, mm, all, None, boosts)
+      }
+      val expected = unfiltered.filter(h => oracle.docPasses(f)(h.docId)).take(k)
+      val shape = s"seed $seed: phrase=$phrase~$slop +($must) ?($should) " +
+        s"-($not)>=$mm k=$k filter=${f.cacheKey} boosts=$boosts"
+      roots.foreach { case (label, root) =>
+        val got = phrase match {
+          case Some(ph) => SearchEngine.queryBoolPhrase(spark, root, ph, slop,
+            must, should, not, mm, k, None, f, boosts)
+          case None => SearchEngine.queryBool(spark, root, must, should, not,
+            mm, k, Nil, None, f, None, boosts)
+        }
+        assert(got == expected, s"[$label] $shape: got $got expected $expected")
+      }
     }
   }
 }

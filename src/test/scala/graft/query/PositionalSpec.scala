@@ -10,8 +10,8 @@ import graft.oracle.Oracle
 /** Positional postings format rev (r6, VERDICT r05 item 2):
   *
   *  - a positions-built index serves phrase/NEAR through the in-walk
-  *    posting-offset verify ([[SearchEngine.positionalVerifyTopK]] via
-  *    Wand.andAllWith) — rank-identical (bit-equal scores) to both the
+  *    posting-offset verify (the shard-local executor's probed
+  *    Wand.andAllWith walk) — rank-identical (bit-equal scores) to both the
   *    brute-force oracle and the rescan path on a positions-free twin;
   *  - the positional predicates ([[SearchEngine.phraseMatchPositions]],
   *    [[SearchEngine.nearMatchPositions]]) agree with the token-stream
