@@ -77,118 +77,102 @@ object BuildIndex {
 }
 
 /** Query a built index.
-  * Usage: Query <indexRoot> <queryText> [--mode AND|OR|PHRASE|NEAR|PREFIX|FUZZY|WILDCARD]
-  *        [--k N] [--slop N] [--edits N] [--prefix-len N] [--naive]
-  *        [--scopes p1,p2] [--snapshot N]
-  * PHRASE mode treats <queryText> as an exact phrase over the analyzed
-  * token stream (SearchEngine.phraseTopK); NEAR matches all terms within
-  * a window of --slop+1 consecutive positions (default slop 2,
-  * SearchEngine.nearTopK); add --ordered for Lucene inOrder semantics
-  * (the window must contain the query tokens as a SUBSEQUENCE — order
-  * and duplicates kept). NOTE the window is slop+1 WIDE: adjacency
-  * needs --slop 1, unlike Lucene's unordered SpanNearQuery where slop 0
-  * already matches adjacent terms (Lucene slop s ≈ our slop s+1 for two
-  * terms — ADVICE r05 item 3). PREFIX treats <queryText> as a dictionary
-  * prefix pattern, e.g. `merg` for merge/merged (SearchEngine.prefixTopK).
-  * FUZZY expands <queryText> to every dictionary term within --edits
-  * Levenshtein edits (default 2, max 2 — Lucene FuzzyQuery limits;
-  * --prefix-len pins the first N chars exactly, Lucene prefixLength).
-  * WILDCARD treats <queryText> as a glob over the dictionary (`*` = any
-  * sequence, `?` = one char, e.g. `w00*3`). `--not "<terms>"` (AND mode
-  * only) excludes every document containing ANY of the given terms —
-  * Lucene BooleanQuery MUST + MUST_NOT; scores stay the positives-only
-  * BM25 sums. SHOULD mode (Lucene BooleanQuery optional clauses) matches
-  * documents containing at least `--min-match N` of the query's distinct
-  * terms, scored over the present terms — min-match 1 is OR, min-match =
-  * #terms is AND of the same terms; a term the index has never seen
-  * still counts toward the requirement (Lucene parity: an unsatisfiable
-  * clause is not dropped). `--should "<terms>"` (AND mode only, r7)
-  * builds the COMBINED BooleanQuery — MUST (the query) + SHOULD (these
-  * optional terms, which ADD score on candidates that hold them) +
-  * optional `--not` MUST_NOT, with `--min-match N` as
-  * minimumShouldMatch (default 0: optional clauses only boost).
-  * Typed field filters (r7, Lucene FILTER
-  * clauses): `--role X` / `--tool Y` (case-insensitive exact match) and
-  * `--from <ts>` / `--to <ts>` (inclusive; epoch millis or
-  * yyyy-MM-dd[[T| ]HH:mm:ss], always read as UTC regardless of the
-  * JVM zone) restrict candidates WITHOUT touching
-  * scores or statistics; they compose with every mode, --scopes and
-  * --snapshot, and need a fields-enabled index (the build default).
-  * `--lucene` (r7) puts the WHOLE query in one Lucene-style string —
-  * `+must should -not "phrase"~slop role:x tool:y ts:[a TO b]` —
-  * parsed by graft.query.QueryParser onto the same executors; the other
-  * query flags must then be absent (--min-match/--scopes/--snapshot
-  * still apply).
+  * Usage: Query <indexRoot> <queryText> [--mode AND|OR|SHOULD|PHRASE|NEAR|PREFIX|FUZZY|WILDCARD]
+  *        [--k N] [--slop N] [--ordered] [--edits N] [--prefix-len N] [--min-match N]
+  *        [--not <terms>] [--should <terms>] [--role X] [--tool Y] [--from ts] [--to ts]
+  *        [--after <cursor>] [--naive] [--conv <prefix> | --scopes p1,p2] [--snapshot N]
+  *        | Query <root> '<lucene query>' --lucene
+  * The flags build ONE [[graft.query.Query]] tree, answered by ONE
+  * [[SearchEngine.search]] call (`--naive` aside: the Catalyst backstop):
+  *  - AND → `Bool(must)`, OR → `Bool(should, minShould 1)`; SHOULD →
+  *    `Bool(should, minShould = --min-match)`: documents containing at
+  *    least N of the query's distinct terms, scored over the present
+  *    terms — a term the index has never seen still counts toward the
+  *    requirement (Lucene parity: an unsatisfiable clause is not dropped);
+  *  - `--not "<terms>"` (AND mode only) adds MUST_NOT clauses: every
+  *    document containing ANY of them is excluded, scores stay the
+  *    positives-only BM25 sums; `--should "<terms>"` (AND mode only, r7)
+  *    adds OPTIONAL clauses, which ADD score on candidates that hold them,
+  *    with `--min-match N` as minimumShouldMatch (default 0: optional
+  *    clauses only boost) — the combined Lucene BooleanQuery;
+  *  - PHRASE → `Bool(phrase)`: an exact phrase over the analyzed token
+  *    stream; NEAR → `Bool(phrase ~ --slop)`: all terms within a window of
+  *    --slop+1 consecutive positions (default slop 2); add --ordered for
+  *    Lucene inOrder semantics (the window must contain the query tokens
+  *    as a SUBSEQUENCE — order and duplicates kept). NOTE the window is
+  *    slop+1 WIDE: adjacency needs --slop 1, unlike Lucene's unordered
+  *    SpanNearQuery where slop 0 already matches adjacent terms (Lucene
+  *    slop s ≈ our slop s+1 for two terms — ADVICE r05 item 3);
+  *  - PREFIX / FUZZY / WILDCARD → `Expand`: a dictionary prefix (`merg`
+  *    for merge/merged), every term within --edits Levenshtein edits
+  *    (default 2, max 2 — Lucene FuzzyQuery limits; --prefix-len pins the
+  *    first N chars, Lucene prefixLength), or a glob (`*` = any sequence,
+  *    `?` = one char, e.g. `w00*3`);
+  *  - `--lucene` (r7) puts the WHOLE query in one Lucene-style string —
+  *    `+must should -not "phrase"~slop role:x tool:y ts:[a TO b]` —
+  *    parsed by graft.query.QueryParser into the same tree; the other
+  *    query flags must then be absent (--min-match/--scopes/--snapshot
+  *    still apply).
+  * Typed field filters (r7, Lucene FILTER clauses): `--role X` / `--tool
+  * Y` (case-insensitive exact match) and `--from <ts>` / `--to <ts>`
+  * (inclusive; epoch millis or yyyy-MM-dd[[T| ]HH:mm:ss], always read as
+  * UTC regardless of the JVM zone) restrict candidates WITHOUT touching
+  * scores or statistics; they need a fields-enabled index (the build
+  * default). `--scopes a,b` scopes any query (per-scope statistics,
+  * best-instance union); `--conv p` is the one-scope spelling kept for
+  * plain AND/OR and excludes --scopes. `--snapshot N` time-travels every
+  * query. `--naive` runs plain AND/OR through the Catalyst backstop,
+  * unscoped, on the current snapshot. Every refusal happens before the
+  * Spark session starts.
   */
 object Query {
+  private val usage =
+    "usage: Query <indexRoot> <queryText> [--mode AND|OR|SHOULD|PHRASE|NEAR|PREFIX|FUZZY|WILDCARD] " +
+    "[--k N] [--slop N] [--ordered] [--edits N] [--prefix-len N] [--min-match N] " +
+    "[--not <terms>] [--should <terms>] [--role X] [--tool Y] [--from ts] [--to ts] " +
+    "[--after <cursor>] [--naive] [--conv <prefix> | --scopes p1,p2] [--snapshot N] " +
+    "| Query <root> '<lucene query>' --lucene"
+
   def main(args: Array[String]): Unit = {
+    import graft.query.Query.{Bool, Expand, Fuzzy, Phrase, Prefix, Wildcard}
     val a = args.toVector
     def opt(name: String): Option[String] =
       a.indexOf(name) match { case -1 => None; case i => a.lift(i + 1) }
-    if (a.size < 2) sys.error(
-      "usage: Query <indexRoot> <queryText> [--mode AND|OR|SHOULD|PHRASE|NEAR|PREFIX|FUZZY|WILDCARD] " +
-      "[--k N] [--slop N] [--ordered] [--edits N] [--prefix-len N] [--min-match N] " +
-      "[--not <terms>] [--should <terms>] [--role X] [--tool Y] [--from ts] [--to ts] " +
-      "[--naive] [--conv <prefix>] [--snapshot N] | Query <root> '<lucene query>' --lucene")
+    // bad input dies with the USAGE string, not a bare exception
+    // (ADVICE r05 item 2)
+    def refuse(why: String): Nothing = sys.error(s"$why — $usage")
+    if (a.size < 2) sys.error(usage)
     val root = a(0)
     val q = a(1)
     val mode = opt("--mode").getOrElse("AND").toUpperCase
-    // numeric options die with the USAGE string, not a bare
-    // NumberFormatException (ADVICE r05 item 2); Int options parse with
-    // toIntOption DIRECTLY — a Long-then-toInt chain would silently
-    // truncate 2^32 to 0 and pass the >= 0 checks (r6 review)
-    val usage =
-      "usage: Query <indexRoot> <queryText> [--mode AND|OR|SHOULD|PHRASE|NEAR|PREFIX|FUZZY|WILDCARD] " +
-      "[--k N] [--slop N] [--ordered] [--edits N] [--prefix-len N] [--min-match N] " +
-      "[--not <terms>] [--should <terms>] [--role X] [--tool Y] [--from ts] [--to ts] " +
-      "[--naive] [--conv <prefix>] [--snapshot N] | Query <root> '<lucene query>' --lucene"
     // an unknown mode must die with the usage, not run some other mode
     if (!Set("AND", "OR", "SHOULD", "PHRASE", "NEAR", "PREFIX", "FUZZY",
         "WILDCARD").contains(mode))
-      sys.error(s"unknown --mode '$mode' — " + usage)
+      refuse(s"unknown --mode '$mode'")
+    // Int options parse with toIntOption DIRECTLY — a Long-then-toInt
+    // chain would silently truncate 2^32 to 0 and pass the >= 0 checks
+    // (r6 review)
     def numOpt(name: String): Option[Long] = opt(name).map { s =>
-      s.toLongOption.getOrElse(sys.error(
-        s"$name expects an integer, got '$s' — " + usage))
+      s.toLongOption.getOrElse(refuse(s"$name expects an integer, got '$s'"))
     }
     def intOpt(name: String): Option[Int] = opt(name).map { s =>
-      s.toIntOption.getOrElse(sys.error(
-        s"$name expects a 32-bit integer, got '$s' — " + usage))
+      s.toIntOption.getOrElse(refuse(s"$name expects a 32-bit integer, got '$s'"))
     }
     val k = intOpt("--k").getOrElse(10)
-    require(k > 0, s"--k must be > 0, got $k")
+    if (k < 1) refuse(s"--k must be >= 1, got $k")
+    val naive = a.contains("--naive")
+    val lucene = a.contains("--lucene")
     val conv = opt("--conv")
-    val scopes = opt("--scopes").map(_.split(",").toSeq.filter(_.nonEmpty))
+    val scopeList = opt("--scopes").map(_.split(",").toSeq.filter(_.nonEmpty))
+    // both would name the scopes (one would be silently dropped), and the
+    // naive backstop has no scoped form (it would answer unscoped)
+    if (conv.nonEmpty && scopeList.nonEmpty) refuse("--conv and --scopes both name the scopes; pass one")
+    if (naive && (conv.nonEmpty || scopeList.nonEmpty)) refuse("--naive answers unscoped; drop --conv/--scopes")
+    val scopes = scopeList.orElse(conv.map(Seq(_))).getOrElse(Nil)
     val snapshot = numOpt("--snapshot") // time travel (retained only)
-    require(snapshot.isEmpty || !a.contains("--naive"),
+    require(snapshot.isEmpty || !naive,
       "--snapshot cannot be combined with --naive (the naive backstop " +
       "always answers from the current snapshot); drop one of them")
-    val spark = CliSession.session("graft-query")
-    // pin the historical manifest BEFORE querying: the preview below must
-    // not re-resolve it after the query (a concurrent writer's expiry
-    // between the two would crash with a raw FileNotFound instead of the
-    // loud retention message). Validate retention FIRST for the same
-    // reason — an already-expired snapshot must surface the loud
-    // retained-versions message, not a raw FileNotFoundException from
-    // this pre-pin (ADVICE r04 item 4).
-    // readVersionCached shares the parse with queryAt below (one LIST +
-    // one manifest read per invocation, not two of each); wrapping in
-    // withExpiryDiagnosis turns both an already-expired snapshot and an
-    // expiry racing this pre-pin into the loud retention message.
-    val pinned = snapshot.map { v =>
-      val retained = graft.index.IndexManifest.versions(root)
-      require(retained.contains(v),
-        s"snapshot $v not available at $root (expired or never " +
-        s"committed); retained: ${retained.mkString(",")}")
-      // expiry can still win the race between the listing above and a
-      // cold-cache parse — diagnose that as the loud retention error too
-      SearchEngine.withExpiryDiagnosis(root, v) {
-        graft.index.IndexManifest.readVersionCached(root, v)
-      }
-    }
-    val t0 = System.nanoTime()
-    require(!Set("SHOULD", "PHRASE", "NEAR", "PREFIX", "FUZZY", "WILDCARD").contains(mode) ||
-      (conv.isEmpty && !a.contains("--naive")),
-      s"$mode mode does not combine with --naive/--conv (use --scopes)")
     // combined BooleanQuery (r7): --should adds OPTIONAL clauses to an
     // AND query (+ optional --not) — Lucene's general MUST + SHOULD +
     // MUST_NOT form; --min-match then means minimumShouldMatch
@@ -200,31 +184,26 @@ object Query {
       s"--should expects a term list, got '${shouldText.getOrElse("")}' (missing value?)")
     require(shouldText.isEmpty || mode == "AND",
       "--should requires --mode AND (Lucene BooleanQuery MUST + SHOULD)")
-    require(shouldText.isEmpty || (conv.isEmpty && !a.contains("--naive")),
-      "--should does not combine with --naive/--conv (use --scopes)")
-    require(mode == "SHOULD" || shouldText.isDefined ||
-      a.contains("--lucene") || opt("--min-match").isEmpty,
+    require(mode == "SHOULD" || shouldText.isDefined || lucene ||
+      opt("--min-match").isEmpty,
       "--min-match only applies to SHOULD mode, --should or --lucene queries")
     // a trailing --min-match (value forgotten) must fail loudly, not
     // silently run with the default (the --not guard's rule, r7 review)
     require(!a.contains("--min-match") ||
       opt("--min-match").exists(!_.startsWith("--")),
       "--min-match expects a number (missing value?)")
-    // Lucene default for an all-optional BooleanQuery: at least one
-    // SHOULD clause must match; with MUST clauses present the default
-    // is 0 (optional clauses boost without eliminating) — queryBool
-    // applies the at-least-one rule itself when no MUST survives
-    val boolStyle = shouldText.isDefined || a.contains("--lucene")
-    val minMatch = intOpt("--min-match").getOrElse(if (boolStyle) 0 else 1)
-    require(minMatch >= (if (boolStyle) 0 else 1),
-      s"--min-match must be >= ${if (boolStyle) 0 else 1}, got $minMatch")
+    // SHOULD mode needs at least one match; with --should/--lucene the
+    // default is Lucene's 0 (the engine applies the at-least-one rule
+    // itself when no required clause exists)
+    val minFloor = if (mode == "SHOULD") 1 else 0
+    val minMatch = intOpt("--min-match").getOrElse(minFloor)
+    require(minMatch >= minFloor, s"--min-match must be >= $minFloor, got $minMatch")
     // typed field filters (r7): epoch millis or yyyy-MM-dd[[T| ]HH:mm:ss],
     // parsed AS UTC via the shared TsParse (Timestamp.valueOf would read
     // the JVM-local zone and silently shift the window — r7 review)
     def tsOpt(name: String): Option[java.sql.Timestamp] = opt(name).map { v =>
-      graft.query.TsParse.utcTimestamp(v).getOrElse(sys.error(
-        s"$name expects epoch millis or yyyy-MM-dd[[T| ]HH:mm:ss] UTC, " +
-        s"got '$v' — " + usage))
+      graft.query.TsParse.utcTimestamp(v).getOrElse(refuse(
+        s"$name expects epoch millis or yyyy-MM-dd[[T| ]HH:mm:ss] UTC, got '$v'"))
     }
     Seq("--role", "--tool", "--from", "--to").foreach { f =>
       require(!a.contains(f) || opt(f).exists(!_.startsWith("--")),
@@ -243,17 +222,13 @@ object Query {
         bits <- if (parts.length == 2) parts(0).toLongOption else None
         doc <- parts(1).toLongOption
       } yield graft.model.SearchHit(doc, java.lang.Double.longBitsToDouble(bits))
-      parsed.getOrElse(sys.error(
-        s"--after expects the cursor token a previous page printed " +
-        s"(<scoreBits>:<docId>), got '$v' — " + usage))
+      parsed.getOrElse(refuse(s"--after expects the cursor token a previous " +
+        s"page printed (<scoreBits>:<docId>), got '$v'"))
     }
     require(after.isEmpty ||
-      (Set("AND", "OR", "SHOULD").contains(mode) || a.contains("--lucene")) &&
-        conv.isEmpty && scopes.isEmpty && !a.contains("--naive"),
+      (Set("AND", "OR", "SHOULD").contains(mode) || lucene) && scopes.isEmpty && !naive,
       "--after pages AND/OR/SHOULD/--should/--not/--lucene term queries " +
       "only, without --conv/--scopes/--naive")
-    require(qFilter.isEmpty || (conv.isEmpty && !a.contains("--naive")),
-      "field/ts filters do not combine with --naive/--conv (use --scopes)")
     // mode checks FIRST, then the slop parse/range (ADVICE r05 item 2:
     // 'Query ... --mode AND --slop abc' must say --slop is NEAR-only, not
     // die in toInt; NEAR with a bad/negative slop gets the usage message)
@@ -272,78 +247,72 @@ object Query {
       s"--not expects a term list, got '${notText.getOrElse("")}' (missing value?)")
     require(notText.isEmpty || mode == "AND",
       "--not requires --mode AND (Lucene BooleanQuery MUST + MUST_NOT)")
-    require(notText.isEmpty || (conv.isEmpty && !a.contains("--naive")),
-      "--not does not combine with --naive/--conv (use --scopes)")
+    require(!naive && conv.isEmpty || Set("AND", "OR").contains(mode) &&
+      shouldText.isEmpty && notText.isEmpty && qFilter.isEmpty && !lucene,
+      s"--naive/--conv apply to plain AND/OR term queries only, not to " +
+      s"$mode/--should/--not/filters/--lucene (use --scopes)")
     val slop = intOpt("--slop").getOrElse(2)
     require(slop >= 0, s"--slop must be >= 0, got $slop (window width = slop+1)")
     require(mode == "FUZZY" ||
       (opt("--edits").isEmpty && opt("--prefix-len").isEmpty),
       "--edits/--prefix-len only apply to FUZZY mode")
     val edits = intOpt("--edits").getOrElse(2)
-    require(edits >= 0 && edits <= graft.query.SearchEngine.MaxFuzzyEdits,
-      s"--edits must be in [0, ${graft.query.SearchEngine.MaxFuzzyEdits}] " +
+    require(edits >= 0 && edits <= SearchEngine.MaxFuzzyEdits,
+      s"--edits must be in [0, ${SearchEngine.MaxFuzzyEdits}] " +
       s"(Lucene FuzzyQuery limit), got $edits")
     val prefixLen = intOpt("--prefix-len").getOrElse(0)
     require(prefixLen >= 0, s"--prefix-len must be >= 0, got $prefixLen")
-    val proxScopes = scopes.getOrElse(Nil)
-    // time travel composes with every mode: the pre-pinned manifest rides
-    // into the query, and mid-query expiry overtakes surface the loud
-    // retention contract, exactly like queryAt
+    // --lucene (r7): every other query flag must be ABSENT (its meaning
+    // lives in the string)
+    require(!lucene || (opt("--mode").isEmpty && notText.isEmpty &&
+        shouldText.isEmpty && qFilter.isEmpty),
+      "--lucene puts the whole query in the string: it does not combine " +
+      "with --mode/--not/--should/--role/--tool/--from/--to/--conv/--naive " +
+      "(--min-match, --scopes and --snapshot still apply)")
+    val (tree, filter) =
+      if (lucene) {
+        val (b, f) = graft.query.QueryParser.parse(q)
+        (b.copy(minShould = minMatch), f)
+      } else (mode match {
+        case "AND" => Bool(Vector(q), shouldText.toVector, notText.toVector, None, minMatch)
+        case "OR" => Bool(should = Vector(q), minShould = 1)
+        case "SHOULD" => Bool(should = Vector(q), minShould = minMatch)
+        case "PHRASE" => Bool(phrase = Some(Phrase(q)))
+        case "NEAR" => Bool(phrase = Some(Phrase(q, Some(slop), a.contains("--ordered"))))
+        case "PREFIX" => Expand(Prefix, q)
+        case "FUZZY" => Expand(Fuzzy(edits, prefixLen), q)
+        case _ => Expand(Wildcard, q)
+      }, qFilter)
+    // pin the historical manifest BEFORE querying: the preview below must
+    // not re-resolve it after the query (a concurrent writer's expiry
+    // between the two would crash with a raw FileNotFound instead of the
+    // loud retention message). Validate retention FIRST for the same
+    // reason — an already-expired snapshot must surface the loud
+    // retained-versions message, not a raw FileNotFoundException from
+    // this pre-pin (ADVICE r04 item 4). Wrapping the parse, and the query
+    // below, in withExpiryDiagnosis turns both an already-expired
+    // snapshot and an expiry racing them into the loud retention message.
+    val pinned = snapshot.map { v =>
+      val retained = graft.index.IndexManifest.versions(root)
+      require(retained.contains(v),
+        s"snapshot $v not available at $root (expired or never " +
+        s"committed); retained: ${retained.mkString(",")}")
+      SearchEngine.withExpiryDiagnosis(root, v) {
+        graft.index.IndexManifest.readVersionCached(root, v)
+      }
+    }
     def diagnosed(body: => Vector[graft.model.SearchHit]) = pinned match {
       case Some(m) => SearchEngine.withExpiryDiagnosis(root, m.snapshotId)(body)
       case None => body
     }
-    // --lucene (r7): the whole query in ONE Lucene-style string —
-    // +must should -not "phrase"~slop role:x tool:y ts:[a TO b] —
-    // parsed by QueryParser onto the same executors; every other query
-    // flag must then be ABSENT (its meaning lives in the string)
-    require(!a.contains("--lucene") ||
-      (opt("--mode").isEmpty && notText.isEmpty && shouldText.isEmpty &&
-        qFilter.isEmpty && conv.isEmpty && !a.contains("--naive")),
-      "--lucene puts the whole query in the string: it does not combine " +
-      "with --mode/--not/--should/--role/--tool/--from/--to/--conv/--naive " +
-      "(--min-match, --scopes and --snapshot still apply)")
+    val spark = CliSession.session("graft-query")
+    val t0 = System.nanoTime()
     val hits =
-      if (a.contains("--lucene"))
-        diagnosed(graft.query.QueryParser.search(spark, root, q, k,
-          minMatch, proxScopes, pinned, after))
-      else if (mode == "PHRASE")
-        diagnosed(SearchEngine.phraseTopK(spark, root, q, k, proxScopes,
-          pinned, qFilter))
-      else if (mode == "NEAR")
-        diagnosed(SearchEngine.nearTopK(spark, root, q, slop, k, proxScopes,
-          pinned, ordered = a.contains("--ordered"), filter = qFilter))
-      else if (mode == "PREFIX")
-        diagnosed(SearchEngine.prefixTopK(spark, root, q, k, proxScopes,
-          pinned, qFilter))
-      else if (mode == "FUZZY")
-        diagnosed(SearchEngine.fuzzyTopK(spark, root, q, edits, k, prefixLen,
-          proxScopes, pinned, qFilter))
-      else if (mode == "WILDCARD")
-        diagnosed(SearchEngine.wildcardTopK(spark, root, q, k, proxScopes,
-          pinned, qFilter))
-      else if (mode == "SHOULD")
-        diagnosed(SearchEngine.queryShould(spark, root, q, minMatch, k,
-          proxScopes, pinned, qFilter, after))
-      else if (shouldText.isDefined)
-        diagnosed(SearchEngine.queryBool(spark, root, q, shouldText.get,
-          notText.getOrElse(""), minMatch, k, proxScopes, pinned, qFilter,
-          after))
-      else if (notText.isDefined)
-        diagnosed(SearchEngine.queryNot(spark, root, q, notText.get, k,
-          proxScopes, pinned, qFilter, after))
-      else if (a.contains("--naive"))
+      if (naive)
         SearchEngine.queryNaive(spark, root, q, mode, k).collect()
           .map(r => graft.model.SearchHit(r.getLong(0), r.getDouble(1))).toVector
-      else (snapshot, scopes.orElse(conv.map(Seq(_)))) match {
-        case (Some(v), ss) =>
-          SearchEngine.queryAt(spark, root, v, q, mode, k, ss.getOrElse(Nil),
-            qFilter, after)
-        case (None, Some(ss)) =>
-          SearchEngine.queryScoped(spark, root, q, mode, k, ss, qFilter)
-        case _ =>
-          SearchEngine.query(spark, root, q, mode, k, None, qFilter, after)
-      }
+      else diagnosed(SearchEngine.search(spark, root, tree, k, scopes, pinned,
+        filter, after))
     val ms = (System.nanoTime() - t0) / 1e6
     val modeLabel =
       if (mode == "NEAR" && a.contains("--ordered")) s"ONEAR~$slop"
@@ -376,11 +345,8 @@ object Query {
     // follow — print the exact-bits cursor for the next page. Offset
     // pagination re-walks everything it skips; the cursor walk stays
     // O(k) at any depth, the 100 TB-serving shape.
-    val pageable = ((Set("AND", "OR", "SHOULD").contains(mode) &&
-      !a.contains("--naive") && !a.contains("--lucene")) ||
-      shouldText.isDefined ||
-      (a.contains("--lucene") && !q.contains("\""))) &&
-      conv.isEmpty && scopes.isEmpty
+    val pageable = !naive && scopes.isEmpty &&
+      (tree match { case b: Bool => b.phrase.isEmpty; case _ => false })
     if (pageable && hits.size == k)
       hits.lastOption.foreach { h =>
         println(s"  next: --after " +

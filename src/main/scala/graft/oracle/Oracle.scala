@@ -389,8 +389,8 @@ final class Oracle(corpus: Seq[Turn],
     expansionTopKScoped(expanded, k, prefixes)
   }
 
-  /** Scoped expansion union (engine parity: SearchEngine.expansionTopK
-    * with scopes): the expansion stays GLOBAL (and globally capped), each
+  /** Scoped expansion union (engine parity: SearchEngine.search of a
+    * Query.Expand with scopes): the expansion stays GLOBAL (and globally capped), each
     * scope keeps the expansion terms with scoped df > 0 and scores with
     * per-scope stats, best instance per doc. */
   private def expansionTopKScoped(expanded: Vector[String], k: Int,

@@ -11,9 +11,10 @@ import graft.model.{QueryFilter, SearchHit}
   *   `+spark merge shuffle -join role:user ts:[2024-01-01 TO *]`
   *
   * and get the combined BooleanQuery + filters it denotes. The parser
-  * maps syntax onto the ALREADY-VERIFIED executors — it introduces no
-  * new query semantics, only notation (QueryParserSpec pins each
-  * dispatch bit-equal to the direct call).
+  * builds a [[Query]] tree and a [[graft.model.QueryFilter]] and hands
+  * them to [[SearchEngine.search]] — it introduces no new query
+  * semantics, only notation (QueryParserSpec pins each string bit-equal
+  * to the facade call that builds the same tree).
   *
   * Grammar (whitespace-separated clauses; a deliberate, documented
   * subset of Lucene's — no parentheses, no AND/OR/NOT keyword
@@ -29,34 +30,35 @@ import graft.model.{QueryFilter, SearchHit}
   *           | '"' terms '"' ('~' slop)?          — phrase / proximity
   *           | term ('^' boost)?                   — boost: Lucene term^b
   *
-  * Dispatch rules (all Lucene parity unless noted):
-  *   - only SHOULD clauses → at least one must match ([[SearchEngine
-  *     .queryShould]] via [[SearchEngine.queryBool]]);
-  *   - MUST present → SHOULD clauses only boost (minimumShouldMatch 0;
-  *     raise via the `minShouldMatch` parameter);
-  *   - a bare quoted phrase (no other TEXT clauses; filters compose
-  *     fine) → [[SearchEngine.phraseTopK]]; with `~N` →
-  *     [[SearchEngine.nearTopK]] unordered slop N (NOTE: our window is
+  * Syntax → tree (all Lucene parity unless noted):
+  *   - `+t` → `Bool.must`, `-t` → `Bool.not`, bare `t` → `Bool.should`,
+  *     in query order; `minShould` is the `minShouldMatch` parameter of
+  *     [[search]] (default 0). The engine's clause algebra then gives
+  *     Lucene's rules: only SHOULD clauses → at least one must match;
+  *     MUST present → SHOULD clauses only boost unless `minShould` > 0;
+  *     `minShould` > 0 with no SHOULD clause left → empty;
+  *   - `"a b"` → `Bool.phrase = Phrase("a b")` (exact phrase); `"a b"~N`
+  *     → `Phrase("a b", Some(N))`, unordered slop N (NOTE: our window is
   *     slop+1 WIDE and order-free — documented divergence from Lucene's
-  *     edit-distance phrase slop, see nearTopK's scaladoc);
-  *   - field clauses are FILTERS: `-role:x` (a negated filter) and
-  *     `+role:x` are REFUSED — filters are required by nature and the
-  *     engine has no NOT-filter plan; a prefixed field clause is almost
-  *     always a typo for a different query;
+  *     edit-distance phrase slop, see [[SearchEngine.nearTopK]]). Alone it
+  *     is the bare phrase/NEAR query; next to term clauses it is a
+  *     required positional clause of the same Bool (unscoped only —
+  *     composed + scopes refuses). At most one phrase; negated phrases
+  *     are REFUSED;
+  *   - `term^b` → `Bool.boosts(term) = b`, multiplying that clause's BM25
+  *     contribution (finite, > 0 — Lucene per-clause boost; bounds scale
+  *     with it so WAND pruning stays exact). Boosting a MUST_NOT clause
+  *     (never scored), a filter, or a phrase is REFUSED;
+  *   - `role:x`, `tool:y`, `ts:[a TO b]` → the [[graft.model.QueryFilter]]
+  *     (FILTERS: required, never scored). `-role:x` and `+role:x` are
+  *     REFUSED — the engine has no NOT-filter plan and a prefixed field
+  *     clause is almost always a typo; duplicate role:/tool: filters and
+  *     multiple ts: ranges are REFUSED (a conjunction of two different
+  *     role equalities is always empty — another typo trap); a query of
+  *     filters only is REFUSED (no match-all walk);
   *   - an unknown `field:` prefix is REFUSED loudly (the analyzer would
   *     otherwise silently split `foo:bar` into two text terms — typo
-  *     protection beats silent broadening);
-  *   - a phrase WITH other text clauses → [[SearchEngine
-  *     .queryBoolPhrase]], the composed executor (r7: the phrase is a
-  *     required positional clause next to MUST/SHOULD/MUST_NOT;
-  *     unscoped only — composed + scopes refuses);
-  *   - duplicate role:/tool: filters and multiple ts: ranges are
-  *     REFUSED (a conjunction of two different role equalities is
-  *     always empty — another typo trap);
-  *   - `term^b` multiplies that clause's BM25 contribution by b
-  *     (finite, > 0 — Lucene per-clause boost; bounds scale with it so
-  *     WAND pruning stays exact). Boosting a MUST_NOT clause (never
-  *     scored), a filter, or a phrase is REFUSED.
+  *     protection beats silent broadening).
   */
 /** Shared UTC timestamp parsing for ts filters (QueryParser's ts:[..]
   * bounds and the CLI's --from/--to): epoch millis, or
@@ -79,22 +81,16 @@ object TsParse {
 
 object QueryParser {
 
-  /** A parsed query string: raw clause texts (analysis happens inside
-    * the executors, exactly as if the caller had passed them directly). */
-  final case class Parsed(must: Vector[String] = Vector.empty,
-                          should: Vector[String] = Vector.empty,
-                          not: Vector[String] = Vector.empty,
-                          phrase: Option[(String, Option[Int])] = None,
-                          filter: QueryFilter = QueryFilter.Empty,
-                          boosts: Map[String, Double] = Map.empty)
-
   private val KnownFields = Set("role", "tool", "ts")
 
-  def parse(q: String): Parsed = {
+  /** A query string as its tree (raw clause texts — analysis happens in
+    * [[SearchEngine.search]], exactly as if the caller had built the tree
+    * directly) and its filter. */
+  def parse(q: String): (Query.Bool, QueryFilter) = {
     var must = Vector.empty[String]
     var should = Vector.empty[String]
     var not = Vector.empty[String]
-    var phrase: Option[(String, Option[Int])] = None
+    var phrase: Option[Query.Phrase] = None
     var role: Option[String] = None
     var tool: Option[String] = None
     var tsFrom: Option[java.sql.Timestamp] = None
@@ -133,7 +129,7 @@ object QueryParser {
         require(op != '-', "negated phrases are not supported " +
           "(a MUST_NOT phrase clause has no executor); rephrase")
         require(phrase.isEmpty, "at most one phrase clause per query")
-        phrase = Some((body, slop))
+        phrase = Some(Query.Phrase(body, slop))
       } else {
         // bare token up to whitespace — with the ts:[...] bracket rule
         val start = i
@@ -210,8 +206,15 @@ object QueryParser {
       }
       skipWs()
     }
-    Parsed(must, should, not, phrase,
-      QueryFilter(role, tool, tsFrom, tsTo), boosts)
+    val filter = QueryFilter(role, tool, tsFrom, tsTo)
+    // filters-only would need a match-all-docs walk the engine does not
+    // have (and almost certainly means a forgotten term) — refuse, like
+    // the other typo traps, instead of answering empty
+    require(phrase.nonEmpty || must.nonEmpty || should.nonEmpty ||
+        not.nonEmpty || filter.isEmpty,
+      "a filters-only query needs at least one text clause " +
+      "(role:/tool:/ts: restrict a text query, they do not enumerate)")
+    (Query.Bool(must, should, not, phrase, boosts = boosts), filter)
   }
 
   /** One range bound: '*' (open), epoch millis, or
@@ -223,52 +226,15 @@ object QueryParser {
     else Some(TsParse.utcTimestamp(v).getOrElse(sys.error(
       s"ts bound '$v' is not epoch millis, yyyy-MM-dd[ HH:mm:ss] or *")))
 
-  /** Parse + dispatch (see the object scaladoc's rules). Composes with
-    * scopes, time travel (`pinned`) and k exactly like the direct
-    * calls — it IS the direct calls. */
+  /** Parse, then ONE [[SearchEngine.search]] call: composes with
+    * scopes, time travel (`pinned`), k and `after` exactly like the
+    * facades — it IS the facades' planner. */
   def search(spark: SparkSession, root: String, q: String, k: Int = 10,
              minShouldMatch: Int = 0, scopes: Seq[String] = Nil,
              pinned: Option[Manifest] = None,
              after: Option[SearchHit] = None): Vector[SearchHit] = {
-    val p = parse(q)
-    // filters-only would need a match-all-docs walk the engine does not
-    // have (and almost certainly means a forgotten term) — refuse, like
-    // the other typo traps, instead of answering empty
-    require(p.phrase.nonEmpty || p.must.nonEmpty || p.should.nonEmpty ||
-        p.not.nonEmpty || p.filter.isEmpty,
-      "a filters-only query needs at least one text clause " +
-      "(role:/tool:/ts: restrict a text query, they do not enumerate)")
-    require(after.isEmpty || p.phrase.isEmpty,
-      "search_after pages term queries only (phrase/NEAR have no page " +
-      "cursor yet)")
-    val hasClauses = p.must.nonEmpty || p.should.nonEmpty || p.not.nonEmpty
-    require(p.phrase.isEmpty || !hasClauses || scopes.isEmpty,
-      "a composed phrase+clauses query does not (yet) combine with " +
-      "--scopes; scope the plain phrase or the boolean query instead")
-    p.phrase match {
-      case Some((body, slopOpt)) if hasClauses =>
-        SearchEngine.queryBoolPhrase(spark, root, body, slopOpt,
-          p.must.mkString(" "), p.should.mkString(" "),
-          p.not.mkString(" "), minShouldMatch, k, pinned, p.filter,
-          p.boosts)
-      case Some((body, slopOpt)) =>
-        // Lucene clause accounting: minimumShouldMatch > 0 with ZERO
-        // SHOULD clauses is unsatisfiable ⇒ match nothing (the term-only
-        // paths get this from queryBool; the bare-phrase dispatch must
-        // not silently drop the requirement — r7 review)
-        if (minShouldMatch > 0) Vector.empty
-        else slopOpt match {
-          case None =>
-            SearchEngine.phraseTopK(spark, root, body, k, scopes, pinned,
-              p.filter)
-          case Some(slop) =>
-            SearchEngine.nearTopK(spark, root, body, slop, k, scopes, pinned,
-              ordered = false, filter = p.filter)
-        }
-      case None =>
-        SearchEngine.queryBool(spark, root, p.must.mkString(" "),
-          p.should.mkString(" "), p.not.mkString(" "), minShouldMatch, k,
-          scopes, pinned, p.filter, after, p.boosts)
-    }
+    val (tree, filter) = parse(q)
+    SearchEngine.search(spark, root, tree.copy(minShould = minShouldMatch), k,
+      scopes, pinned, filter, after)
   }
 }

@@ -9,12 +9,26 @@ import graft.model.{CorpusStats, QueryFilter, QuerySpec, SearchHit, TermStats}
 
 /** Query engine over a built index (SURVEY.md §3.1 Spark lifecycle, §7.5).
   *
-  * Every public query mode is a thin facade: it analyzes its text, plans
-  * its terms in the corpus view or in one view per scope (dictionary or
-  * scoped dfs, stop cap, df-asc order) and hands ONE private clause value
-  * ([[Clauses]]: scored required and should terms, minShould, prohibited
-  * terms, weightless filters, boosts, an optional proximity part) to ONE
-  * shard-local executor ([[execute]]). The executor scans the pruned
+  * A query is a value: every public query mode is a one-call facade that
+  * builds a [[Query]] tree and hands it to [[search]], the one planner.
+  * Three steps take a tree to the executor:
+  *
+  *  1. tree → [[Resolved]]: pin the manifest, analyze the clause texts
+  *     with its analyzer and settle clause overlaps with one algebra
+  *     (must ∩ phrase dedupes, SHOULD terms already required count as
+  *     satisfied, must_not ∩ phrase is empty). The resolved value is also
+  *     the result-memo key;
+  *  2. resolved → [[Clauses]], per view (the corpus, or one view per
+  *     scope with scoped statistics): resolve the filter, look up the
+  *     whole term universe once (dictionary or scoped dfs, or an
+  *     expansion's own dfs), keep each clause family by its rule (phrase
+  *     terms uncapped and all-or-nothing, MUST and SHOULD terms
+  *     drop-unknown and stop-capped, expansions uncapped), apply the
+  *     early-empty rules;
+  *  3. [[Clauses]] → hits: ONE private clause value (scored required and
+  *     should terms, minShould, prohibited terms, weightless filters,
+  *     boosts, an optional proximity part) goes to ONE shard-local
+  *     executor ([[execute]]). The executor scans the pruned
   * postings once, decodes them and splits each shard's cursors by role in
   * `mapPartitions` (zero per-query shuffle), applies the presence gates,
   * then runs the walk the clause shape picks and merges the per-shard
@@ -108,17 +122,14 @@ object SearchEngine {
             filter: QueryFilter = QueryFilter.Empty,
             after: Option[SearchHit] = None): Vector[SearchHit] = {
     requireMode(mode)
-    convPrefix match {
-      case Some(pre) =>
-        require(after.isEmpty, ScopedAfterError)
-        queryScoped(spark, root, queryText, mode, k, Seq(pre), filter)
-      case None =>
-        val m = pinnedManifest(root)
-        termQuery(spark, root, m,
-          Analyzer.analyzeQueryFor(m.analyzerVersion, queryText), mode, k,
-          Nil, filter, after)
-    }
+    search(spark, root, termTree(queryText, mode), k, convPrefix.toSeq,
+      filter = filter, after = after)
   }
+
+  /** AND = every term required; OR = at least one of them. */
+  private def termTree(text: String, mode: String): Query.Bool =
+    if (mode == "AND") Query.Bool(must = Vector(text))
+    else Query.Bool(should = Vector(text), minShould = 1)
 
   /** search_after (r7) is single-walk only: a multi-scope union keeps
     * each doc's BEST-instance score, and a per-scope after-cursor walk
@@ -128,20 +139,6 @@ object SearchEngine {
     "search_after does not compose with scopes/conv (a scoped union " +
     "keeps best-instance scores; page the unscoped query or one scope's " +
     "results client-side)"
-
-  /** Exact memo-key fragment for a search_after cursor (bit-exact via
-    * doubleToLongBits — two cursors with equal printed scores but
-    * different bits must not share a cache entry). */
-  private def afterKey(after: Option[SearchHit]): String =
-    after.map(h =>
-      s"${java.lang.Double.doubleToLongBits(h.score)}:${h.docId}")
-      .getOrElse("")
-
-  /** Memo-key fragment for a resolved boost map (bit-exact, order-free). */
-  private def boostKey(boostOf: Map[String, Double]): String =
-    if (boostOf.isEmpty) ""
-    else boostOf.toSeq.sortBy(_._1).map { case (t, b) =>
-      s"$t^${java.lang.Double.doubleToLongBits(b)}" }.mkString(":", ",", "")
 
   /** Resolve a [[QueryFilter]] against one pinned snapshot: the encoded
     * field terms (weightless posting cursors) + the ts-range docId
@@ -209,21 +206,17 @@ object SearchEngine {
               filter: QueryFilter = QueryFilter.Empty,
               after: Option[SearchHit] = None): Vector[SearchHit] = {
     requireMode(mode)
-    require(after.isEmpty || scopes.isEmpty, ScopedAfterError)
     val retained = IndexManifest.versions(root)
     require(retained.contains(snapshotId),
       s"snapshot $snapshotId not available at $root (expired or never " +
       s"committed); retained: ${retained.mkString(",")}")
-    withExpiryDiagnosis(root, snapshotId) {
-      // the manifest parse itself can lose the race with expiry (cold
-      // cache miss after versions() listed the snapshot) — keep it
-      // inside the diagnosis wrapper so it fails loudly, not raw.
-      // Scoped time travel: scope/segment/df memos key by snapshot id
-      val m = IndexManifest.readVersionCached(root, snapshotId)
-      val terms = Analyzer.analyzeQueryFor(m.analyzerVersion, queryText)
-      if (terms.isEmpty && scopes.nonEmpty) Vector.empty
-      else termQuery(spark, root, m, terms, mode, k, scopes, filter, after)
-    }
+    // the manifest parse itself can lose the race with expiry (cold cache
+    // miss after versions() listed the snapshot) — keep it inside the
+    // diagnosis wrapper so it fails loudly, not raw. Scoped time travel:
+    // scope/segment/df memos key by snapshot id
+    withExpiryDiagnosis(root, snapshotId)(search(spark, root,
+      termTree(queryText, mode), k, scopes,
+      Some(IndexManifest.readVersionCached(root, snapshotId)), filter, after))
   }
 
   /** Rethrow scan failures against a pinned snapshot whose retention was
@@ -262,88 +255,232 @@ object SearchEngine {
                   mode: String, k: Int, scopes: Seq[String],
                   filter: QueryFilter = QueryFilter.Empty): Vector[SearchHit] = {
     requireMode(mode)
-    val m = pinnedManifest(root)
-    val terms = Analyzer.analyzeQueryFor(m.analyzerVersion, queryText)
-    if (terms.isEmpty || scopes.isEmpty) Vector.empty
-    else termQuery(spark, root, m, terms, mode, k, scopes, filter)
+    if (scopes.isEmpty) Vector.empty
+    else search(spark, root, termTree(queryText, mode), k, scopes, filter = filter)
   }
 
-  /** AND/OR over analyzed terms against ONE pinned snapshot (see
-    * [[pinnedManifest]]), in the corpus view or per scope. Terms absent
-    * from the dictionary (or the scope) are silently DROPPED and the rest
-    * searched (reference SearchServiceImpl.java:145-148
-    * filter(Objects::nonNull)); empty only when nothing survives. Filters
-    * compose with scopes: per-scope STATISTICS stay those of the whole
-    * scope (filters never re-weigh — Lucene FILTER semantics), the walk
-    * runs over scope ∩ ts segments, field cursors probe in-walk. */
-  private def termQuery(spark: SparkSession, root: String, m: Manifest,
-                        terms: Vector[String], mode: String, k: Int,
-                        scopes: Seq[String], filter: QueryFilter,
-                        after: Option[SearchHit] = None): Vector[SearchHit] =
-    memoized(root,
-      QueryKey(terms, mode, k, scopes, m.snapshotId, filter.cacheKey,
-        afterKey(after))) {
-      val (fterms, tsRanges) = resolveFilter(spark, root, m, filter)
-      overViews(spark, root, m, scopes, k, terms) { v =>
-        val ts = kept(v, terms, capped = true)
-        if (ts.isEmpty) Vector.empty
-        else execute(spark, root, m, modeClauses(ts, mode, fterms), v.stats, k,
-          combineRanges(v.ranges, tsRanges), after)
+  /** THE planner: answer one [[Query]] tree against ONE pinned snapshot
+    * (see [[pinnedManifest]]; `pinned` for time travel), in the corpus
+    * view or per scope (`scopes`: conv-id prefixes, per-scope statistics,
+    * best-instance union), restricted by the weightless `filter` and paged
+    * after the `after` cursor. In order: validate (before any Spark job),
+    * pin, analyze and settle clause overlaps ([[resolve]] — an
+    * unsatisfiable query answers empty here), then under the memo key
+    * [[Resolved]]: expand a multi-term pattern ([[expansion]]), resolve
+    * the filter, look up each view's term universe ([[overViews]]), keep
+    * each clause family by its rule, apply the early-empty rules and
+    * [[execute]].
+    *
+    * Clause rules (each dedicated mode's contract, Lucene BooleanQuery
+    * algebra): MUST terms absent from the dictionary (or the scope) are
+    * DROPPED and the rest searched (reference SearchServiceImpl.java:
+    * 145-148 filter(Objects::nonNull)) — empty only when no required term
+    * survives; MUST and SHOULD terms take the stop cap; phrase terms take
+    * no cap and ANY absent phrase term answers empty; a SHOULD clause that
+    * can never match (unknown, capped or prohibited) still COUNTS toward
+    * `minShould`; a surviving MUST term that is also MUST_NOT answers
+    * empty; MUST_NOT terms are never dropped or scored. Filters compose
+    * with scopes: per-scope STATISTICS stay those of the whole scope
+    * (filters never re-weigh — Lucene FILTER semantics), the walk runs
+    * over scope ∩ ts segments, field cursors probe in-walk. */
+  def search(spark: SparkSession, root: String, query: Query, k: Int = 10,
+             scopes: Seq[String] = Nil, pinned: Option[Manifest] = None,
+             filter: QueryFilter = QueryFilter.Empty,
+             after: Option[SearchHit] = None): Vector[SearchHit] = {
+    require(k >= 1, s"k must be >= 1, got $k")
+    require(after.isEmpty || scopes.isEmpty, ScopedAfterError)
+    query match {
+      case b: Query.Bool =>
+        require(b.minShould >= 0, s"minShouldMatch must be >= 0, got ${b.minShould}")
+        b.phrase.flatMap(_.slop).foreach(n => require(n >= 0, s"slop must be >= 0, got $n"))
+        require(after.isEmpty || b.phrase.isEmpty,
+          "search_after pages term queries only (phrase/NEAR have no page cursor yet)")
+        require(b.phrase.isEmpty || scopes.isEmpty ||
+            !(b.must ++ b.should ++ b.not).exists(_.trim.nonEmpty),
+          "a composed phrase+clauses query does not (yet) combine with " +
+          "--scopes; scope the plain phrase or the boolean query instead")
+      case Query.Expand(Query.Fuzzy(edits, prefixLen), _) =>
+        require(edits >= 0 && edits <= MaxFuzzyEdits,
+          s"maxEdits must be in [0, $MaxFuzzyEdits] (Lucene FuzzyQuery limit), got $edits")
+        require(prefixLen >= 0, s"prefixLength must be >= 0, got $prefixLen")
+      case _ =>
+    }
+    val m = pinned.getOrElse(pinnedManifest(root))
+    resolve(m, query, k, scopes, filter, after) match {
+      case None => Vector.empty
+      case Some(r) => memoized(root, r) {
+        val found = r.expand.map(expansion(spark, root, m, _))
+        val should = found.fold(r.should)(_.map(_.term))
+        val (fterms, tsRanges) = resolveFilter(spark, root, m, filter)
+        val slots = r.phrase.distinct.sorted
+        val universe = slots ++ r.must ++ should
+        if (universe.isEmpty) Vector.empty // an expansion that found nothing
+        else overViews(spark, root, m, scopes, k, universe,
+            found.fold(Map.empty[String, Long])(_.map(t => t.term -> t.df).toMap)) { v =>
+          val phraseKept = kept(v, slots, capped = false)
+          val required = phraseKept ++ kept(v, r.must, capped = true)
+          val shouldKept = kept(v, should, capped = found.isEmpty)
+          if (phraseKept.size < slots.size || required.isEmpty && r.must.nonEmpty) Vector.empty
+          else if (required.exists(t => r.not.contains(t.term))) Vector.empty
+          else if (shouldKept.size < r.needShould) Vector.empty
+          else execute(spark, root, m,
+            Clauses(required, shouldKept, r.minShould, r.not, fterms, r.boosts,
+              if (slots.isEmpty) None else Some(proximity(r.phrase, r.slop, r.ordered))),
+            v.stats, k, combineRanges(v.ranges, tsRanges), after)
+        }
       }
     }
+  }
+
+  /** A query tree resolved against one snapshot — analyzed, with clause
+    * overlaps settled — plus its plan inputs. Every field that can change
+    * an answer is here, so it is the result-memo key as it stands:
+    * `phrase` is the analyzed token sequence (empty = no phrase clause),
+    * `must` the MUST terms outside it, `should` the SHOULD terms neither
+    * required nor prohibited, `minShould` the SHOULD count left once
+    * auto-satisfied clauses are subtracted, `not` the sorted MUST_NOT
+    * terms, `boosts` keyed by analyzed term, `expand` a folded multi-term
+    * pattern still to expand (its terms then form the SHOULD family). */
+  private final case class Resolved(k: Int, scopes: Seq[String], snapshotId: Long,
+                                    filter: QueryFilter, after: Option[SearchHit],
+                                    phrase: Vector[String] = Vector.empty,
+                                    slop: Option[Int] = None, ordered: Boolean = false,
+                                    must: Vector[String] = Vector.empty,
+                                    should: Vector[String] = Vector.empty,
+                                    minShould: Int = 0,
+                                    not: Vector[String] = Vector.empty,
+                                    boosts: Map[String, Double] = Map.empty,
+                                    expand: Option[Query.Expand] = None) {
+    /** SHOULD matches a doc needs: Lucene's at-least-one rule applies
+      * when no clause is required. */
+    def needShould: Int =
+      if (phrase.isEmpty && must.isEmpty) math.max(1, minShould) else minShould
+  }
+
+  /** Analyze `q` with `m`'s analyzer and settle clause overlaps (Lucene
+    * clause algebra, documented deviations): a MUST term inside the phrase
+    * dedupes into it; a SHOULD term that is also required is satisfied on
+    * every candidate, so it leaves the SHOULD set and `minShould` drops by
+    * one per such term (set semantics, never double-counted); a SHOULD
+    * term that is also MUST_NOT stays in the count but can never match.
+    * None = unsatisfiable before any lookup: a MUST_NOT term inside the
+    * phrase (every phrase hit holds it), fewer SHOULD terms than the count
+    * requirement, nothing to search, or an empty expansion pattern. */
+  private def resolve(m: Manifest, q: Query, k: Int, scopes: Seq[String],
+                      filter: QueryFilter, after: Option[SearchHit]): Option[Resolved] = {
+    val base = Resolved(k, scopes, m.snapshotId, filter, after)
+    val ver = m.analyzerVersion
+    q match {
+      case Query.Expand(kind, raw) =>
+        // multi-term queries bypass analysis: folded, never stemmed
+        val pat = if (kind == Query.Wildcard) Analyzer.foldWildcard(raw)
+                  else Analyzer.foldPrefix(raw)
+        if (pat.isEmpty) None
+        else Some(base.copy(expand = Some(Query.Expand(kind, pat)), minShould = 1))
+      case b: Query.Bool =>
+        def terms(texts: Vector[String]) = Analyzer.analyzeQueryFor(ver, texts.mkString(" "))
+        // raw boost keys resolve to analyzed terms ONCE; a boosted
+        // contribution is boost × BM25, applied alike in cursors, bounds
+        // and the oracle
+        val boosts = Analyzer.resolveBoosts(ver, b.boosts)
+        val seq = b.phrase.fold(Vector.empty[String])(p => Analyzer.tokensFor(ver, p.text))
+        val must = terms(b.must)
+        val not = terms(b.not).sorted
+        val shouldRaw = terms(b.should)
+        val required = must.toSet ++ seq
+        val r = base.copy(phrase = seq, slop = b.phrase.flatMap(_.slop),
+          ordered = b.phrase.exists(_.ordered), must = must.filterNot(seq.contains),
+          should = shouldRaw.filterNot(t => required(t) || not.contains(t)),
+          minShould = math.max(0, b.minShould - shouldRaw.count(required)),
+          not = not, boosts = boosts)
+        if (not.exists(seq.contains) || r.needShould > r.should.size) None else Some(r)
+    }
+  }
+
+  /** The dictionary terms a multi-term query denotes (Lucene's
+    * scoring-BooleanQuery rewrite): one pushable probe of the tiny
+    * term_stats table — O(matching terms) collected, never the
+    * dictionary. Field terms can never match: term_stats excludes the
+    * reserved namespace by construction (IndexBuilder.termStatsAgg).
+    * More than [[MaxPrefixExpansions]] matches REFUSE (TooManyClauses). */
+  private def expansion(spark: SparkSession, root: String, m: Manifest,
+                        e: Query.Expand): Vector[TermStats] = {
+    import spark.implicits._
+    val pat = e.pattern
+    val base = termStatsFor(spark, root, m)
+    def startingWith(pre: String) = if (pre.isEmpty) base else base.filter($"term".startsWith(pre))
+    val (probe, what, hint) = e.kind match {
+      case Query.Prefix => (startingWith(pat), s"prefix '$pat*'", "narrow the prefix")
+      case Query.Fuzzy(edits, prefixLen) =>
+        // the cheap necessary conditions first (optional exact-prefix cut,
+        // length band), the codegen'd levenshtein builtin last. CODE-POINT
+        // length on both sides: Spark's length()/levenshtein() count code
+        // points, so the band must too or an astral-plane char in the
+        // pattern would shift it by one
+        val qCp = pat.codePointCount(0, pat.length)
+        (startingWith(pat.take(prefixLen))
+          .filter(length($"term").between(qCp - edits, qCp + edits))
+          .filter(levenshtein($"term", lit(pat)) <= edits),
+          s"fuzzy '$pat'~$edits", "lower maxEdits or raise prefixLength")
+      case Query.Wildcard =>
+        // the literal prefix before the first metacharacter is the cut
+        (startingWith(pat.takeWhile(c => c != '*' && c != '?'))
+          .filter($"term".like(pat.replace('*', '%').replace('?', '_'))),
+          s"wildcard '$pat'", "narrow the pattern")
+    }
+    val found = termStatsRows(probe)
+    if (found.size > MaxPrefixExpansions) throw new IllegalArgumentException(
+      s"$what expands to ${found.size} dictionary terms (max " +
+      s"$MaxPrefixExpansions) — refusing an unbounded disjunction; $hint")
+    found
+  }
 
   /** The statistics one query is planned and scored in: the whole corpus
     * (`ranges` None) or one conv-prefix scope with per-scope N, avgdl,
     * dfs and docId segments (the reference's per-site semantics,
-    * LemmaRepository.findBySiteAndLemma). `dfs` looks up term dfs. */
+    * LemmaRepository.findBySiteAndLemma). `dfs` holds the dfs of the
+    * query's term universe; absent terms have none. */
   private final case class View(stats: CorpusStats,
                                 ranges: Option[Seq[(Long, Long)]],
-                                dfs: Seq[String] => Map[String, Long])
+                                dfs: Map[String, Long])
 
   /** Answer `body` in the corpus view, or in every scope's view and union
-    * the answers. A scope resolves its segments (memoized) and then the
-    * dfs of the query's whole term `universe` in ONE memoized pass; an
-    * empty scope answers nothing. The corpus view probes the dictionary
-    * once per lookup, except for terms whose df `known` already holds
-    * (an expansion's). ALL of a scope's segments go to ONE scan: the
+    * the answers. Each view looks up the dfs of the query's whole term
+    * `universe` ONCE: the corpus view in one dictionary probe (skipping
+    * terms whose df `known` already holds — an expansion's), a scope in
+    * one memoized pass after resolving its segments (memoized); an empty
+    * scope answers nothing. ALL of a scope's segments go to ONE scan: the
     * shard-local walk takes the ascending segment list with one cursor
     * pass and one heap, so a scope fragmented by out-of-order appends
     * costs one Spark job, not one per segment. */
   private def overViews(spark: SparkSession, root: String, m: Manifest,
                         scopes: Seq[String], k: Int, universe: Seq[String],
-                        known: Map[String, Long] = Map.empty)
+                        known: Map[String, Long])
                        (body: View => Vector[SearchHit]): Vector[SearchHit] =
-    if (scopes.isEmpty) body(corpusView(spark, root, m, known))
+    if (scopes.isEmpty)
+      body(View(CorpusStats(m.nDocs, m.avgdl, m.analyzerVersion), None, known ++
+        dictionary(spark, root, m, universe.filterNot(known.contains)).map(t => t.term -> t.df)))
     else unionBest(scopes.flatMap { pre =>
       val segs = scopeSegments(spark, root, m, pre)
       if (segs.isEmpty) Vector.empty
       else {
         val n = segs.map(_.n).sum
         val ranges = segs.map(s => (s.lo, s.hi))
-        val dfs = scopedTermDf(spark, root, m, pre, universe, ranges)
         body(View(CorpusStats(n, segs.map(_.sumDl).sum.toDouble / n,
-          m.analyzerVersion), Some(ranges), _ => dfs))
+          m.analyzerVersion), Some(ranges),
+          scopedTermDf(spark, root, m, pre, universe, ranges)))
       }
     }, k)
-
-  /** The corpus view: manifest statistics, dictionary dfs. */
-  private def corpusView(spark: SparkSession, root: String, m: Manifest,
-                         known: Map[String, Long] = Map.empty): View =
-    View(CorpusStats(m.nDocs, m.avgdl, m.analyzerVersion), None,
-      ts => known ++ dictionary(spark, root, m, ts.filterNot(known.contains))
-        .map(t => t.term -> t.df))
 
   /** A view's planned survivors of `terms`: df > 0, the stop cap
     * df <= 0.9·N when `capped`, canonical (df, term) order (O1: rarest
     * first). */
   private def kept(v: View, terms: Seq[String],
-                   capped: Boolean): Vector[TermStats] = {
-    val dfs = v.dfs(terms)
+                   capped: Boolean): Vector[TermStats] =
     terms.toVector
-      .flatMap(t => dfs.get(t).filter(_ > 0).map(TermStats(t, _, 0)))
+      .flatMap(t => v.dfs.get(t).filter(_ > 0).map(TermStats(t, _, 0)))
       .filter(t => !capped || t.df <= StopTermCap * v.stats.nDocs)
       .sortBy(t => (t.df, t.term))
-  }
 
   /** Multi-scope union: overlapping scopes keep each doc's best-scoring
     * instance, global (score DESC, docId ASC) order. */
@@ -1085,15 +1222,9 @@ object SearchEngine {
   def phraseTopK(spark: SparkSession, root: String, phraseText: String,
                  k: Int = 10, scopes: Seq[String] = Nil,
                  pinned: Option[Manifest] = None,
-                 filter: QueryFilter = QueryFilter.Empty): Vector[SearchHit] = {
-    val m = pinned.getOrElse(pinnedManifest(root))
-    val seq = Analyzer.tokensFor(m.analyzerVersion, phraseText)
-    if (seq.isEmpty) return Vector.empty
-    memoized(root,
-      QueryKey(seq, "PHRASE", k, scopes, m.snapshotId, filter.cacheKey)) {
-      proximityTopK(spark, root, m, proximity(seq, None), k, scopes, filter)
-    }
-  }
+                 filter: QueryFilter = QueryFilter.Empty): Vector[SearchHit] =
+    search(spark, root, Query.Bool(phrase = Some(Query.Phrase(phraseText))),
+      k, scopes, pinned, filter)
 
   /** NEAR/slop proximity top-k (order-free): documents whose ANALYZED
     * token stream has a window of `slop + 1` CONSECUTIVE positions
@@ -1132,21 +1263,10 @@ object SearchEngine {
                slop: Int, k: Int = 10, scopes: Seq[String] = Nil,
                pinned: Option[Manifest] = None,
                ordered: Boolean = false,
-               filter: QueryFilter = QueryFilter.Empty): Vector[SearchHit] = {
-    require(slop >= 0, s"slop must be >= 0, got $slop")
-    val m = pinned.getOrElse(pinnedManifest(root))
-    val seq = Analyzer.tokensFor(m.analyzerVersion, queryText)
-    if (seq.isEmpty) return Vector.empty
-    // ordered NEAR keeps the query SEQUENCE; unordered is over the
-    // distinct term set (memo keys as the respective analyses)
-    val key =
-      if (ordered) QueryKey(seq, s"ONEAR:$slop", k, scopes, m.snapshotId, filter.cacheKey)
-      else QueryKey(seq.distinct, s"NEAR:$slop", k, scopes, m.snapshotId, filter.cacheKey)
-    memoized(root, key) {
-      proximityTopK(spark, root, m, proximity(seq, Some(slop), ordered), k,
-        scopes, filter)
-    }
-  }
+               filter: QueryFilter = QueryFilter.Empty): Vector[SearchHit] =
+    search(spark, root,
+      Query.Bool(phrase = Some(Query.Phrase(queryText, Some(slop), ordered))),
+      k, scopes, pinned, filter)
 
   /** The proximity clause of an analyzed token sequence: the exact phrase
     * (`slop` None), the order-free slop window, or (`ordered`) the
@@ -1166,24 +1286,6 @@ object SearchEngine {
       case Some(n) =>
         Proximity(slots, pos => nearMatchPositions(pos, n),
           toks => nearMatch(toks, slotOf, slots.size, n))
-    }
-  }
-
-  /** Shared phrase/NEAR planner: per view (corpus or per scope) no stop
-    * cap and ANY proximity term absent ⇒ empty, then [[execute]] with the
-    * proximity clause. FILTER clauses (r7) compose: field cursors join
-    * the walk as weightless members and the ts segments intersect the
-    * walk ranges; scores and (scoped) statistics stay unfiltered. */
-  private def proximityTopK(spark: SparkSession, root: String, m: Manifest,
-                            prox: Proximity, k: Int, scopes: Seq[String],
-                            filter: QueryFilter): Vector[SearchHit] = {
-    val (fterms, tsRanges) = resolveFilter(spark, root, m, filter)
-    overViews(spark, root, m, scopes, k, prox.slots) { v =>
-      val ts = kept(v, prox.slots, capped = false)
-      if (ts.size < prox.slots.size) Vector.empty
-      else execute(spark, root, m,
-        Clauses(ts, filters = fterms, proximity = Some(prox)), v.stats, k,
-        combineRanges(v.ranges, tsRanges))
     }
   }
 
@@ -1367,28 +1469,17 @@ object SearchEngine {
     *    rather than running an unbounded disjunction.
     * The expansion probe is one pushable StringStartsWith filter over the
     * tiny term_stats table — O(matching terms) collected, never the
-    * dictionary; execution is the ordinary [[executePlan]] OR/WAND walk,
-    * so the whole query costs the same as an OR of the matched terms. */
+    * dictionary ([[expansion]]); execution is the ordinary OR/WAND walk,
+    * so the whole query costs the same as an OR of the matched terms.
+    * `scopes`: the expansion stays global (and globally capped); each
+    * scope re-weighs it with SCOPED dfs, terms absent from the scope drop
+    * out, and the union keeps each doc's best-scoring instance. */
   def prefixTopK(spark: SparkSession, root: String, prefixRaw: String,
                  k: Int = 10, scopes: Seq[String] = Nil,
                  pinned: Option[Manifest] = None,
-                 filter: QueryFilter = QueryFilter.Empty): Vector[SearchHit] = {
-    import spark.implicits._
-    val m = pinned.getOrElse(pinnedManifest(root))
-    val pre = Analyzer.foldPrefix(prefixRaw)
-    if (pre.isEmpty) return Vector.empty
-    memoized(root,
-      QueryKey(Vector(pre), "PREFIX", k, scopes, m.snapshotId, filter.cacheKey)) {
-      val found = termStatsRows(termStatsFor(spark, root, m)
-        .filter($"term".startsWith(pre)))
-      if (found.size > MaxPrefixExpansions)
-        throw new IllegalArgumentException(
-          s"prefix '$pre*' expands to ${found.size} dictionary terms " +
-          s"(max $MaxPrefixExpansions) — refusing an unbounded " +
-          "disjunction; narrow the prefix")
-      expansionTopK(spark, root, m, found, k, scopes, filter)
-    }
-  }
+                 filter: QueryFilter = QueryFilter.Empty): Vector[SearchHit] =
+    search(spark, root, Query.Expand(Query.Prefix, prefixRaw), k, scopes,
+      pinned, filter)
 
   /** Lucene FuzzyQuery hard limit: edit distances above 2 are useless for
     * typo tolerance and blow up the expansion, so Lucene refuses them —
@@ -1410,7 +1501,7 @@ object SearchEngine {
     *    shape) instead of scanning the whole dictionary. Lucene walks a
     *    Levenshtein automaton over its FST term dict; the columnar analog
     *    of that automaton's prefix cut is the pushed startsWith plus the
-    *    |len(t) − len(q)| ≤ maxEdits length band below;
+    *    |len(t) − len(q)| ≤ maxEdits length band of [[expansion]];
     *  - scoring is plain BM25 over the expansion with true per-term dfs
     *    (self-consistent with [[prefixTopK]] and oracle-expressible in
     *    SQL); Lucene additionally boosts each expanded term by
@@ -1421,39 +1512,9 @@ object SearchEngine {
                 maxEdits: Int = 2, k: Int = 10, prefixLength: Int = 0,
                 scopes: Seq[String] = Nil,
                 pinned: Option[Manifest] = None,
-                filter: QueryFilter = QueryFilter.Empty): Vector[SearchHit] = {
-    import spark.implicits._
-    require(maxEdits >= 0 && maxEdits <= MaxFuzzyEdits,
-      s"maxEdits must be in [0, $MaxFuzzyEdits] (Lucene FuzzyQuery limit), " +
-      s"got $maxEdits")
-    require(prefixLength >= 0, s"prefixLength must be >= 0, got $prefixLength")
-    val m = pinned.getOrElse(pinnedManifest(root))
-    val q = Analyzer.foldPrefix(termRaw)
-    if (q.isEmpty) return Vector.empty
-    memoized(root,
-      QueryKey(Vector(q), s"FUZZY:$maxEdits:$prefixLength", k, scopes,
-        m.snapshotId, filter.cacheKey)) {
-      // probe order: the cheap necessary conditions first (length band,
-      // optional exact-prefix cut), the codegen'd levenshtein builtin
-      // last — all over the tiny term_stats table, never the dictionary.
-      // CODE-POINT length on both sides: Spark's length()/levenshtein()
-      // count code points, so the band must too or an astral-plane char
-      // in the pattern would shift it by one
-      val qCp = q.codePointCount(0, q.length)
-      val banded = termStatsFor(spark, root, m)
-        .filter(length($"term").between(qCp - maxEdits, qCp + maxEdits))
-      val cut =
-        if (prefixLength > 0) banded.filter($"term".startsWith(q.take(prefixLength)))
-        else banded
-      val found = termStatsRows(cut.filter(levenshtein($"term", lit(q)) <= maxEdits))
-      if (found.size > MaxPrefixExpansions)
-        throw new IllegalArgumentException(
-          s"fuzzy '$q'~$maxEdits expands to ${found.size} dictionary terms " +
-          s"(max $MaxPrefixExpansions) — refusing an unbounded " +
-          "disjunction; lower maxEdits or raise prefixLength")
-      expansionTopK(spark, root, m, found, k, scopes, filter)
-    }
-  }
+                filter: QueryFilter = QueryFilter.Empty): Vector[SearchHit] =
+    search(spark, root, Query.Expand(Query.Fuzzy(maxEdits, prefixLength),
+      termRaw), k, scopes, pinned, filter)
 
   /** Wildcard top-k (Lucene WildcardQuery with a scoring-BooleanQuery
     * rewrite): `*` matches any character sequence, `?` exactly one —
@@ -1472,28 +1533,9 @@ object SearchEngine {
   def wildcardTopK(spark: SparkSession, root: String, patternRaw: String,
                    k: Int = 10, scopes: Seq[String] = Nil,
                    pinned: Option[Manifest] = None,
-                   filter: QueryFilter = QueryFilter.Empty): Vector[SearchHit] = {
-    import spark.implicits._
-    val m = pinned.getOrElse(pinnedManifest(root))
-    val pat = Analyzer.foldWildcard(patternRaw)
-    if (pat.isEmpty) return Vector.empty
-    memoized(root,
-      QueryKey(Vector(pat), "WILDCARD", k, scopes, m.snapshotId, filter.cacheKey)) {
-      val litPrefix = pat.takeWhile(c => c != '*' && c != '?')
-      val like = pat.replace('*', '%').replace('?', '_')
-      val base = termStatsFor(spark, root, m)
-      val cut =
-        if (litPrefix.nonEmpty) base.filter($"term".startsWith(litPrefix))
-        else base
-      val found = termStatsRows(cut.filter($"term".like(like)))
-      if (found.size > MaxPrefixExpansions)
-        throw new IllegalArgumentException(
-          s"wildcard '$pat' expands to ${found.size} dictionary terms " +
-          s"(max $MaxPrefixExpansions) — refusing an unbounded " +
-          "disjunction; narrow the pattern")
-      expansionTopK(spark, root, m, found, k, scopes, filter)
-    }
-  }
+                   filter: QueryFilter = QueryFilter.Empty): Vector[SearchHit] =
+    search(spark, root, Query.Expand(Query.Wildcard, patternRaw), k, scopes,
+      pinned, filter)
 
   /** Boolean MUST + MUST_NOT top-k (Lucene BooleanQuery with MUST and
     * MUST_NOT clauses, r6): documents matching EVERY positive term and
@@ -1532,8 +1574,8 @@ object SearchEngine {
                pinned: Option[Manifest] = None,
                filter: QueryFilter = QueryFilter.Empty,
                after: Option[SearchHit] = None): Vector[SearchHit] =
-    queryBool(spark, root, queryText, "", notText, 0, k, scopes, pinned,
-      filter, after)
+    search(spark, root, Query.Bool(must = Vector(queryText), not = Vector(notText)),
+      k, scopes, pinned, filter, after)
 
   /** Boolean SHOULD / minimum_should_match top-k (Lucene BooleanQuery
     * with ONLY optional clauses + setMinimumNumberShouldMatch, r7 —
@@ -1577,8 +1619,8 @@ object SearchEngine {
                   filter: QueryFilter = QueryFilter.Empty,
                   after: Option[SearchHit] = None): Vector[SearchHit] = {
     require(minMatch >= 1, s"minMatch must be >= 1, got $minMatch")
-    queryBool(spark, root, "", queryText, "", minMatch, k, scopes, pinned,
-      filter, after)
+    search(spark, root, Query.Bool(should = Vector(queryText), minShould = minMatch),
+      k, scopes, pinned, filter, after)
   }
 
   /** The COMBINED Lucene BooleanQuery (r7): MUST + SHOULD + MUST_NOT +
@@ -1643,65 +1685,17 @@ object SearchEngine {
                 pinned: Option[Manifest] = None,
                 filter: QueryFilter = QueryFilter.Empty,
                 after: Option[SearchHit] = None,
-                boosts: Map[String, Double] = Map.empty): Vector[SearchHit] = {
-    require(minShouldMatch >= 0,
-      s"minShouldMatch must be >= 0, got $minShouldMatch")
-    require(after.isEmpty || scopes.isEmpty, ScopedAfterError)
-    val m = pinned.getOrElse(pinnedManifest(root))
-    // per-clause boosts (Lucene term^b): raw keys resolve to analyzed
-    // terms ONCE here; boosted contributions are boost × BM25 — one IEEE
-    // multiply, applied identically in cursors, bounds and the oracle
-    val boostOf = Analyzer.resolveBoosts(m.analyzerVersion, boosts)
-    val must = Analyzer.analyzeQueryFor(m.analyzerVersion, mustText)
-    val negs = Analyzer.analyzeQueryFor(m.analyzerVersion, notText).distinct.sorted
-    val shouldRaw = Analyzer.analyzeQueryFor(m.analyzerVersion, shouldText).distinct
-    // ---- clause-overlap resolution (see scaladoc) ----
-    val mustSet = must.toSet
-    val negSet = negs.toSet
-    val autoSatisfied = shouldRaw.count(mustSet)
-    val shouldKept = shouldRaw.filterNot(t => mustSet(t) || negSet(t))
-    val minEff = math.max(0, minShouldMatch - autoSatisfied)
-    if (must.isEmpty && shouldKept.isEmpty) return Vector.empty
-    if (minEff > shouldKept.size && must.nonEmpty) return Vector.empty
-    if (must.isEmpty && math.max(1, minEff) > shouldKept.size)
-      return Vector.empty
-    // memo key: three space-separated sections (no analyzed token holds a
-    // space) — resolution above is deterministic, so semantically equal
-    // queries share an entry
-    memoized(root,
-      QueryKey(must ++ (" " +: negs) ++ (" " +: shouldKept),
-        s"BOOL:$minEff" + boostKey(boostOf), k, scopes, m.snapshotId,
-        filter.cacheKey, afterKey(after))) {
-      val (fterms, tsRanges) = resolveFilter(spark, root, m, filter)
-      // both clause families see the per-view cap/drop rule of their
-      // dedicated modes; a scope computes their dfs in ONE pass
-      overViews(spark, root, m, scopes, k, must ++ shouldKept) { v =>
-        val mustKept = kept(v, must, capped = true)
-        val shouldSurv = kept(v, shouldKept, capped = true)
-        // POST-PLAN overlap check: a prohibited term that SURVIVES MUST
-        // planning excludes every candidate — empty without a scan. An
-        // overlap the planner DROPS (unknown or stop-capped) behaves as
-        // AND-minus-negative over the remaining MUST terms, the oracle's
-        // filtered-AND semantics (checking raw tokens diverged, r6 review)
-        if (must.nonEmpty && mustKept.isEmpty) Vector.empty
-        else if (mustKept.exists(t => negSet(t.term))) Vector.empty
-        else if (shouldSurv.size < (if (must.isEmpty) math.max(1, minEff) else minEff))
-          Vector.empty
-        else execute(spark, root, m,
-          Clauses(mustKept, shouldSurv, minEff, negs, fterms, boostOf),
-          v.stats, k, combineRanges(v.ranges, tsRanges), after)
-      }
-    }
-  }
+                boosts: Map[String, Double] = Map.empty): Vector[SearchHit] =
+    search(spark, root, Query.Bool(Vector(mustText), Vector(shouldText),
+      Vector(notText), None, minShouldMatch, boosts), k, scopes, pinned, filter, after)
 
   /** Phrase-as-clause (r7): the combined BooleanQuery with a PHRASE (or
     * unordered-NEAR, `slop = Some(n)`) clause among the required ones —
     * what a Lucene BooleanQuery holds when a PhraseQuery rides MUST next
     * to term clauses, and the composition [[QueryParser]] refused until
-    * now. UNSCOPED only (scoped composed queries would need per-scope
-    * re-planning of three clause families at once — refused for now, the
-    * standalone scoped phrase/NEAR surfaces still exist); composes with
-    * typed field [[QueryFilter]]s and time travel.
+    * now. UNSCOPED only ([[search]] refuses a composed phrase with scopes
+    * — not yet supported; the standalone scoped phrase/NEAR surfaces
+    * exist); composes with typed field [[QueryFilter]]s and time travel.
     *
     * Clause semantics are each family's dedicated contract, unchanged:
     *   - the PHRASE terms are required positionally: no stop cap, an
@@ -1741,81 +1735,10 @@ object SearchEngine {
                       minShouldMatch: Int = 0, k: Int = 10,
                       pinned: Option[Manifest] = None,
                       filter: QueryFilter = QueryFilter.Empty,
-                      boosts: Map[String, Double] = Map.empty): Vector[SearchHit] = {
-    require(minShouldMatch >= 0,
-      s"minShouldMatch must be >= 0, got $minShouldMatch")
-    slop.foreach(n => require(n >= 0, s"slop must be >= 0, got $n"))
-    val m = pinned.getOrElse(pinnedManifest(root))
-    val boostOf = Analyzer.resolveBoosts(m.analyzerVersion, boosts)
-    val seq = Analyzer.tokensFor(m.analyzerVersion, phraseText)
-    if (seq.isEmpty)
-      return queryBool(spark, root, mustText, shouldText, notText,
-        minShouldMatch, k, Nil, Some(m), filter, boosts = boosts)
-    val must = Analyzer.analyzeQueryFor(m.analyzerVersion, mustText)
-    val negs = Analyzer.analyzeQueryFor(m.analyzerVersion, notText).distinct.sorted
-    val shouldRaw = Analyzer.analyzeQueryFor(m.analyzerVersion, shouldText).distinct
-    val slots = seq.distinct.sorted
-    val slotSet = slots.toSet
-    val negSet = negs.toSet
-    if (negs.exists(slotSet)) return Vector.empty // every hit would hold it
-    val mustExtra = must.filterNot(slotSet) // dedupe into the phrase clause
-    val requiredSet = must.toSet ++ slotSet
-    val autoSatisfied = shouldRaw.count(requiredSet)
-    val shouldKept = shouldRaw.filterNot(t => requiredSet(t) || negSet(t))
-    val minEff = math.max(0, minShouldMatch - autoSatisfied)
-    if (minEff > shouldKept.size) return Vector.empty
-    memoized(root,
-      QueryKey(seq ++ (" " +: mustExtra) ++ (" " +: negs) ++ (" " +: shouldKept),
-        s"BOOLPHRASE:${slop.getOrElse(-1)}:$minEff" + boostKey(boostOf),
-        k, Nil, m.snapshotId, filter.cacheKey)) {
-      val (fterms, tsRanges) = resolveFilter(spark, root, m, filter)
-      val v = corpusView(spark, root, m)
-      // phrase slots: no cap, unknown ⇒ EMPTY (the phrase contract) —
-      // must: AND drop-unknown + cap (drop-and-continue: the phrase
-      // still drives, reference parity) — should: OR cap, survivors
-      // bound the count requirement
-      val slotsKept = kept(v, slots, capped = false)
-      val mustKept = kept(v, mustExtra, capped = true)
-      val shouldSurv = kept(v, shouldKept, capped = true)
-      if (slotsKept.size < slots.size) Vector.empty
-      else if (mustKept.exists(t => negSet(t.term))) Vector.empty
-      else if (shouldSurv.size < minEff) Vector.empty
-      else execute(spark, root, m,
-        Clauses(slotsKept ++ mustKept, shouldSurv, minEff, negs, fterms,
-          boostOf, Some(proximity(seq, slop))),
-        v.stats, k, combineRanges(None, tsRanges))
-    }
-  }
-
-  /** Shared scoring-BooleanQuery rewrite tail for the multi-term query
-    * family ([[prefixTopK]], [[fuzzyTopK]], [[wildcardTopK]]): the
-    * standard OR/BM25 top-k over an already-expanded (and already
-    * size-capped) term set, no stop cap. Unscoped: global stats and the
-    * expansion's own dfs (no further dictionary probe). Scoped: per
-    * scope, re-weigh the globally capped expansion with SCOPED dfs —
-    * terms absent from a scope drop out (a scope-local dictionary
-    * expansion by construction) — then union with each doc's
-    * best-scoring instance, the queryScoped rule. */
-  private def expansionTopK(spark: SparkSession, root: String, m: Manifest,
-                            found: Vector[TermStats], k: Int,
-                            scopes: Seq[String],
-                            filter: QueryFilter = QueryFilter.Empty): Vector[SearchHit] = {
-    // field terms can never enter `found`: the dictionary the expansions
-    // probe (term_stats) excludes the reserved namespace by construction
-    // (IndexBuilder.termStatsAgg) — a `*user` wildcard cannot surface
-    // role postings. Filters ride the OR walk like every OR query.
-    val (fterms, tsRanges) = resolveFilter(spark, root, m, filter)
-    val expansion = found.map(_.term)
-    if (found.isEmpty) Vector.empty
-    else overViews(spark, root, m, scopes, k, expansion,
-        known = found.map(t => t.term -> t.df).toMap) { v =>
-      val ts = kept(v, expansion, capped = false)
-      if (ts.isEmpty) Vector.empty
-      else execute(spark, root, m,
-        Clauses(Vector.empty, should = ts, minShould = 1, filters = fterms),
-        v.stats, k, combineRanges(v.ranges, tsRanges))
-    }
-  }
+                      boosts: Map[String, Double] = Map.empty): Vector[SearchHit] =
+    search(spark, root, Query.Bool(Vector(mustText), Vector(shouldText),
+      Vector(notText), Some(Query.Phrase(phraseText, slop)), minShouldMatch, boosts),
+      k, Nil, pinned, filter)
 
   /** Naive Catalyst path over the uncompressed tf relation — correctness
     * backstop + the shape the SQL oracle mirrors (SURVEY.md §7.3). */
@@ -1882,11 +1805,10 @@ object SearchEngine {
       : Seq[(Long, Double, String, String, Int)] = {
     requireMode(mode)
     val m = pinnedManifest(root) // ONE snapshot for both rank and lookup
-    val version = m.analyzerVersion
-    val analyzed = Analyzer.analyzeQueryFor(version, queryText)
-    val hits = termQuery(spark, root, m, analyzed, mode, k, Nil, QueryFilter.Empty)
+    val hits = search(spark, root, termTree(queryText, mode), k, pinned = Some(m))
     if (hits.isEmpty) return Nil
-    val terms = analyzed.toSet
+    val version = m.analyzerVersion
+    val terms = Analyzer.analyzeQueryFor(version, queryText).toSet
     val normalize: String => String =
       if (version == Analyzer.StemVersion) graft.analysis.Stemmer.stem else identity
     val ids = hits.map(_.docId)
@@ -1962,18 +1884,15 @@ object SearchEngine {
 
   // ---- repeat-query result memoization (reference SearchServiceImpl
   // .java:42-45, :71-75: the previous request's results are reused on an
-  // identical repeat) — generalized to a per-root LRU over ANALYZED terms
-  // (so it is case/whitespace-insensitive exactly like the reference,
-  // which re-lemmatizes before comparing), mode, k, and scopes. STRICTLY
+  // identical repeat) — generalized to a per-root LRU keyed by the
+  // [[Resolved]] query (ANALYZED terms, so it is case/whitespace-
+  // insensitive exactly like the reference, which re-lemmatizes before
+  // comparing, plus every plan input that changes the answer). STRICTLY
   // OPT-IN for serving processes: the correctness gates and rank-identity
   // tests never enable it (SURVEY.md §4.1), and maintenance invalidates
   // it through disableServingCache like every other pinned structure.
-  private final case class QueryKey(terms: Vector[String], mode: String,
-                                    k: Int, scopes: Seq[String],
-                                    snapshotId: Long, filter: String = "",
-                                    after: String = "")
   private val resultCaches = scala.collection.concurrent.TrieMap
-    .empty[String, java.util.LinkedHashMap[QueryKey, Vector[SearchHit]]]
+    .empty[String, java.util.LinkedHashMap[Resolved, Vector[SearchHit]]]
   // flush generation per root: an in-flight compute that started before a
   // maintenance flush must NOT re-insert its (pre-maintenance) result
   // after the clear — the put is gated on the generation it started under
@@ -1988,9 +1907,9 @@ object SearchEngine {
   def enableResultCache(root: String, capacity: Int = 64): Unit = {
     val cap = math.max(1, capacity)
     resultCaches.getOrElseUpdate(root,
-      new java.util.LinkedHashMap[QueryKey, Vector[SearchHit]](16, 0.75f, true) {
+      new java.util.LinkedHashMap[Resolved, Vector[SearchHit]](16, 0.75f, true) {
         override def removeEldestEntry(
-            e: java.util.Map.Entry[QueryKey, Vector[SearchHit]]): Boolean =
+            e: java.util.Map.Entry[Resolved, Vector[SearchHit]]): Boolean =
           size() > cap
       })
     ()
@@ -2001,7 +1920,7 @@ object SearchEngine {
     ()
   }
 
-  private def memoized(root: String, key: QueryKey)
+  private def memoized(root: String, key: Resolved)
                       (compute: => Vector[SearchHit]): Vector[SearchHit] =
     resultCaches.get(root) match {
       case None => compute

@@ -264,8 +264,56 @@ class EngineParitySpec extends AnyFunSuite {
   }
 
   test("result memoization (opt-in): repeat queries oracle-identical, case-insensitive key") {
+    // pairs of queries whose resolved values differ in ONE field: with
+    // the cache on, each answer must equal its cache-off answer — a
+    // memo-key collision would serve the first member's hits to the second
+    val page1 = SearchEngine.query(spark, root, "w0000", "OR", 5)
+    val role = graft.model.QueryFilter(role = Some("user"))
+    val pairs: Seq[(String, () => Vector[SearchHit], () => Vector[SearchHit])] = Seq(
+      ("ordered vs unordered NEAR",
+        () => SearchEngine.nearTopK(spark, root, "needlemid stopish", 1, 20, ordered = true),
+        () => SearchEngine.nearTopK(spark, root, "needlemid stopish", 1, 20)),
+      ("slop 2 vs 3",
+        () => SearchEngine.nearTopK(spark, root, "needlemid w0000", 2, 20),
+        () => SearchEngine.nearTopK(spark, root, "needlemid w0000", 3, 20)),
+      ("fuzzy edits 1 vs 2",
+        () => SearchEngine.fuzzyTopK(spark, root, "w0000", 1, 20, prefixLength = 3),
+        () => SearchEngine.fuzzyTopK(spark, root, "w0000", 2, 20, prefixLength = 3)),
+      ("fuzzy prefixLen 0 vs 2",
+        () => SearchEngine.fuzzyTopK(spark, root, "xeedlemid", 1, 20, prefixLength = 0),
+        () => SearchEngine.fuzzyTopK(spark, root, "xeedlemid", 1, 20, prefixLength = 2)),
+      ("prefix vs wildcard",
+        () => SearchEngine.prefixTopK(spark, root, "w000", 20),
+        () => SearchEngine.wildcardTopK(spark, root, "w000", 20)),
+      ("boost 2.0 vs 2.5",
+        () => SearchEngine.queryBool(spark, root, "needlemid", "w0000", k = 20,
+          boosts = Map("w0000" -> 2.0)),
+        () => SearchEngine.queryBool(spark, root, "needlemid", "w0000", k = 20,
+          boosts = Map("w0000" -> 2.5))),
+      ("minShould 1 vs 2",
+        () => SearchEngine.queryShould(spark, root, "needlemid w0000 w0001", 1, 100),
+        () => SearchEngine.queryShould(spark, root, "needlemid w0000 w0001", 2, 100)),
+      ("role filter vs none",
+        () => SearchEngine.query(spark, root, "needlemid w0000", "OR", 20, filter = role),
+        () => SearchEngine.query(spark, root, "needlemid w0000", "OR", 20)),
+      ("after vs none",
+        () => SearchEngine.query(spark, root, "w0000", "OR", 5, after = page1.lastOption),
+        () => SearchEngine.query(spark, root, "w0000", "OR", 5)),
+      ("phrase vs AND",
+        () => SearchEngine.phraseTopK(spark, root, "needlemid stopish", 20),
+        () => SearchEngine.query(spark, root, "needlemid stopish", "AND", 20)))
+    val off = pairs.map { case (name, a, b) =>
+      val (offA, offB) = (a(), b())
+      assert(offA != offB, s"$name: the fixture must tell the pair apart")
+      (offA, offB)
+    }
     SearchEngine.enableResultCache(root, capacity = 8)
     try {
+      pairs.zip(off).foreach { case ((name, a, b), (offA, offB)) =>
+        assert(a() == offA, s"memo '$name' first")
+        assert(b() == offB, s"memo key collision: '$name'")
+        assert(a() == offA, s"memo '$name' repeat")
+      }
       querySet.take(6).foreach { case (q, mode, k) =>
         val first = SearchEngine.query(spark, root, q, mode, k)
         assert(first == oracle.topK(q, mode, k), s"memo first '$q'")
@@ -424,9 +472,38 @@ class EngineParitySpec extends AnyFunSuite {
         }
       }
     }
-    val cli = intercept[RuntimeException](graft.cli.Query.main(
-      Array(root, "needlemid w0000", "--mode", "ANDD")))
-    assert(cli.getMessage.contains("usage: Query"), cli.getMessage)
+    // k < 1 refuses once, before any Spark job, on every entry point
+    // (Wand.TopK(0) used to throw inside an executor, or not at all)
+    Seq(0, -1).foreach { bad =>
+      val calls: Seq[(String, () => Any)] = Seq(
+        "query" -> (() => SearchEngine.query(spark, root, "needlemid", "AND", bad)),
+        "phraseTopK" -> (() =>
+          SearchEngine.phraseTopK(spark, root, "stopish needlemid", bad)),
+        "prefixTopK" -> (() => SearchEngine.prefixTopK(spark, root, "w000", bad)),
+        "queryBool" -> (() =>
+          SearchEngine.queryBool(spark, root, "needlemid", "w0000", k = bad)),
+        "QueryParser.search" -> (() =>
+          graft.query.QueryParser.search(spark, root, "+needlemid w0000", bad)))
+      calls.foreach { case (name, call) =>
+        withClue(s"$name(k = $bad): ") {
+          intercept[IllegalArgumentException](call())
+        }
+      }
+    }
+    // CLI refusals exit with the usage line before the Spark session
+    // starts: an unknown mode, k < 1, the naive backstop asked to scope
+    // (it answers unscoped) and two spellings of the scopes at once
+    Seq(
+      Seq("--mode", "ANDD"),
+      Seq("--k", "0"),
+      Seq("--naive", "--scopes", "conv-0000001"),
+      Seq("--naive", "--conv", "conv-0000001"),
+      Seq("--conv", "conv-0000001", "--scopes", "conv-0000002")
+    ).foreach { flags =>
+      val cli = intercept[RuntimeException](graft.cli.Query.main(
+        (Seq(root, "needlemid w0000") ++ flags).toArray))
+      assert(cli.getMessage.contains("usage: Query"), s"$flags: ${cli.getMessage}")
+    }
   }
 
   test("chunking: hot-term lists split at the chunk cap and merge correctly") {

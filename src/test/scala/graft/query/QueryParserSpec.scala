@@ -6,12 +6,14 @@ import graft.SparkTestBase
 import graft.fixtures.TranscriptGen
 import graft.index.IndexBuilder
 import graft.model.QueryFilter
-import graft.query.QueryParser.{Parsed, parse, search}
+import graft.query.Query.{Bool, Phrase}
+import graft.query.QueryParser.{parse, search}
 
 /** Lucene-style query strings (r7, [[QueryParser]]): the parser adds
-  * NOTATION, not semantics — every dispatch must be bit-equal to the
-  * direct executor call it denotes, and every documented refusal must
-  * actually refuse.
+  * NOTATION, not semantics — a string parses to the [[Query]] tree and
+  * filter it denotes, its answer must be bit-equal to the facade call
+  * that builds the same tree, and every documented refusal must actually
+  * refuse.
   */
 class QueryParserSpec extends AnyFunSuite {
 
@@ -28,35 +30,36 @@ class QueryParserSpec extends AnyFunSuite {
 
   test("parse: clause prefixes, fields, phrase, ts range") {
     assert(parse("+spark merge -join") ==
-      Parsed(Vector("spark"), Vector("merge"), Vector("join")))
+      (Bool(Vector("spark"), Vector("merge"), Vector("join")), QueryFilter.Empty))
     assert(parse("  a   +b c  -d +e ") ==
-      Parsed(Vector("b", "e"), Vector("a", "c"), Vector("d")))
+      (Bool(Vector("b", "e"), Vector("a", "c"), Vector("d")), QueryFilter.Empty))
     assert(parse("role:user tool:bash needle") ==
-      Parsed(should = Vector("needle"),
-        filter = QueryFilter(role = Some("user"), tool = Some("bash"))))
+      (Bool(should = Vector("needle")),
+        QueryFilter(role = Some("user"), tool = Some("bash"))))
     assert(parse("\"exact phrase\"") ==
-      Parsed(phrase = Some(("exact phrase", None))))
-    assert(parse("\"a b\"~3") == Parsed(phrase = Some(("a b", Some(3)))))
-    val p = parse("ts:[1700000000000 TO 1700001000000] x")
-    assert(p.filter.tsFrom.get.getTime == 1700000000000L &&
-      p.filter.tsTo.get.getTime == 1700001000000L &&
-      p.should == Vector("x"))
-    val open = parse("ts:[2023-11-14 TO *] x")
-    assert(open.filter.tsTo.isEmpty && open.filter.tsFrom.nonEmpty)
+      (Bool(phrase = Some(Phrase("exact phrase", None))), QueryFilter.Empty))
+    assert(parse("\"a b\"~3") ==
+      (Bool(phrase = Some(Phrase("a b", Some(3)))), QueryFilter.Empty))
+    val (pq, pf) = parse("ts:[1700000000000 TO 1700001000000] x")
+    assert(pf.tsFrom.get.getTime == 1700000000000L &&
+      pf.tsTo.get.getTime == 1700001000000L &&
+      pq.should == Vector("x"))
+    val open = parse("ts:[2023-11-14 TO *] x")._2
+    assert(open.tsTo.isEmpty && open.tsFrom.nonEmpty)
     // bounds are UTC instants NO MATTER the JVM zone (r7 review:
     // Timestamp.valueOf would read the host zone and shift the window)
-    assert(open.filter.tsFrom.get.getTime == 1699920000000L,
+    assert(open.tsFrom.get.getTime == 1699920000000L,
       "2023-11-14 must mean midnight UTC")
     // the documented space-separated datetime parses inside ts:[ ... ]
-    val dt = parse("ts:[2023-11-14 10:00:00 TO 2023-11-14T11:00:00] x")
-    assert(dt.filter.tsFrom.get.getTime == 1699956000000L &&
-      dt.filter.tsTo.get.getTime == 1699959600000L,
+    val dt = parse("ts:[2023-11-14 10:00:00 TO 2023-11-14T11:00:00] x")._2
+    assert(dt.tsFrom.get.getTime == 1699956000000L &&
+      dt.tsTo.get.getTime == 1699959600000L,
       "both datetime spellings, both UTC")
-    assert(parse("") == Parsed())
+    assert(parse("") == (Bool(), QueryFilter.Empty))
     // per-clause boosts (term^b)
     assert(parse("+spark^2 merge^0.5 -join") ==
-      Parsed(Vector("spark"), Vector("merge"), Vector("join"),
-        boosts = Map("spark" -> 2.0, "merge" -> 0.5)))
+      (Bool(Vector("spark"), Vector("merge"), Vector("join"),
+        boosts = Map("spark" -> 2.0, "merge" -> 0.5)), QueryFilter.Empty))
   }
 
   test("parse refusals: every documented typo trap throws") {
