@@ -98,7 +98,7 @@ object IndexBuilder {
     * without recomputation. */
   final class BuildCancelledException(msg: String) extends RuntimeException(msg)
 
-  private def hasSuccess(spark: SparkSession, dir: String): Boolean = {
+  private[index] def hasSuccess(spark: SparkSession, dir: String): Boolean = {
     val p = new org.apache.hadoop.fs.Path(dir, "_SUCCESS")
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
@@ -125,9 +125,13 @@ object IndexBuilder {
     * Restores the session confs afterwards. At production scale the same
     * alignment falls out of one-multi-GB-file-per-shard plus default
     * split sizes; chunk ordering is firstDocId-based anyway, so alignment
-    * is an efficiency matter, not correctness. */
+    * is an efficiency matter, not correctness. The confs are
+    * session-wide, so callers serialize on [[splitConfLock]]: two
+    * maintenance writers in one session interleaving their
+    * save/set/restore left one writer's split size pinned for every later
+    * read of the session. */
   private[graft] def withOneFilePerTask[A](spark: SparkSession, dir: String)
-                                          (f: DataFrame => A): A = {
+                                          (f: DataFrame => A): A = splitConfLock.synchronized {
     val (maxFile, _) = parquetLayout(spark, dir)
     val split = (maxFile + 1).toString
     val oldMax = spark.conf.get("spark.sql.files.maxPartitionBytes")
@@ -140,6 +144,7 @@ object IndexBuilder {
       spark.conf.set("spark.sql.files.openCostInBytes", oldCost)
     }
   }
+  private val splitConfLock = new Object
 
   /** One recursive listing of `dir` (Hadoop FileSystem API — works on
     * HDFS/S3/local alike; java.nio would throw off-box): the largest
@@ -275,6 +280,10 @@ object IndexBuilder {
           val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
           if (fs.exists(p)) fs.delete(p, true)
         }
+        // and so does it every scan plan this process pinned for the root
+        // (a deleted-and-rebuilt root reuses snapshot ids, so a memoized
+        // plan would list the old build's files)
+        graft.query.SearchEngine.disableServingCache(root)
         val (df, st) = DocIdAssigner.assignWithShard(spark, turns, shards)
         // ordering (shard, docId) satisfies the partitioned-write's
         // required ordering, so no extra sort is inserted and file rows
@@ -450,7 +459,8 @@ object IndexBuilder {
     // (Σ sumTf == Σ dl — a set-based aggregate, retry-safe) and commit a
     // finalizing snapshot IF it differs. Deterministic local runs have no
     // retries, so the values match and no extra snapshot is committed.
-    val sumRow = spark.read.parquet(P.termStatsGen(0)).agg(sum($"sumTf")).head()
+    val sumRow = IndexSnapshot.readTermStats(spark, P.termStatsGen(0))
+      .agg(sum($"sumTf")).head()
     val exactSumDl = if (sumRow.isNullAt(0)) 0L else sumRow.getLong(0)
     val exactAvgdl = exactSumDl.toDouble / math.max(1L, nDocs)
     if (manifest.avgdl != exactAvgdl || manifest.sumDl != exactSumDl) {
@@ -737,7 +747,7 @@ object IndexBuilder {
     import spark.implicits._
     (IndexManifest.read(root) match {
       case Some(m) => IndexSnapshot.termStats(spark, root, m)
-      case None => spark.read.parquet(Paths(root).termStatsGen(0))
+      case None => IndexSnapshot.readTermStats(spark, Paths(root).termStatsGen(0))
     }).select($"term", $"df", $"maxTf").as[TermStats]
   }
   def loadDocs(spark: SparkSession, root: String): Dataset[Doc] = {

@@ -24,6 +24,14 @@ import org.apache.spark.sql.types._
   * expire_snapshots, replacing the reference's global RW lock
   * (LockGenerator.java:10-23) with lock-free snapshot isolation.
   *
+  * DICTIONARY: [[dictionary]] keeps each term_stats generation resident
+  * on the driver (sorted term/df/maxTf arrays, loaded once with one
+  * known-schema read), memoized by generation and build identity and
+  * bounded by entry count and a resident-size cap, so query planning
+  * runs no Spark job (Lucene's in-memory terms index). Every term_stats
+  * read uses the table's known schema, so none runs Spark's
+  * schema-inference job.
+  *
   * FORMAT NOTE: the generation layout is this engine's on-disk format;
   * an index written by the pre-snapshot flat layout (`docs/shard=K`
   * directly) is not readable and must be rebuilt — a deliberate pre-1.0
@@ -56,7 +64,10 @@ object IndexSnapshot {
     StructField("text", StringType), StructField("tool", StringType),
     StructField("dl", IntegerType), StructField("shard", IntegerType)))
 
-  private val postingsSchema: StructType = StructType(Seq(
+  /** Schema of postings read back from parquet (every writer writes the
+    * `PostingList` columns; `positions`/`posOff` are null on a
+    * positions-free index). */
+  private[graft] val postingsSchema: StructType = StructType(Seq(
     StructField("term", StringType), StructField("chunk", IntegerType),
     StructField("count", LongType), StructField("maxTf", IntegerType),
     StructField("sumTf", LongType), StructField("docIds", BinaryType),
@@ -75,15 +86,23 @@ object IndexSnapshot {
     StructField("term", StringType), StructField("df", LongType),
     StructField("maxTf", IntegerType), StructField("sumTf", LongType)))
 
+  /** The doc columns a hit lookup reads (snippets + doc key). */
+  private[graft] val HitLookupSchema: StructType = StructType(Seq(
+    StructField("docId", LongType), StructField("conv_id", StringType),
+    StructField("turn_idx", IntegerType), StructField("text", StringType)))
+
   private def empty(spark: SparkSession, schema: StructType): DataFrame =
     spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
       schema)
 
+  /** One scan over `paths`. With a `known` file schema the read skips
+    * Spark's parquet schema inference (a one-task job per read). */
   private def readLeafDirs(spark: SparkSession, basePath: String,
-                           paths: Seq[String],
-                           emptySchema: StructType): DataFrame =
+                           paths: Seq[String], emptySchema: StructType,
+                           known: Option[StructType] = None): DataFrame =
     if (paths.isEmpty) empty(spark, emptySchema)
-    else spark.read.option("basePath", basePath).parquet(paths: _*).drop("gen")
+    else known.fold(spark.read)(spark.read.schema)
+      .option("basePath", basePath).parquet(paths: _*).drop("gen")
 
   /** The snapshot's docs relation (one scan; `shard` partition column
     * preserved, `gen` dropped). */
@@ -91,13 +110,15 @@ object IndexSnapshot {
     readLeafDirs(spark, IndexBuilder.Paths(root).docs, docsPaths(root, m),
       docsSchema)
 
-  /** Docs restricted to a shard subset — lists only those leaf dirs. */
+  /** Docs restricted to a shard subset — lists only those leaf dirs.
+    * `schema` (e.g. [[HitLookupSchema]]) reads just those file columns
+    * with no schema-inference job. */
   def docsFor(spark: SparkSession, root: String, m: Manifest,
-              shards: Seq[Int]): DataFrame = {
+              shards: Seq[Int], schema: Option[StructType] = None): DataFrame = {
     val want = shards.toSet
     val sub = m.copy(shards = m.shards.filter(e => want(e.shard)))
     readLeafDirs(spark, IndexBuilder.Paths(root).docs, docsPaths(root, sub),
-      docsSchema)
+      docsSchema, schema)
   }
 
   def postings(spark: SparkSession, root: String, m: Manifest): DataFrame =
@@ -134,21 +155,130 @@ object IndexSnapshot {
         }
         v
     }
-    if (present) spark.read.parquet(p)
+    if (present) readTermStats(spark, p)
     else empty(spark, termStatsSchema) // degenerate all-empty snapshot
   }
 
-  /** true ⇔ `dir` exists and holds ≥1 parquet file (recursively). */
-  private[index] def hasParquetFiles(spark: SparkSession, dir: String): Boolean = {
+  /** One term_stats generation dir, read with its known schema: no
+    * schema-inference job. */
+  private[index] def readTermStats(spark: SparkSession, dir: String): DataFrame =
+    spark.read.schema(termStatsSchema).parquet(dir)
+
+  /** A term_stats generation resident on the driver: `terms` sorted
+    * (String order), `df`/`maxTf` aligned with it. Rows with df = 0 (an
+    * appended-then-deleted term) stay, exactly as the table holds them. */
+  final class TermDictionary private[index] (val terms: Array[String],
+                                             val df: Array[Long],
+                                             val maxTf: Array[Int]) {
+    /** Index of `t`, or -1. */
+    def indexOf(t: String): Int = {
+      val i = java.util.Arrays.binarySearch(terms.asInstanceOf[Array[AnyRef]], t)
+      if (i >= 0) i else -1
+    }
+
+    /** The index range [lo, hi) of the terms starting with `prefix` (all
+      * of them for ""): in sorted order they are one contiguous run. */
+    def prefixRange(prefix: String): (Int, Int) = {
+      def firstFrom(from: Int)(past: String => Boolean): Int = {
+        var lo = from
+        var hi = terms.length
+        while (lo < hi) {
+          val mid = (lo + hi) >>> 1
+          if (past(terms(mid))) hi = mid else lo = mid + 1
+        }
+        lo
+      }
+      val lo = firstFrom(0)(_.compareTo(prefix) >= 0)
+      (lo, firstFrom(lo)(t => !t.startsWith(prefix)))
+    }
+  }
+
+  // The dictionary memo (Lucene keeps its terms index in memory): each
+  // term_stats generation loads ONCE — one known-schema read, one job —
+  // into a [[TermDictionary]]; queries then plan with binary searches and
+  // no Spark job. A generation dir is immutable once a manifest references
+  // it, so the key is the generation plus the manifest fields that
+  // identify the build (a root deleted and rebuilt from another corpus or
+  // with another analyzer gets a fresh entry, never a stale one).
+  // Compaction reuses `statsGen` and the fingerprint, so it keeps its
+  // entry. Only a COMPLETE generation (its `_SUCCESS` marker, the
+  // build's own checkpoint rule) memoizes: a build commits a manifest
+  // after every wave but writes its term_stats generation after the last
+  // one, so a query on a partly built root sees no files, or a half
+  // committed write, under the key the finished build publishes (the same
+  // reason [[termStats]] memoizes only a positive probe). Bounded two
+  // ways: at most [[DictionaryMemoEntries]] entries (access-order LRU),
+  // and a generation whose estimated resident size exceeds
+  // [[dictionaryCap]] is not loaded — callers keep probing the table
+  // with a pushdown filter instead.
+  private val DictionaryMemoEntries = 4
+  /** Resident-size estimate per on-disk byte of a term_stats generation,
+    * with headroom. Measured at ONE size only: a 5,021-term generation of
+    * 40.5 KB parquet held 433 KB of driver heap (~11×). The ratio for
+    * large vocabularies is unverified, and no benchmark workload comes
+    * near the cap. The estimate has to come from file sizes because the
+    * cap decides before the load, without a job. */
+  private val DictionaryBytesPerFileByte = 16L
+  /** test hook: force the above-cap probe (Some(0)) or another cap */
+  @volatile private[graft] var dictionaryCapOverride: Option[Long] = None
+  private def dictionaryCap: Long =
+    dictionaryCapOverride.getOrElse(Runtime.getRuntime.maxMemory / 32)
+
+  // value: the dictionary and its generation's parquet bytes
+  private val dictionaries =
+    new java.util.LinkedHashMap[(String, Long, String, String), (TermDictionary, Long)](8, 0.75f, true) {
+      override def removeEldestEntry(e: java.util.Map.Entry[
+          (String, Long, String, String), (TermDictionary, Long)]): Boolean =
+        size() > DictionaryMemoEntries
+    }
+
+  /** The snapshot's term dictionary, memoized per generation; None when
+    * the generation is above the resident-size cap or not complete yet
+    * (probe the table via [[termStats]] instead). The first call per
+    * generation runs one job. */
+  def dictionary(spark: SparkSession, root: String, m: Manifest): Option[TermDictionary] = {
+    val key = (root, m.statsGen, m.inputFingerprint, m.analyzerVersion)
+    def fits(fileBytes: Long) = fileBytes * DictionaryBytesPerFileByte <= dictionaryCap
+    dictionaries.synchronized(Option(dictionaries.get(key))) match {
+      case Some((d, fileBytes)) => Some(d).filter(_ => fits(fileBytes))
+      case None =>
+        val dir = termStatsPath(root, m)
+        val fileBytes = if (IndexBuilder.hasSuccess(spark, dir)) parquetBytes(spark, dir) else -1L
+        if (fileBytes < 0L || !fits(fileBytes)) None // unfinished or too big: not memoized
+        else {
+          val d = if (fileBytes == 0L) new TermDictionary(Array.empty, Array.empty, Array.empty)
+                  else loadDictionary(spark, root, m)
+          dictionaries.synchronized(dictionaries.put(key, (d, fileBytes)))
+          Some(d)
+        }
+    }
+  }
+
+  private def loadDictionary(spark: SparkSession, root: String,
+                             m: Manifest): TermDictionary = {
+    val rows = readTermStats(spark, termStatsPath(root, m)).select("term", "df", "maxTf").collect()
+      .sortBy(_.getString(0))
+    new TermDictionary(rows.map(_.getString(0)), rows.map(_.getLong(1)),
+      rows.map(_.getInt(2)))
+  }
+
+  /** Total bytes of the parquet files under `dir` (0 when absent). */
+  private def parquetBytes(spark: SparkSession, dir: String): Long = {
     val p = new org.apache.hadoop.fs.Path(dir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return false
+    if (!fs.exists(p)) return 0L
     val it = fs.listFiles(p, true)
+    var n = 0L
     while (it.hasNext) {
-      if (it.next().getPath.getName.endsWith(".parquet")) return true
+      val st = it.next()
+      if (st.getPath.getName.endsWith(".parquet")) n += st.getLen
     }
-    false
+    n
   }
+
+  /** true ⇔ `dir` exists and holds ≥1 parquet file (recursively). */
+  private[index] def hasParquetFiles(spark: SparkSession, dir: String): Boolean =
+    parquetBytes(spark, dir) > 0L
 
   /** Default age an UNREFERENCED (orphan / possibly in-flight) dir must
     * reach before the sweep may reclaim it — long enough that no live

@@ -1,7 +1,9 @@
 package graft.query
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.util.StringUtils
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.analysis.Analyzer
 import graft.index.{IndexBuilder, IndexManifest, IndexSnapshot, Manifest}
@@ -20,11 +22,14 @@ import graft.model.{CorpusStats, QueryFilter, QuerySpec, SearchHit, TermStats}
   *     the result-memo key;
   *  2. resolved → [[Clauses]], per view (the corpus, or one view per
   *     scope with scoped statistics): resolve the filter, look up the
-  *     whole term universe once (dictionary or scoped dfs, or an
-  *     expansion's own dfs), keep each clause family by its rule (phrase
-  *     terms uncapped and all-or-nothing, MUST and SHOULD terms
-  *     drop-unknown and stop-capped, expansions uncapped), apply the
-  *     early-empty rules;
+  *     whole term universe once (binary searches of the snapshot-resident
+  *     dictionary, [[IndexSnapshot.dictionary]], or scoped dfs, or an
+  *     expansion's own dfs, matched in memory), keep each clause family
+  *     by its rule (phrase terms uncapped and all-or-nothing, MUST and
+  *     SHOULD terms drop-unknown and stop-capped, expansions uncapped),
+  *     apply the early-empty rules. Once the dictionary is resident this
+  *     step runs no Spark job, so a warm corpus query is one job (the
+  *     executor's) and one whose MUST terms are all absent is none;
   *  3. [[Clauses]] → hits: ONE private clause value (scored required and
   *     should terms, minShould, prohibited terms, weightless filters,
   *     boosts, an optional proximity part) goes to ONE shard-local
@@ -78,8 +83,8 @@ object SearchEngine {
       throw new IllegalStateException(s"no manifest at $root — index not built"))
 
   /** Driver-side "optimize" phase: dictionary lookup + stop cap + df-asc
-    * order (SURVEY.md §3.1 step 5). The dictionary probe is a filtered
-    * scan of the tiny term_stats table, not a full collect. */
+    * order (SURVEY.md §3.1 step 5). The lookup is [[dictionary]]'s: binary
+    * searches, no Spark job once the generation is resident. */
   def plan(spark: SparkSession, root: String, spec: QuerySpec,
            stats: CorpusStats, applyStopCap: Boolean = true,
            pinned: Option[Manifest] = None): Plan = {
@@ -93,12 +98,22 @@ object SearchEngine {
     Plan(kept, dropped.map(_.term).toVector, spec.mode, spec.k)
   }
 
-  /** The dictionary rows of `terms` (absent terms have none): one filtered
-    * scan of the tiny term_stats table, no scan at all for no terms. */
+  /** The dictionary rows of `terms` (absent terms have none): binary
+    * searches of the snapshot-resident dictionary
+    * ([[IndexSnapshot.dictionary]]; loading a generation is its one job),
+    * or one filtered scan of term_stats when the generation is above the
+    * resident-size cap; nothing at all for no terms. */
   private def dictionary(spark: SparkSession, root: String, m: Manifest,
                          terms: Seq[String]): Vector[TermStats] =
     if (terms.isEmpty) Vector.empty
-    else termStatsRows(termStatsFor(spark, root, m).filter(col("term").isin(terms: _*)))
+    else IndexSnapshot.dictionary(spark, root, m) match {
+      case Some(d) => terms.distinct.toVector.map(d.indexOf).filter(_ >= 0).map(row(d, _))
+      case None => termStatsRows(IndexSnapshot.termStats(spark, root, m)
+        .filter(col("term").isin(terms: _*)))
+    }
+
+  private def row(d: IndexSnapshot.TermDictionary, i: Int): TermStats =
+    TermStats(d.terms(i), d.df(i), d.maxTf(i))
 
   private def termStatsRows(frame: DataFrame): Vector[TermStats] =
     frame.select(col("term"), col("df"), col("maxTf")).collect().toVector
@@ -398,42 +413,74 @@ object SearchEngine {
   }
 
   /** The dictionary terms a multi-term query denotes (Lucene's
-    * scoring-BooleanQuery rewrite): one pushable probe of the tiny
-    * term_stats table — O(matching terms) collected, never the
-    * dictionary. Field terms can never match: term_stats excludes the
-    * reserved namespace by construction (IndexBuilder.termStatsAgg).
+    * scoring-BooleanQuery rewrite), matched in memory against the
+    * snapshot-resident dictionary: the literal prefix's sorted range
+    * (the whole prefix, a fuzzy query's first `prefixLen` chars, a
+    * wildcard's text before its first metacharacter), then a fuzzy
+    * query's code-point Levenshtein ≤ edits or a wildcard's `*`/`?`
+    * match, computed by the functions Spark's `levenshtein` and LIKE
+    * call (`UTF8String.levenshteinDistance`, the regex of
+    * `StringUtils.escapeLikeRegex`) — so the in-memory match and the
+    * pushdown probe, which still runs when the generation is above the
+    * resident-size cap, are one implementation. Rows with df = 0 match
+    * like any other. Field terms can never match: term_stats excludes
+    * the reserved namespace by construction (IndexBuilder.termStatsAgg).
     * More than [[MaxPrefixExpansions]] matches REFUSE (TooManyClauses). */
-  private def expansion(spark: SparkSession, root: String, m: Manifest,
+  private[query] def expansion(spark: SparkSession, root: String, m: Manifest,
                         e: Query.Expand): Vector[TermStats] = {
-    import spark.implicits._
     val pat = e.pattern
-    val base = termStatsFor(spark, root, m)
-    def startingWith(pre: String) = if (pre.isEmpty) base else base.filter($"term".startsWith(pre))
-    val (probe, what, hint) = e.kind match {
-      case Query.Prefix => (startingWith(pat), s"prefix '$pat*'", "narrow the prefix")
+    val (fixed, what, hint) = e.kind match {
+      case Query.Prefix => (pat, s"prefix '$pat*'", "narrow the prefix")
       case Query.Fuzzy(edits, prefixLen) =>
-        // the cheap necessary conditions first (optional exact-prefix cut,
-        // length band), the codegen'd levenshtein builtin last. CODE-POINT
-        // length on both sides: Spark's length()/levenshtein() count code
-        // points, so the band must too or an astral-plane char in the
-        // pattern would shift it by one
-        val qCp = pat.codePointCount(0, pat.length)
-        (startingWith(pat.take(prefixLen))
-          .filter(length($"term").between(qCp - edits, qCp + edits))
-          .filter(levenshtein($"term", lit(pat)) <= edits),
-          s"fuzzy '$pat'~$edits", "lower maxEdits or raise prefixLength")
+        (pat.take(prefixLen), s"fuzzy '$pat'~$edits", "lower maxEdits or raise prefixLength")
       case Query.Wildcard =>
-        // the literal prefix before the first metacharacter is the cut
-        (startingWith(pat.takeWhile(c => c != '*' && c != '?'))
-          .filter($"term".like(pat.replace('*', '%').replace('?', '_'))),
-          s"wildcard '$pat'", "narrow the pattern")
+        (pat.takeWhile(c => c != '*' && c != '?'), s"wildcard '$pat'", "narrow the pattern")
     }
-    val found = termStatsRows(probe)
+    val found = IndexSnapshot.dictionary(spark, root, m) match {
+      case Some(d) =>
+        val (lo, hi) = d.prefixRange(fixed)
+        val matches: String => Boolean = e.kind match {
+          case Query.Prefix => _ => true
+          case Query.Fuzzy(edits, _) =>
+            // -1 once the distance is past `edits`
+            val q = UTF8String.fromString(pat)
+            t => UTF8String.fromString(t).levenshteinDistance(q, edits) >= 0
+          case Query.Wildcard =>
+            val like = java.util.regex.Pattern.compile(StringUtils.escapeLikeRegex(likeOf(pat), '\\'))
+            t => like.matcher(t).matches()
+        }
+        (lo until hi).filter(i => matches(d.terms(i))).map(row(d, _)).toVector
+      case None => termStatsRows(probe(IndexSnapshot.termStats(spark, root, m), e, fixed))
+    }
     if (found.size > MaxPrefixExpansions) throw new IllegalArgumentException(
       s"$what expands to ${found.size} dictionary terms (max " +
       s"$MaxPrefixExpansions) — refusing an unbounded disjunction; $hint")
     found
   }
+
+  /** [[expansion]] above the resident-size cap: one pushable probe of the
+    * term_stats table, O(matching terms) collected. The cheap necessary
+    * conditions go first (the literal-prefix cut, a fuzzy length band),
+    * the codegen'd levenshtein builtin last. CODE-POINT length on both
+    * sides: Spark's length()/levenshtein() count code points, so the band
+    * must too or an astral-plane char in the pattern would shift it. */
+  private def probe(stats: DataFrame, e: Query.Expand, fixed: String): DataFrame = {
+    val pat = e.pattern
+    val cut = if (fixed.isEmpty) stats else stats.filter(col("term").startsWith(fixed))
+    e.kind match {
+      case Query.Prefix => cut
+      case Query.Fuzzy(edits, _) =>
+        val qCp = pat.codePointCount(0, pat.length)
+        cut.filter(length(col("term")).between(qCp - edits, qCp + edits))
+          .filter(levenshtein(col("term"), lit(pat)) <= edits)
+      case Query.Wildcard =>
+        cut.filter(col("term").like(likeOf(pat)))
+    }
+  }
+
+  /** A wildcard pattern as LIKE: `*` → `%`, `?` → `_` (wildcard patterns
+    * hold only token chars and the two metacharacters). */
+  private def likeOf(pat: String): String = pat.replace('*', '%').replace('?', '_')
 
   /** The statistics one query is planned and scored in: the whole corpus
     * (`ranges` None) or one conv-prefix scope with per-scope N, avgdl,
@@ -446,7 +493,7 @@ object SearchEngine {
 
   /** Answer `body` in the corpus view, or in every scope's view and union
     * the answers. Each view looks up the dfs of the query's whole term
-    * `universe` ONCE: the corpus view in one dictionary probe (skipping
+    * `universe` ONCE: the corpus view in one dictionary lookup (skipping
     * terms whose df `known` already holds — an expansion's), a scope in
     * one memoized pass after resolving its segments (memoized); an empty
     * scope answers nothing. ALL of a scope's segments go to ONE scan: the
@@ -1797,9 +1844,11 @@ object SearchEngine {
 
   /** Full read path: top-k + per-hit snippet + doc key — the SearchData
     * analog (reference dto/search/SearchData.java:12-20; snippets computed
-    * for the k shown rows only, SearchServiceImpl.java:281-290). The doc
-    * point-lookup prunes to the shards whose manifest docId range covers a
-    * hit, instead of listing every shard dir. */
+    * for the k shown rows only, SearchServiceImpl.java:281-290). Two Spark
+    * jobs when warm: the search, then ONE doc lookup that reads only the
+    * shards whose manifest [minDocId, maxDocId] holds a hit (≤ k shards)
+    * with the fixed [[IndexSnapshot.HitLookupSchema]], so no
+    * schema-inference job runs. */
   def queryWithSnippets(spark: SparkSession, root: String, queryText: String,
                         mode: String = "AND", k: Int = 10)
       : Seq[(Long, Double, String, String, Int)] = {
@@ -1812,12 +1861,11 @@ object SearchEngine {
     val normalize: String => String =
       if (version == Analyzer.StemVersion) graft.analysis.Stemmer.stem else identity
     val ids = hits.map(_.docId)
-    val base = IndexSnapshot.docs(spark, root, m)
-    val pruned = shardsIntersecting(m, ids.min, ids.max) match {
-        case Some(sh) => base.filter(col("shard").isin(sh: _*))
-        case None => base
-      }
-    val byId = pruned.filter(col("docId").isin(ids: _*))
+    // a manifest with no stamped shard (legacy) cannot prune: read all
+    val shards = ids.flatMap(d => shardsIntersecting(m, d, d)
+      .getOrElse(m.shards.map(_.shard))).distinct
+    val byId = IndexSnapshot.docsFor(spark, root, m, shards, Some(IndexSnapshot.HitLookupSchema))
+      .filter(col("docId").isin(ids: _*))
       .select(col("docId"), col("text"), col("conv_id"), col("turn_idx"))
       .collect()
       .map(r => r.getLong(0) -> ((r.getString(1), r.getString(2), r.getInt(3))))
@@ -1871,8 +1919,6 @@ object SearchEngine {
   // long-lived serving process pins the (compressed, RAM-sized) postings
   // table in executor memory — queries then scan cache, not parquet.
   private val cachedPostings =
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-  private val cachedTermStats =
     scala.collection.concurrent.TrieMap.empty[String, DataFrame]
   // the snapshot the pinned frames were built from: a query pinned to a
   // DIFFERENT snapshot (time travel, or a racing manifest flip) must
@@ -2000,7 +2046,9 @@ object SearchEngine {
             val s2 = spark.newSession()
             s2.conf.set("spark.sql.files.maxPartitionBytes", (maxFile + 1).toString)
             s2.conf.set("spark.sql.files.openCostInBytes", (maxFile + 1).toString)
-            Some(s2.read.option("basePath", IndexBuilder.Paths(root).postings)
+            // the known schema: no schema-inference job per new snapshot
+            Some(s2.read.schema(IndexSnapshot.postingsSchema)
+              .option("basePath", IndexBuilder.Paths(root).postings)
               .parquet(paths: _*).drop("gen"))
           }
         alignedPostings.put(key, v)
@@ -2014,7 +2062,9 @@ object SearchEngine {
   private val cachedPostingsAligned =
     scala.collection.concurrent.TrieMap.empty[String, Boolean]
 
-  /** Pin the snapshot's postings + term stats in executor memory.
+  /** Pin the snapshot's postings in executor memory (the dictionary
+    * needs no pin: [[IndexSnapshot.dictionary]] keeps it on the driver
+    * for every query).
     *
     * `positions = false` (default) PRUNES the position streams from the
     * pinned frame on a positional index (r6 review): the `positions`/
@@ -2028,12 +2078,11 @@ object SearchEngine {
   def enableServingCache(spark: SparkSession, root: String,
                          positions: Boolean = false): Unit = {
     val m = pinnedManifest(root)
-    if (cacheMatches(root, m) && cachedTermStats.contains(root) &&
+    if (cacheMatches(root, m) &&
         cachedPostings.get(root).exists(df =>
           !m.positions || positions == df.columns.contains("positions")))
       return // already pinned at m in the requested shape
     cachedPostings.remove(root).foreach(_.unpersist())
-    cachedTermStats.remove(root).foreach(_.unpersist())
     cachedPostingsAligned.remove(root)
     cachedSnapshot.remove(root)
     val (base0, aligned) = alignedPostingsFor(spark, root, m) match {
@@ -2045,11 +2094,8 @@ object SearchEngine {
       else base0
     val p = base.cache()
     p.count() // materialize
-    val ts = IndexSnapshot.termStats(spark, root, m).cache()
-    ts.count()
     cachedPostings.put(root, p)
     cachedPostingsAligned.put(root, aligned)
-    cachedTermStats.put(root, ts)
     cachedSnapshot.put(root, m.snapshotId) // stamp LAST
     ()
   }
@@ -2058,7 +2104,6 @@ object SearchEngine {
     cachedPostings.remove(root).foreach(_.unpersist())
     cachedPostingsAligned.remove(root)
     cachedSnapshot.remove(root)
-    cachedTermStats.remove(root).foreach(_.unpersist())
     // maintenance calls this before rewriting — drop aligned-scan plans
     // and the scoped-query memos for the root too (their snapshot is
     // about to be superseded), and flush memoized results (stale hits
@@ -2082,11 +2127,6 @@ object SearchEngine {
                           m: Manifest): DataFrame =
     cachedPostings.get(root).filter(_ => cacheMatches(root, m))
       .getOrElse(IndexSnapshot.postings(spark, root, m))
-
-  private[query] def termStatsFor(spark: SparkSession, root: String,
-                                  m: Manifest): DataFrame =
-    cachedTermStats.get(root).filter(_ => cacheMatches(root, m))
-      .getOrElse(IndexSnapshot.termStats(spark, root, m))
 
   def statsOf(spark: SparkSession, root: String): CorpusStats = {
     val m = pinnedManifest(root)

@@ -194,6 +194,15 @@ class EngineParitySpec extends AnyFunSuite {
       assert(oracle.docs(docId.toInt).conv_id == convId)
       assert(oracle.docs(docId.toInt).turn_idx == turnIdx)
     }
+    // the hit-shard lookup follows shardsIntersecting: an unstamped
+    // (-1,-1) entry (an empty shard) beside stamped ones is skipped
+    val copy = SparkTestBase.tmpDir("graft-index-unstamped")
+    org.apache.commons.io.FileUtils.copyDirectory(new java.io.File(root), new java.io.File(copy))
+    val m = IndexManifest.read(copy).get
+    val empty = graft.index.ShardEntry(m.shards.map(_.shard).max + 1, 0L, 0L, 0L, Nil)
+    IndexManifest.commit(copy, m.copy(snapshotId = m.snapshotId + 1, shards = m.shards :+ empty))
+    assert(IndexManifest.read(copy).get.shards.count(_.minDocId < 0) == 1)
+    assert(SearchEngine.queryWithSnippets(spark, copy, "needlemid w0000", "AND", 5) == res)
   }
 
   test("statistics job: totals consistent with manifest and oracle") {

@@ -233,6 +233,86 @@ class SnapshotIsolationSpec extends AnyFunSuite {
       "the still-retained previous snapshot must stay queryable")
   }
 
+  test("dictionary memo never goes stale: rebuilt root, time travel, pinned reader across an append") {
+    val queries = Seq(("needlemid w0000", "AND", 10), ("w0001 w0002", "OR", 15),
+      ("needlerare stopish", "OR", 10))
+    def answers(root: String, pinned: Option[Manifest] = None) = queries.map {
+      case (q, mode, k) => SearchEngine.search(spark, root,
+        if (mode == "AND") graft.query.Query.Bool(must = Vector(q))
+        else graft.query.Query.Bool(should = Vector(q), minShould = 1), k, pinned = pinned) }
+    def expected(o: graft.oracle.Oracle) = queries.map { case (q, mode, k) => o.topK(q, mode, k) }
+
+    // a root deleted and rebuilt from another corpus (same statsGen,
+    // same snapshot ids) answers from the new dictionary
+    val root = SparkTestBase.tmpDir("graft-dictmemo")
+    val corpusA = TranscriptGen.corpus(seed = 27L, nConvs = 100)
+    IndexBuilder.build(spark, spark.createDataset(corpusA), root,
+      shards = 4, waveSize = 4, maxChunkPostings = 64)
+    assert(answers(root) == expected(new graft.oracle.Oracle(corpusA)))
+    val statsGenA = IndexManifest.readCached(root).get.statsGen
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
+    val corpusB = TranscriptGen.corpus(seed = 28L, nConvs = 100)
+    IndexBuilder.build(spark, spark.createDataset(corpusB), root,
+      shards = 4, waveSize = 4, maxChunkPostings = 64)
+    assert(IndexManifest.readCached(root).get.statsGen == statsGenA)
+    val oracleB = new graft.oracle.Oracle(corpusB)
+    assert(answers(root) == expected(oracleB), "rebuilt root must not reuse the old dictionary")
+
+    // a reader pinned before an append keeps its generation while the
+    // append commits under it; afterwards queryAt on that (retained)
+    // snapshot still scores with its dfs, the current one with the new
+    val m0 = IndexManifest.readCached(root).get
+    val extra = (0 until 30).map(i => Turn(f"zz-memo-$i%02d", 0, "user",
+      s"needlemid w0000 w0001 needlerare filler$i", "", ts))
+    val stop = new AtomicBoolean(false)
+    val observed = new ConcurrentLinkedQueue[Seq[Vector[SearchHit]]]
+    val failures = new ConcurrentLinkedQueue[Throwable]
+    val reader = new Thread(() => {
+      while (!stop.get()) {
+        try observed.add(answers(root, Some(m0)))
+        catch { case t: Throwable => failures.add(t); stop.set(true) }
+      }
+    }, "dictmemo-reader")
+    reader.start()
+    try IndexMaintenance.appendConversations(spark, root, extra)
+    finally { stop.set(true); reader.join(60000) }
+    assert(failures.isEmpty, s"pinned reader failed: ${failures.peek()}")
+    assert(!observed.isEmpty, "the pinned reader never completed a query")
+    observed.forEach(o => assert(o == expected(oracleB), "pinned reader left its generation"))
+    val m1 = IndexManifest.readCached(root).get
+    assert(m1.statsGen != m0.statsGen)
+    val oracleC = new graft.oracle.Oracle(corpusB ++ extra)
+    assert(expected(oracleC) != expected(oracleB), "the append must change the answers")
+    assert(answers(root) == expected(oracleC))
+    assert(queries.map { case (q, mode, k) =>
+      SearchEngine.queryAt(spark, root, m0.snapshotId, q, mode, k) } == expected(oracleB),
+      "time travel must score with the pinned generation's dfs")
+    assert(answers(root) == expected(oracleC))
+  }
+
+  test("dictionary memo: a query on a partly built root does not pin an empty dictionary") {
+    // every wave commits a manifest with the finished build's statsGen and
+    // fingerprint, but term_stats is written after the last wave: a query
+    // in between must not memoize "no terms" under the finished key
+    val corpus = TranscriptGen.corpus(seed = 29L, nConvs = 120)
+    val root = SparkTestBase.tmpDir("graft-dictmemo-partial")
+    val ds = spark.createDataset(corpus)
+    var checks = 0
+    intercept[IndexBuilder.BuildCancelledException] {
+      IndexBuilder.build(spark, ds, root, shards = 8, waveSize = 2,
+        maxChunkPostings = 64, cancelCheck = () => { checks += 1; checks > 1 })
+    }
+    val queries = Seq(("needlemid w0000", "AND", 10), ("w0001 w0002", "OR", 15),
+      ("needlerare", "AND", 10))
+    def answers() = queries.map { case (q, mode, k) => SearchEngine.query(spark, root, q, mode, k) }
+    assert(answers().forall(_.isEmpty), "a partly built root has no dictionary yet")
+    IndexBuilder.build(spark, ds, root, shards = 8, waveSize = 2, maxChunkPostings = 64)
+    val o = new graft.oracle.Oracle(corpus)
+    val want = queries.map { case (q, mode, k) => o.topK(q, mode, k) }
+    assert(want.forall(_.nonEmpty))
+    assert(answers() == want, "the finished build must answer from its dictionary")
+  }
+
   test("optimistic commit: losing the version race raises CommitConflictException, winner intact") {
     val corpus = TranscriptGen.corpus(seed = 26L, nConvs = 40)
     val root = SparkTestBase.tmpDir("graft-occ")

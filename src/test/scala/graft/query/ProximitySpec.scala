@@ -367,6 +367,93 @@ class ProximitySpec extends AnyFunSuite {
     assert(e2.getMessage.contains("maxEdits"))
   }
 
+  test("expansion parity across the dictionary cap: resident == pushdown probe == Oracle, df=0 rows count") {
+    val ts = new java.sql.Timestamp(1700000000000L)
+    val cyr = Seq("Ёлка ёжик ежевика елочный", "ёлочка зелёная ежик ель",
+      "елка Ёж ёжики елочка зеленая").zipWithIndex.map { case (t, i) =>
+      graft.model.Turn("conv-cyr", i, "user", t, "", ts) }
+    val base = TranscriptGen.corpus(seed = 43L, nConvs = 100) ++ cyr
+    val pOracle = new Oracle(base)
+    val dir = SparkTestBase.tmpDir("graft-proximity-cap")
+    IndexBuilder.build(spark, spark.createDataset(base)(
+      org.apache.spark.sql.Encoders.product[graft.model.Turn]), dir,
+      shards = 4, waveSize = 4, maxChunkPostings = 64)
+    // dictionary rows at df = 0 (an appended-then-deleted term, which
+    // verifyManifest tolerates; delete and replace re-aggregate the
+    // dictionary today, so the fixture writes them into the generation)
+    val m = graft.index.IndexManifest.readCached(dir).get
+    val statsDir = graft.index.IndexSnapshot.termStatsPath(dir, m)
+    val rows = spark.read.parquet(statsDir).collect()
+    val zeros = Set("zzgoneterm", "w0003q", "елкагон", "needlemix")
+    spark.createDataFrame(java.util.Arrays.asList(
+        rows ++ zeros.map(t => org.apache.spark.sql.Row(t, 0L, 0, 0L)): _*), rows.head.schema)
+      .coalesce(1).write.mode("overwrite").parquet(statsDir)
+    assert(IndexBuilder.loadTermStats(spark, dir).collect().filter(_.df == 0).map(_.term).toSet == zeros)
+
+    val rnd = new scala.util.Random(4343L)
+    val vocab = (pOracle.index.keys ++ zeros).toVector.sorted
+    def pick(): String = vocab(rnd.nextInt(vocab.size))
+    def mutate(t: String, edits: Int): String = (0 until edits).foldLeft(t) { (s, _) =>
+      val i = rnd.nextInt(s.length + 1)
+      val c = "abeклё0123w".charAt(rnd.nextInt(11))
+      rnd.nextInt(3) match {
+        case 0 => s.take(i) + c + s.drop(i)                        // insert
+        case 1 if s.nonEmpty => s.take(i) + s.drop(i + 1)           // delete
+        case _ => s.take(i) + c + s.drop(i + 1)                     // substitute
+      }
+    }
+    val prefixes = Seq("", "w", "w00", "needle", "zzgone", "ёл", "Ёж", "ел", "зел") ++
+      Seq.fill(8)(pick().take(1 + rnd.nextInt(4)))
+    val wildcards = Seq("*", "*rare", "*gone*", "?", "??", "?????", "??????????",
+      "*ёж*", "ел?а", "w00?3", "?*?", "*1", "ё*") ++
+      Seq.fill(8) {
+        val t = pick()
+        val i = rnd.nextInt(t.length)
+        t.take(i) + (if (rnd.nextBoolean()) "*" else "?") + t.drop(i + 1)
+      }
+    val fuzzies = Seq(("ёлка", 1, 0), ("ежевыка", 2, 2), ("zzgoneterm", 1, 0),
+      ("needlemid", 2, 3), ("w0003q", 1, 2)) ++
+      Seq.fill(16) {
+        val edits = rnd.nextInt(3)
+        (mutate(pick(), rnd.nextInt(3)), edits, rnd.nextInt(4))
+      }
+    val cases: Seq[(Query.Expand, () => Vector[graft.model.SearchHit], () => Vector[graft.model.SearchHit])] =
+      prefixes.map(p => (Query.Expand(Query.Prefix, Analyzer.foldPrefix(p)),
+        () => SearchEngine.prefixTopK(spark, dir, p, 10), () => pOracle.prefixTopK(p, 10))) ++
+      wildcards.map(p => (Query.Expand(Query.Wildcard, Analyzer.foldWildcard(p)),
+        () => SearchEngine.wildcardTopK(spark, dir, p, 10), () => pOracle.wildcardTopK(p, 10))) ++
+      fuzzies.map { case (q, e, pl) => (Query.Expand(Query.Fuzzy(e, pl), Analyzer.foldPrefix(q)),
+        () => SearchEngine.fuzzyTopK(spark, dir, q, e, 10, pl),
+        () => pOracle.fuzzyTopK(q, e, 10, pl)) }
+
+    def bothSides[A](f: => A): (scala.util.Try[A], scala.util.Try[A]) = {
+      val resident = scala.util.Try(f)
+      graft.index.IndexSnapshot.dictionaryCapOverride = Some(0L) // force the probe
+      try (resident, scala.util.Try(f))
+      finally graft.index.IndexSnapshot.dictionaryCapOverride = None
+    }
+    var answered, refused, withZeros = 0
+    cases.foreach { case (e, engine, oracleRun) =>
+      val label = s"${e.kind} '${e.pattern}'"
+      val (tMem, tProbe) = bothSides(SearchEngine.expansion(spark, dir, m, e).map(_.term).toSet)
+      val (hMem, hProbe) = bothSides(engine())
+      assert(tMem.map(Right(_)).recover { case x => Left(x.getMessage) } ==
+        tProbe.map(Right(_)).recover { case x => Left(x.getMessage) }, s"term sets: $label")
+      assert(hMem.map(Right(_)).recover { case x => Left(x.getMessage) } ==
+        hProbe.map(Right(_)).recover { case x => Left(x.getMessage) }, s"answers: $label")
+      if (tMem.toOption.exists(_.exists(zeros))) withZeros += 1
+      if (hMem.isSuccess) {
+        answered += 1
+        assert(hMem.get == oracleRun(), s"oracle parity: $label")
+      } else {
+        refused += 1
+        assert(hMem.failed.get.getMessage.contains("expands to"), label)
+      }
+    }
+    assert(answered >= 20 && refused >= 3 && withZeros >= 3,
+      s"the cases must cover answers, refusals and df=0 matches: $answered/$refused/$withZeros")
+  }
+
   test("stemmed index: the prefix pattern is folded but NOT stemmed (Lucene multi-term parity)") {
     val stemCorpus = TranscriptGen.corpus(seed = 7L, nConvs = 120)
     val stemOracle = new Oracle(stemCorpus, Analyzer.StemVersion)
