@@ -125,7 +125,7 @@ object IndexMaintenance {
   /** Shards whose conv range could hold any key in [lo, hi] (unstamped
     * non-empty entries conservatively included). */
   private def convCandidates(m: Manifest, lo: String, hi: String): Seq[Int] =
-    m.shards.filter(e => e.minDocId >= 0 && e.convRangeIntersects(lo, hi))
+    m.shards.filter(e => e.holdsDocs && e.convRangeIntersects(lo, hi))
       .map(_.shard)
 
   /** Delete whole conversations: copy-on-write rewrite of only the shards
@@ -713,9 +713,6 @@ object IndexMaintenance {
         IndexBuilder.termStatsAgg(IndexSnapshot.postings(spark, root, m))
       val current = IndexSnapshot.termStats(spark, root, m)
         .select($"term", $"df", $"maxTf", $"sumTf")
-        // an appended-then-deleted term may legitimately sit at df=0 in
-        // the rolled dictionary while absent from a fresh re-agg
-        .filter($"df" > 0)
       val diff = current.exceptAll(recomputed)
         .unionAll(recomputed.exceptAll(current)).count()
       if (diff != 0)

@@ -45,6 +45,12 @@ final case class ShardEntry(shard: Int, terms: Long, postings: Long, bytes: Long
                             sumDl: Long = 0L, gen: Long = 0L,
                             minConv: Option[String] = None,
                             maxConv: Option[String] = None) {
+  /** May this shard hold doc rows? The writers create a docs dir iff rows
+    * exist and stamp minDocId ≥ 0 exactly then; an entry with no docId
+    * range (written before the stamps, which the reader defaults to
+    * (-1, -1)) may hold docs iff it holds postings. */
+  def holdsDocs: Boolean = minDocId >= 0 || postings > 0
+
   /** Could this shard contain any (conv_id, …) key in [lo, hi]? true when
     * unstamped (no pruning possible). Bounds compare in UTF-8 byte order —
     * the same order docIds were assigned under (DocIdAssigner). */
@@ -53,7 +59,7 @@ final case class ShardEntry(shard: Int, terms: Long, postings: Long, bytes: Long
       case (Some(mn), Some(mx)) =>
         DocIdAssigner.utf8Compare(mn, hi) <= 0 &&
         DocIdAssigner.utf8Compare(mx, lo) >= 0
-      case _ => minDocId >= 0 // unstamped non-empty shard: cannot prune
+      case _ => true // no conv range: cannot prune
     }
 }
 

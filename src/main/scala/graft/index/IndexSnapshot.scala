@@ -40,12 +40,25 @@ import org.apache.spark.sql.types._
   */
 object IndexSnapshot {
 
-  /** Leaf dirs holding the snapshot's doc rows (shards with ≥1 doc:
-    * the writers create a dir iff rows exist, and stamp minDocId ≥ 0
-    * exactly then). */
+  private def docsDir(root: String, e: ShardEntry): String =
+    s"${IndexBuilder.Paths(root).docs}/gen=${e.gen}/shard=${e.shard}"
+
+  /** Leaf dirs that may hold the snapshot's doc rows
+    * ([[ShardEntry.holdsDocs]]). */
   def docsPaths(root: String, m: Manifest): Seq[String] =
-    m.shards.filter(_.minDocId >= 0)
-      .map(e => s"${IndexBuilder.Paths(root).docs}/gen=${e.gen}/shard=${e.shard}")
+    m.shards.filter(_.holdsDocs).map(docsDir(root, _))
+
+  /** [[docsPaths]] that exist. A stamped entry's dir exists by the
+    * writers' rule, so only the dirs of entries without a docId range are
+    * probed (one `exists` each): a stamped manifest pays nothing. */
+  private def presentDocsPaths(spark: SparkSession, root: String,
+                               m: Manifest): Seq[String] = {
+    lazy val fs = new org.apache.hadoop.fs.Path(root)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    m.shards.filter(e => e.holdsDocs &&
+        (e.minDocId >= 0 || fs.exists(new org.apache.hadoop.fs.Path(docsDir(root, e)))))
+      .map(docsDir(root, _))
+  }
 
   /** Leaf dirs holding the snapshot's posting rows (entry.postings > 0 ⇔
     * the encode pass emitted rows ⇔ the dir exists). */
@@ -107,8 +120,8 @@ object IndexSnapshot {
   /** The snapshot's docs relation (one scan; `shard` partition column
     * preserved, `gen` dropped). */
   def docs(spark: SparkSession, root: String, m: Manifest): DataFrame =
-    readLeafDirs(spark, IndexBuilder.Paths(root).docs, docsPaths(root, m),
-      docsSchema)
+    readLeafDirs(spark, IndexBuilder.Paths(root).docs,
+      presentDocsPaths(spark, root, m), docsSchema)
 
   /** Docs restricted to a shard subset — lists only those leaf dirs.
     * `schema` (e.g. [[HitLookupSchema]]) reads just those file columns
@@ -117,8 +130,8 @@ object IndexSnapshot {
               shards: Seq[Int], schema: Option[StructType] = None): DataFrame = {
     val want = shards.toSet
     val sub = m.copy(shards = m.shards.filter(e => want(e.shard)))
-    readLeafDirs(spark, IndexBuilder.Paths(root).docs, docsPaths(root, sub),
-      docsSchema, schema)
+    readLeafDirs(spark, IndexBuilder.Paths(root).docs,
+      presentDocsPaths(spark, root, sub), docsSchema, schema)
   }
 
   def postings(spark: SparkSession, root: String, m: Manifest): DataFrame =
@@ -315,7 +328,7 @@ object IndexSnapshot {
     val kept = all.filter(m => keepVs.contains(m.snapshotId))
     val P = IndexBuilder.Paths(root)
     def docsRefs(ms: Seq[Manifest]) = ms.flatMap(m =>
-      m.shards.filter(_.minDocId >= 0).map(e => (e.gen, e.shard))).toSet
+      m.shards.filter(_.holdsDocs).map(e => (e.gen, e.shard))).toSet
     def postRefs(ms: Seq[Manifest]) = ms.flatMap(m =>
       m.shards.filter(_.postings > 0).map(e => (e.gen, e.shard))).toSet
     val fs = new org.apache.hadoop.fs.Path(root)

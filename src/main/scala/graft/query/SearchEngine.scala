@@ -35,7 +35,8 @@ import graft.model.{CorpusStats, QueryFilter, QuerySpec, SearchHit, TermStats}
   *     boosts, an optional proximity part) goes to ONE shard-local
   *     executor ([[execute]]). The executor scans the pruned
   * postings once, decodes them and splits each shard's cursors by role in
-  * `mapPartitions` (zero per-query shuffle), applies the presence gates,
+  * `mapPartitions` (zero per-query shuffle; at most `defaultParallelism`
+  * tasks, each packing whole shards), applies the presence gates,
   * then runs the walk the clause shape picks and merges the per-shard
   * top-k on the driver (network O(shards × k)):
   *
@@ -752,12 +753,9 @@ object SearchEngine {
     val lo = segments.map(_._1).min
     val hi = segments.map(_._2).max
     val segs = segments.sorted.toVector
-    val pruned = shardsIntersecting(m, lo, hi) match {
-        case Some(sh) =>
-          postingsFor(spark, root, m).filter($"shard".isin(sh: _*))
-        case None => postingsFor(spark, root, m)
-      }
-    pruned.filter($"term".isin(terms: _*))
+    postingsFor(spark, root, m)
+      .filter($"shard".isin(shardsIntersecting(m, lo, hi): _*))
+      .filter($"term".isin(terms: _*))
       .select($"term", $"count", $"docIds", $"tfs", $"dls", $"blockFirst",
         $"docOff", $"tfOff", $"dlOff", $"blockMaxTf", $"blockMinDl")
       .mapPartitions { rows =>
@@ -803,12 +801,8 @@ object SearchEngine {
     val shardPrune: DataFrame => DataFrame =
       if (ranges.isEmpty) identity
       else {
-        val pruned = segs.map { case (lo, hi) => shardsIntersecting(m, lo, hi) }
-        if (pruned.exists(_.isEmpty)) identity // legacy manifest: no ranges
-        else {
-          val sh = pruned.flatMap(_.get).distinct
-          df => df.filter(col("shard").isin(sh: _*))
-        }
+        val sh = segs.flatMap { case (lo, hi) => shardsIntersecting(m, lo, hi) }.distinct
+        df => df.filter(col("shard").isin(sh: _*))
       }
     (segs, shardPrune)
   }
@@ -824,21 +818,22 @@ object SearchEngine {
     (if (withPos) base ++ Seq("positions", "posOff") else base).map(col)
   }
 
-  /** ONE streaming pass over a task's posting rows (VERDICT r03 item 2):
-    * each row decodes to its compressed BlockedList immediately and the
-    * Row object drops, so task memory is exactly the selected terms'
-    * compressed posting bytes. Key space is O(shards-in-task × query
-    * terms) — tiny — while values hold the compressed bytes. */
-  private def decodeByTerm(rows: Iterator[org.apache.spark.sql.Row],
-                           withPos: Boolean)
-      : scala.collection.mutable.LinkedHashMap[(Int, String),
+  /** ONE streaming pass over one shard's run of posting rows (VERDICT r03
+    * item 2): it consumes rows while the head row belongs to `shard`, each
+    * row decodes to its compressed BlockedList immediately and the Row
+    * object drops, so task memory is exactly this shard's selected
+    * compressed posting bytes. Keys are the query terms — tiny — while
+    * values hold the compressed bytes. */
+  private def decodeRun(rows: scala.collection.BufferedIterator[org.apache.spark.sql.Row],
+                        shard: Int, withPos: Boolean)
+      : scala.collection.mutable.LinkedHashMap[String,
           scala.collection.mutable.ArrayBuffer[graft.index.PostingCodec.BlockedList]] = {
     val byTerm = scala.collection.mutable.LinkedHashMap
-      .empty[(Int, String),
+      .empty[String,
              scala.collection.mutable.ArrayBuffer[graft.index.PostingCodec.BlockedList]]
-    rows.foreach { r =>
-      val key = (r.getInt(0), r.getString(1))
-      byTerm.getOrElseUpdate(key,
+    while (rows.hasNext && rows.head.getInt(0) == shard) {
+      val r = rows.next()
+      byTerm.getOrElseUpdate(r.getString(1),
         scala.collection.mutable.ArrayBuffer
           .empty[graft.index.PostingCodec.BlockedList]) +=
         graft.index.PostingCodec.BlockedList(
@@ -858,12 +853,12 @@ object SearchEngine {
     * chunk's first docId — robust even if a shard's rows were encoded by
     * several tasks. */
   private def buildCursors(
-      termChunks: scala.collection.Map[(Int, String),
+      termChunks: scala.collection.Map[String,
         scala.collection.mutable.ArrayBuffer[graft.index.PostingCodec.BlockedList]],
       dfByTerm: Map[String, Long], canonical: Map[String, Int],
       nDocs: Long, avgdl: Double,
       boostOf: Map[String, Double] = Map.empty): Seq[Wand.TermCursor] =
-    termChunks.map { case ((_, term), chunks) =>
+    termChunks.map { case (term, chunks) =>
       val sorted = chunks
         .sortBy(c => if (c.blockFirst.isEmpty) Long.MaxValue
                      else c.blockFirst(0))
@@ -963,27 +958,35 @@ object SearchEngine {
       if (c.required.isEmpty) (if (minMatch <= 1) "or" else "should")
       else if (plainAnd) "and" else "and-probes"
 
-    /** Decode a task's posting rows, group them by shard and split each
-      * shard's cursors by role. Presence gates: a doc's postings are
-      * complete within its shard, so a required or filter list absent
-      * from the shard, or fewer SHOULD lists than the count requirement,
-      * means no doc here can match. */
+    /** Decode a task's posting rows one shard at a time and split each
+      * shard's cursors by role. A task packs several whole shards, and
+      * each shard's rows arrive as ONE consecutive run ([[execute]]), so
+      * the next shard decodes only after the caller has walked this one:
+      * a task's peak is one shard's lists however many shards it packs. A
+      * shard whose rows come back after another shard's is a broken scan
+      * layout and fails the task rather than answer from half a shard.
+      * Presence gates: a doc's postings are complete within its shard, so
+      * a required or filter list absent from the shard, or fewer SHOULD
+      * lists than the count requirement, means no doc here can match. */
     def shards(rows: Iterator[org.apache.spark.sql.Row],
-               withPos: Boolean): Iterator[(Int, ShardCursors)] =
-      // one partition may pack several whole shards: group the (few)
-      // keys, never the rows
-      decodeByTerm(rows, withPos).groupBy(_._1._1).iterator.flatMap {
-        case (shard, termChunks) =>
-          val all = buildCursors(termChunks, dfByTerm, canonical,
-            stats.nDocs, stats.avgdl, c.boosts)
-          val filters = all.filterNot(_.scored)
-          val required = all.filter(t => requiredSet(t.term))
-          val should = all.filter(t => shouldSet(t.term))
-          if (filters.size < c.filters.size ||
-              required.size < c.required.size || should.size < minMatch) None
-          else Some(shard -> new ShardCursors(required, filters, should,
-            all.filter(t => prohibitedSet(t.term))))
+               withPos: Boolean): Iterator[(Int, ShardCursors)] = {
+      val in = rows.buffered
+      val seen = scala.collection.mutable.HashSet.empty[Int]
+      Iterator.continually(in).takeWhile(_.hasNext).flatMap { _ =>
+        val shard = in.head.getInt(0)
+        if (!seen.add(shard)) throw new IllegalStateException(
+          s"shard $shard's posting rows are not one consecutive run in this task")
+        val all = buildCursors(decodeRun(in, shard, withPos), dfByTerm,
+          canonical, stats.nDocs, stats.avgdl, c.boosts)
+        val filters = all.filterNot(_.scored)
+        val required = all.filter(t => requiredSet(t.term))
+        val should = all.filter(t => shouldSet(t.term))
+        if (filters.size < c.filters.size ||
+            required.size < c.required.size || should.size < minMatch) None
+        else Some(shard -> new ShardCursors(required, filters, should,
+          all.filter(t => prohibitedSet(t.term))))
       }
+    }
 
     /** The shard's top-k by the walk the clause shape picks. */
     def topK(r: ShardCursors): Iterator[SearchHit] =
@@ -1115,6 +1118,9 @@ object SearchEngine {
     val wandNanos =
       if (telemetry) Some(spark.sparkContext.longAccumulator("graft.wandNanos"))
       else None
+    val taskRows =
+      if (telemetry) Some(spark.sparkContext.collectionAccumulator[Long]("graft.taskRows"))
+      else None
 
     // Per-shard grouping must be COMPLETE inside each task: posting files
     // are term-sorted, so if a shard's rows split across scan tasks at
@@ -1125,33 +1131,40 @@ object SearchEngine {
     // this). Execution path choice (VERDICT r02 item 2 — a per-query
     // `repartition($"shard")` costs a shuffle stage per query):
     //  - every shard dir holds ONE parquet file (the layout every build/
-    //    maintenance write produces) → scan with split sizing pinned to
-    //    the largest file, so one task = one whole shard file and the
-    //    in-task grouping is complete WITHOUT any shuffle — both cold and
-    //    through the serving cache (which pins the aligned frame);
-    //  - multi-file shard dirs (external/legacy layout) → fall back to
-    //    the repartition, trading latency for unconditional correctness.
-    // ONE streaming pass over the task's rows (VERDICT r03 item 2): each
-    // row decodes to its compressed BlockedList immediately and the Row
-    // drops ([[decodeByTerm]]).
+    //    maintenance write produces) → the aligned scan reads each shard
+    //    file whole in one scan partition, both cold and through the
+    //    serving cache (which pins the aligned frame). `coalesce` then
+    //    packs those whole-file partitions, without a shuffle, into at
+    //    most `defaultParallelism` tasks, so a query is one wave of tasks
+    //    however many shards are live. The coalescer balances the packs
+    //    by partition count and reads its parents one after another, so
+    //    a shard's rows stay one consecutive run inside its task;
+    //  - multi-file shard dirs (external/legacy layout) → hash-repartition
+    //    on `shard` into the same number of tasks and sort each task by
+    //    `shard`, trading latency for unconditional correctness.
+    // Each task decodes and walks its shards one run at a time
+    // ([[ClauseWeight.shards]]).
     val t0 = System.nanoTime()
     val (hits, shardHits, pathName) =
       if (segs.isEmpty) (Vector.empty[SearchHit], 0, "empty-scope")
       else {
         val (scanFrame, path, needShuffle) =
           resolvedPostingsScan(spark, root, m, needPositions = withPos)
+        val tasks = spark.sparkContext.defaultParallelism
         val selected0 = shardPrune(scanFrame).filter($"term".isin(terms: _*))
+          .select(postingScanColumns(withPos): _*)
         val selected =
-          (if (needShuffle) selected0.repartition($"shard") else selected0)
-            .select(postingScanColumns(withPos): _*)
+          if (needShuffle)
+            selected0.repartition(tasks, $"shard").sortWithinPartitions($"shard")
+          else selected0.coalesce(tasks)
         if (rescan) {
-          val (h, n) = rescanTopK(spark, root, m, w, selected, k)
+          val (h, n) = rescanTopK(spark, root, m, w, selected, k, taskRows)
           (h, n, path)
         } else {
           val perShard = selected.mapPartitions { rows =>
             val t = System.nanoTime()
-            val out = w.shards(rows, withPos).flatMap { case (_, r) => w.topK(r) }
-              .toVector
+            val out = w.shards(counted(rows, taskRows), withPos)
+              .flatMap { case (_, r) => w.topK(r) }.toVector
             wandNanos.foreach(_.add(System.nanoTime() - t))
             out.iterator
           }.collect()
@@ -1164,8 +1177,27 @@ object SearchEngine {
       f"""{"graft_query_telemetry":{"walk":"${if (rescan) "rescan" else w.walkName}",""" +
       f""""terms":${terms.size},"k":$k,"path":"$pathName","exec_ms":$execMs%.1f,""" +
       f""""wand_ms":${wandNanos.map(_.value / 1e6).getOrElse(-1.0)}%.1f,""" +
-      f""""shard_hits":$shardHits,"hits":${hits.size}}}""")
+      f""""shard_hits":$shardHits,"hits":${hits.size},${packReport(taskRows)}}}""")
     hits
+  }
+
+  /** Telemetry: counts a scan task's posting rows into `acc` once the
+    * task has read them all. */
+  private def counted(rows: Iterator[org.apache.spark.sql.Row],
+                      acc: Option[org.apache.spark.util.CollectionAccumulator[Long]])
+      : Iterator[org.apache.spark.sql.Row] =
+    acc.fold(rows) { a =>
+      var n = 0L
+      rows.map { r => n += 1; r } ++ { a.add(n); Iterator.empty }
+    }
+
+  /** The telemetry fields of a query's scan packing: its task count and
+    * the skew of posting rows over tasks (the largest over the mean). */
+  private def packReport(acc: Option[org.apache.spark.util.CollectionAccumulator[Long]]): String = {
+    import scala.jdk.CollectionConverters._
+    val rows = acc.map(_.value.asScala.toVector).getOrElse(Vector.empty)
+    val skew = if (rows.sum == 0L) 1.0 else rows.max * rows.size.toDouble / rows.sum
+    f""""tasks":${rows.size},"task_rows_skew":$skew%.2f"""
   }
 
   /** Proximity on a positions-free index (the rescan fallback):
@@ -1182,11 +1214,12 @@ object SearchEngine {
     * here — the positional format exists for exactly that workload
     * (VERDICT r05 item 2). Returns the hits and the candidate count. */
   private def rescanTopK(spark: SparkSession, root: String, m: Manifest,
-                         w: ClauseWeight, selected: DataFrame,
-                         k: Int): (Vector[SearchHit], Int) = {
+                         w: ClauseWeight, selected: DataFrame, k: Int,
+                         taskRows: Option[org.apache.spark.util.CollectionAccumulator[Long]])
+      : (Vector[SearchHit], Int) = {
     import spark.implicits._
     val cand = selected.mapPartitions { rows =>
-      w.shards(rows, withPos = false).flatMap { case (shard, r) =>
+      w.shards(counted(rows, taskRows), withPos = false).flatMap { case (shard, r) =>
         w.candidates(r).map(d => (shard, d))
       }
     }.toDF("shard", "docId").localCheckpoint(true)
@@ -1830,25 +1863,26 @@ object SearchEngine {
     scored.orderBy($"score".desc, $"docId".asc).limit(k)
   }
 
-  /** Shards whose manifest docId range intersects [lo, hi]. None when the
-    * manifest carries no ranges (legacy snapshot) — caller falls back to
-    * an unpruned scan. Entries with (-1,-1) in a range-carrying manifest
-    * hold no docs and are skipped. */
+  /** Shards that may hold a docId in [lo, hi]: a stamped entry by its
+    * manifest docId range; an entry without a range (written before the
+    * stamps, which the manifest reader defaults to (-1,-1)) cannot be
+    * pruned and is kept whenever it holds docs
+    * ([[graft.index.ShardEntry.holdsDocs]]), in a manifest of any mix. */
   private def shardsIntersecting(m: graft.index.Manifest,
-                                 lo: Long, hi: Long): Option[Seq[Int]] = {
-    if (!m.shards.exists(_.minDocId >= 0)) None
-    else Some(m.shards
-      .filter(s => s.minDocId >= 0 && s.minDocId <= hi && s.maxDocId >= lo)
-      .map(_.shard))
-  }
+                                 lo: Long, hi: Long): Seq[Int] =
+    m.shards.filter(s =>
+      if (s.minDocId >= 0) s.minDocId <= hi && s.maxDocId >= lo
+      else s.holdsDocs).map(_.shard)
 
   /** Full read path: top-k + per-hit snippet + doc key — the SearchData
     * analog (reference dto/search/SearchData.java:12-20; snippets computed
     * for the k shown rows only, SearchServiceImpl.java:281-290). Two Spark
-    * jobs when warm: the search, then ONE doc lookup that reads only the
-    * shards whose manifest [minDocId, maxDocId] holds a hit (≤ k shards)
-    * with the fixed [[IndexSnapshot.HitLookupSchema]], so no
-    * schema-inference job runs. */
+    * jobs when warm: the search (at most `defaultParallelism` tasks, each
+    * packing several whole shards), then ONE doc lookup that reads only
+    * the shards whose manifest [minDocId, maxDocId] holds a hit (≤ k
+    * shards, plus any shard without a range) with the
+    * fixed [[IndexSnapshot.HitLookupSchema]], so no schema-inference job
+    * runs. */
   def queryWithSnippets(spark: SparkSession, root: String, queryText: String,
                         mode: String = "AND", k: Int = 10)
       : Seq[(Long, Double, String, String, Int)] = {
@@ -1861,9 +1895,7 @@ object SearchEngine {
     val normalize: String => String =
       if (version == Analyzer.StemVersion) graft.analysis.Stemmer.stem else identity
     val ids = hits.map(_.docId)
-    // a manifest with no stamped shard (legacy) cannot prune: read all
-    val shards = ids.flatMap(d => shardsIntersecting(m, d, d)
-      .getOrElse(m.shards.map(_.shard))).distinct
+    val shards = ids.flatMap(d => shardsIntersecting(m, d, d)).distinct
     val byId = IndexSnapshot.docsFor(spark, root, m, shards, Some(IndexSnapshot.HitLookupSchema))
       .filter(col("docId").isin(ids: _*))
       .select(col("docId"), col("text"), col("conv_id"), col("turn_idx"))
@@ -1984,9 +2016,11 @@ object SearchEngine {
 
   /** Shard-aligned cold-scan plans, keyed by (root, snapshot id): a
     * postings DataFrame whose scan split sizing is pinned to the largest
-    * file, so each task reads EXACTLY one whole shard file and the WAND
-    * grouping needs no per-query shuffle. Built on a CLONED session
-    * (`newSession` shares the SparkContext but isolates SQL conf) so the
+    * file, so each scan partition is EXACTLY one whole shard file and the
+    * WAND grouping needs no per-query shuffle ([[execute]] then packs
+    * those partitions into at most `defaultParallelism` tasks). Built on
+    * a CLONED session (`newSession` shares the SparkContext but isolates
+    * SQL conf) so the
     * pinned split confs never leak into the caller's session; listing is
     * manifest-resolved (exactly the snapshot's leaf dirs). None = some
     * shard dir holds several parquet files (external/legacy layout) →
@@ -1999,10 +2033,11 @@ object SearchEngine {
     scala.collection.concurrent.TrieMap.empty[(String, Long), Option[DataFrame]]
 
   /** Pick the postings scan frame for one query: serving-cached frame
-    * when pinned and fresh, else the shard-aligned scan (one task = one
-    * whole shard file, no shuffle), else the raw snapshot scan that
-    * needs a per-query `repartition($"shard")` for in-task completeness.
-    * Returns (frame, telemetry label, needs-shuffle). */
+    * when pinned and fresh, else the shard-aligned scan (one partition =
+    * one whole shard file, no shuffle; [[execute]] packs several into a
+    * task), else the raw snapshot scan that needs a per-query
+    * `repartition($"shard")` for in-task completeness. Returns (frame,
+    * telemetry label, needs-shuffle). */
   private def resolvedPostingsScan(spark: SparkSession, root: String,
                                    m: Manifest,
                                    needPositions: Boolean = false): (DataFrame, String, Boolean) =
@@ -2058,7 +2093,8 @@ object SearchEngine {
 
   /** true ⇔ the pinned postings frame was built from the ALIGNED scan
     * (one whole shard file per partition), so cached queries can skip the
-    * per-query shard shuffle exactly like the cold aligned path. */
+    * per-query shard shuffle and pack whole shards exactly like the cold
+    * aligned path. */
   private val cachedPostingsAligned =
     scala.collection.concurrent.TrieMap.empty[String, Boolean]
 

@@ -13,8 +13,9 @@ import org.apache.spark.sql.SparkSession
   * property that the block's thread carries (Spark copies local
   * properties onto every job the thread submits), so jobs of other
   * threads never count. `tasks(i)` is the task count of the stages job
-  * `i` actually ran (skipped stages excluded), in job order. */
-final case class JobCount(jobs: Int, tasks: Vector[Int])
+  * `i` actually ran (skipped stages excluded), in job order; `stages`
+  * holds the task count of every stage that ran, in submission order. */
+final case class JobCount(jobs: Int, tasks: Vector[Int], stages: Vector[Int])
 
 object JobCounter {
   private val Key = "graft.test.jobcount"
@@ -53,6 +54,6 @@ object JobCounter {
     val jobs = jobStarts.asScala.filter(_._1 == tag).map(_._2).toVector.sorted
     val stages = stageRuns.asScala.filter(_._1 == tag).toVector
     (out, JobCount(jobs.size,
-      jobs.map(j => stages.filter(_._2 == j).map(_._3).sum)))
+      jobs.map(j => stages.filter(_._2 == j).map(_._3).sum), stages.map(_._3)))
   }
 }

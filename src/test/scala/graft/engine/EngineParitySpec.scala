@@ -205,6 +205,30 @@ class EngineParitySpec extends AnyFunSuite {
     assert(SearchEngine.queryWithSnippets(spark, copy, "needlemid w0000", "AND", 5) == res)
   }
 
+  test("a manifest with no docId ranges still serves snippets, appends after its last doc and deletes") {
+    val stamped = SearchEngine.queryWithSnippets(spark, root, "needlemid w0000", "AND", 5)
+    assert(stamped.nonEmpty)
+    val copy = SparkTestBase.tmpDir("graft-index-no-ranges")
+    org.apache.commons.io.FileUtils.copyDirectory(new java.io.File(root), new java.io.File(copy))
+    val m = IndexManifest.read(copy).get
+    // what the manifest reader defaults to for entries written without stamps
+    IndexManifest.commit(copy, m.copy(snapshotId = m.snapshotId + 1,
+      shards = m.shards.map(_.copy(minDocId = -1L, maxDocId = -1L))))
+    assert(IndexManifest.read(copy).get.shards.forall(_.minDocId < 0))
+    assert(SearchEngine.queryWithSnippets(spark, copy, "needlemid w0000", "AND", 5) == stamped)
+    // the append finds the max docId by scanning the docs it now lists
+    graft.index.IndexMaintenance.appendConversations(spark, copy, Seq(graft.model.Turn(
+      "zz-no-ranges", 0, "user", "needlerare unstamped", "", new java.sql.Timestamp(0L))))
+    val appended = graft.index.IndexSnapshot.docs(spark, copy, IndexManifest.read(copy).get)
+      .filter($"conv_id" === "zz-no-ranges").select($"docId").as[Long].collect()
+    assert(appended.toSeq == Seq(oracle.nDocs))
+    // a delete finds its victims in shards that carry no ranges
+    val gone = stamped.head._4
+    graft.index.IndexMaintenance.deleteConversations(spark, copy, Set(gone))
+    assert(!SearchEngine.queryWithSnippets(spark, copy, "needlemid w0000", "AND", 5)
+      .exists(_._4 == gone), s"$gone must be deleted")
+  }
+
   test("statistics job: totals consistent with manifest and oracle") {
     val t = graft.stats.StatisticsJob.totals(spark, root).head()
     assert(t.getLong(0) == oracle.nDocs)

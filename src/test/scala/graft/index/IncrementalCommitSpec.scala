@@ -172,4 +172,22 @@ class IncrementalCommitSpec extends AnyFunSuite {
     val problems = IndexMaintenance.verifyManifest(spark, root)
     assert(problems.exists(_.contains("nDocs")), s"got: $problems")
   }
+
+  test("deep fsck reports a df = 0 dictionary row") {
+    val corpus = TranscriptGen.corpus(seed = 33L, nConvs = 40)
+    val root = SparkTestBase.tmpDir("graft-fsck-dfzero")
+    IndexBuilder.build(spark, spark.createDataset(corpus), root,
+      shards = 4, waveSize = 4, maxChunkPostings = 64)
+    fsckClean(root, "build")
+    // no maintenance op writes a df = 0 row: plant one in the generation
+    val statsDir = IndexSnapshot.termStatsPath(root, IndexManifest.read(root).get)
+    val rows = spark.read.parquet(statsDir).collect()
+    spark.createDataFrame(java.util.Arrays.asList(
+        rows :+ org.apache.spark.sql.Row("zzdfzero", 0L, 0, 0L): _*), rows.head.schema)
+      .coalesce(1).write.mode("overwrite").parquet(statsDir)
+    val problems = IndexMaintenance.verifyManifest(spark, root, deep = true)
+    assert(problems.exists(_.contains("term_stats diverges")), s"got: $problems")
+    assert(IndexMaintenance.verifyManifest(spark, root).isEmpty,
+      "the shallow check does not read the dictionary")
+  }
 }

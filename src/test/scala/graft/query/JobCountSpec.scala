@@ -8,10 +8,12 @@ import graft.index.{IndexBuilder, IndexManifest, IndexMaintenance}
 import graft.model.Turn
 import graft.oracle.Oracle
 
-/** Spark jobs per query. Planning reads the snapshot-resident dictionary
-  * (IndexSnapshot.dictionary), so once a generation is loaded a query is
-  * exactly its executor's one job, a snippet query adds one pruned doc
-  * lookup, and a query with nothing to search runs none. */
+/** Spark jobs and tasks per query. Planning reads the snapshot-resident
+  * dictionary (IndexSnapshot.dictionary), so once a generation is loaded a
+  * query is exactly its executor's one job, a snippet query adds one
+  * pruned doc lookup, and a query with nothing to search runs none. The
+  * executor packs whole shard files into at most `defaultParallelism`
+  * tasks, so the 8-shard fixture on `local[4]` scans in one wave. */
 class JobCountSpec extends AnyFunSuite {
 
   private lazy val spark = SparkTestBase.spark
@@ -27,6 +29,8 @@ class JobCountSpec extends AnyFunSuite {
   }
 
   private def jobs[A](body: => A): (A, graft.JobCount) = JobCounter.count(spark)(body)
+
+  private def cores = spark.sparkContext.defaultParallelism
 
   test("a warm query of every mode is one job; all-absent MUST terms are none") {
     val oracle = new Oracle(corpus)
@@ -52,10 +56,30 @@ class JobCountSpec extends AnyFunSuite {
       val (hits, c) = jobs(run())
       assert(hits.nonEmpty && hits == expected, s"$name answer")
       assert(c.jobs == 1, s"warm $name query: $c")
+      assert(c.tasks(0) <= cores, s"warm $name query packs its 8 shards: $c")
     }
     val (none, c) = jobs(SearchEngine.query(spark, root, "zzabsent qqnowhere", "AND", 10))
     assert(none.isEmpty)
     assert(c.jobs == 0, s"all-absent MUST terms: $c")
+  }
+
+  test("a positions-free rescan runs at most defaultParallelism tasks per stage") {
+    val r = SparkTestBase.tmpDir("graft-jobcount-nopos")
+    IndexBuilder.build(spark, spark.createDataset(corpus), r,
+      shards = 8, waveSize = 8, maxChunkPostings = 64)
+    assert(!IndexManifest.readCached(r).get.positions)
+    val oracle = new Oracle(corpus)
+    SearchEngine.query(spark, r, "needlemid", "AND", 10) // loads the dictionary
+    Seq(
+      ("phrase", () => SearchEngine.phraseTopK(spark, r, "stopish needlemid", 10),
+        oracle.phraseTopK("stopish needlemid", 10)),
+      // hot terms: candidates in all 8 shards, so the doc lookup reads them all
+      ("NEAR", () => SearchEngine.nearTopK(spark, r, "roleuser w0000", 30, 10),
+        oracle.nearTopK("roleuser w0000", 30, 10))).foreach { case (name, run, expected) =>
+      val (hits, c) = jobs(run())
+      assert(hits.nonEmpty && hits == expected, s"rescan $name answer")
+      assert(c.stages.nonEmpty && c.stages.forall(_ <= cores), s"rescan $name stages: $c")
+    }
   }
 
   test("a warm snippet query is two jobs; the lookup reads only the hits' shards") {
@@ -68,6 +92,7 @@ class JobCountSpec extends AnyFunSuite {
     assert(hitShards.size < m.shards.count(_.minDocId >= 0),
       s"the hits must leave some shard unread for the check to bite: $hitShards")
     assert(c.jobs == 2, s"snippet query: $c")
+    assert(c.tasks(0) <= cores, s"snippet query search: $c")
     assert(c.tasks(1) <= hitShards.size, s"lookup tasks vs hit shards $hitShards: $c")
   }
 

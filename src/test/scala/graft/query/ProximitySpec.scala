@@ -378,9 +378,10 @@ class ProximitySpec extends AnyFunSuite {
     IndexBuilder.build(spark, spark.createDataset(base)(
       org.apache.spark.sql.Encoders.product[graft.model.Turn]), dir,
       shards = 4, waveSize = 4, maxChunkPostings = 64)
-    // dictionary rows at df = 0 (an appended-then-deleted term, which
-    // verifyManifest tolerates; delete and replace re-aggregate the
-    // dictionary today, so the fixture writes them into the generation)
+    // dictionary rows at df = 0: no maintenance op writes one (delete and
+    // replace re-aggregate the dictionary, and deep fsck reports such a
+    // row), so the fixture plants them to pin how expansion treats them
+    // on both sides of the cap
     val m = graft.index.IndexManifest.readCached(dir).get
     val statsDir = graft.index.IndexSnapshot.termStatsPath(dir, m)
     val rows = spark.read.parquet(statsDir).collect()
