@@ -80,10 +80,10 @@ object BuildIndex {
   * Usage: Query <indexRoot> <queryText> [--mode AND|OR|SHOULD|PHRASE|NEAR|PREFIX|FUZZY|WILDCARD]
   *        [--k N] [--slop N] [--ordered] [--edits N] [--prefix-len N] [--min-match N]
   *        [--not <terms>] [--should <terms>] [--role X] [--tool Y] [--from ts] [--to ts]
-  *        [--after <cursor>] [--naive] [--conv <prefix> | --scopes p1,p2] [--snapshot N]
+  *        [--after <cursor>] [--conv <prefix> | --scopes p1,p2] [--snapshot N]
   *        | Query <root> '<lucene query>' --lucene
   * The flags build ONE [[graft.query.Query]] tree, answered by ONE
-  * [[SearchEngine.search]] call (`--naive` aside: the Catalyst backstop):
+  * [[SearchEngine.search]] call:
   *  - AND → `Bool(must)`, OR → `Bool(should, minShould 1)`; SHOULD →
   *    `Bool(should, minShould = --min-match)`: documents containing at
   *    least N of the query's distinct terms, scored over the present
@@ -121,17 +121,32 @@ object BuildIndex {
   * default). `--scopes a,b` scopes any query (per-scope statistics,
   * best-instance union); `--conv p` is the one-scope spelling kept for
   * plain AND/OR and excludes --scopes. `--snapshot N` time-travels every
-  * query. `--naive` runs plain AND/OR through the Catalyst backstop,
-  * unscoped, on the current snapshot. Every refusal happens before the
-  * Spark session starts.
+  * query. An argument that is not one of these flags (or a flag's value)
+  * refuses, so a typo never runs some other query. Every refusal happens
+  * before the Spark session starts.
   */
 object Query {
   private val usage =
     "usage: Query <indexRoot> <queryText> [--mode AND|OR|SHOULD|PHRASE|NEAR|PREFIX|FUZZY|WILDCARD] " +
     "[--k N] [--slop N] [--ordered] [--edits N] [--prefix-len N] [--min-match N] " +
     "[--not <terms>] [--should <terms>] [--role X] [--tool Y] [--from ts] [--to ts] " +
-    "[--after <cursor>] [--naive] [--conv <prefix> | --scopes p1,p2] [--snapshot N] " +
+    "[--after <cursor>] [--conv <prefix> | --scopes p1,p2] [--snapshot N] " +
     "| Query <root> '<lucene query>' --lucene"
+
+  private val valueFlags = Set("--mode", "--k", "--slop", "--edits",
+    "--prefix-len", "--min-match", "--not", "--should", "--role", "--tool",
+    "--from", "--to", "--after", "--conv", "--scopes", "--snapshot")
+  private val switchFlags = Set("--ordered", "--lucene")
+
+  /** The first argument after `<root> <query>` that is neither a known
+    * flag nor a value flag's value. */
+  @scala.annotation.tailrec
+  private def unknownArg(rest: List[String]): Option[String] = rest match {
+    case f :: tail if valueFlags(f) => unknownArg(tail.drop(1))
+    case f :: tail if switchFlags(f) => unknownArg(tail)
+    case other :: _ => Some(other)
+    case Nil => None
+  }
 
   def main(args: Array[String]): Unit = {
     import graft.query.Query.{Bool, Expand, Fuzzy, Phrase, Prefix, Wildcard}
@@ -142,6 +157,7 @@ object Query {
     // (ADVICE r05 item 2)
     def refuse(why: String): Nothing = sys.error(s"$why — $usage")
     if (a.size < 2) sys.error(usage)
+    unknownArg(a.drop(2).toList).foreach(x => refuse(s"unknown argument '$x'"))
     val root = a(0)
     val q = a(1)
     val mode = opt("--mode").getOrElse("AND").toUpperCase
@@ -160,19 +176,13 @@ object Query {
     }
     val k = intOpt("--k").getOrElse(10)
     if (k < 1) refuse(s"--k must be >= 1, got $k")
-    val naive = a.contains("--naive")
     val lucene = a.contains("--lucene")
     val conv = opt("--conv")
     val scopeList = opt("--scopes").map(_.split(",").toSeq.filter(_.nonEmpty))
-    // both would name the scopes (one would be silently dropped), and the
-    // naive backstop has no scoped form (it would answer unscoped)
+    // both would name the scopes (one would be silently dropped)
     if (conv.nonEmpty && scopeList.nonEmpty) refuse("--conv and --scopes both name the scopes; pass one")
-    if (naive && (conv.nonEmpty || scopeList.nonEmpty)) refuse("--naive answers unscoped; drop --conv/--scopes")
     val scopes = scopeList.orElse(conv.map(Seq(_))).getOrElse(Nil)
     val snapshot = numOpt("--snapshot") // time travel (retained only)
-    require(snapshot.isEmpty || !naive,
-      "--snapshot cannot be combined with --naive (the naive backstop " +
-      "always answers from the current snapshot); drop one of them")
     // combined BooleanQuery (r7): --should adds OPTIONAL clauses to an
     // AND query (+ optional --not) — Lucene's general MUST + SHOULD +
     // MUST_NOT form; --min-match then means minimumShouldMatch
@@ -226,9 +236,9 @@ object Query {
         s"page printed (<scoreBits>:<docId>), got '$v'"))
     }
     require(after.isEmpty ||
-      (Set("AND", "OR", "SHOULD").contains(mode) || lucene) && scopes.isEmpty && !naive,
+      (Set("AND", "OR", "SHOULD").contains(mode) || lucene) && scopes.isEmpty,
       "--after pages AND/OR/SHOULD/--should/--not/--lucene term queries " +
-      "only, without --conv/--scopes/--naive")
+      "only, without --conv/--scopes")
     // mode checks FIRST, then the slop parse/range (ADVICE r05 item 2:
     // 'Query ... --mode AND --slop abc' must say --slop is NEAR-only, not
     // die in toInt; NEAR with a bad/negative slop gets the usage message)
@@ -247,9 +257,9 @@ object Query {
       s"--not expects a term list, got '${notText.getOrElse("")}' (missing value?)")
     require(notText.isEmpty || mode == "AND",
       "--not requires --mode AND (Lucene BooleanQuery MUST + MUST_NOT)")
-    require(!naive && conv.isEmpty || Set("AND", "OR").contains(mode) &&
+    require(conv.isEmpty || Set("AND", "OR").contains(mode) &&
       shouldText.isEmpty && notText.isEmpty && qFilter.isEmpty && !lucene,
-      s"--naive/--conv apply to plain AND/OR term queries only, not to " +
+      s"--conv applies to plain AND/OR term queries only, not to " +
       s"$mode/--should/--not/filters/--lucene (use --scopes)")
     val slop = intOpt("--slop").getOrElse(2)
     require(slop >= 0, s"--slop must be >= 0, got $slop (window width = slop+1)")
@@ -267,7 +277,7 @@ object Query {
     require(!lucene || (opt("--mode").isEmpty && notText.isEmpty &&
         shouldText.isEmpty && qFilter.isEmpty),
       "--lucene puts the whole query in the string: it does not combine " +
-      "with --mode/--not/--should/--role/--tool/--from/--to/--conv/--naive " +
+      "with --mode/--not/--should/--role/--tool/--from/--to/--conv " +
       "(--min-match, --scopes and --snapshot still apply)")
     val (tree, filter) =
       if (lucene) {
@@ -307,12 +317,8 @@ object Query {
     }
     val spark = CliSession.session("graft-query")
     val t0 = System.nanoTime()
-    val hits =
-      if (naive)
-        SearchEngine.queryNaive(spark, root, q, mode, k).collect()
-          .map(r => graft.model.SearchHit(r.getLong(0), r.getDouble(1))).toVector
-      else diagnosed(SearchEngine.search(spark, root, tree, k, scopes, pinned,
-        filter, after))
+    val hits = diagnosed(SearchEngine.search(spark, root, tree, k, scopes,
+      pinned, filter, after))
     val ms = (System.nanoTime() - t0) / 1e6
     val modeLabel =
       if (mode == "NEAR" && a.contains("--ordered")) s"ONEAR~$slop"
@@ -345,7 +351,7 @@ object Query {
     // follow — print the exact-bits cursor for the next page. Offset
     // pagination re-walks everything it skips; the cursor walk stays
     // O(k) at any depth, the 100 TB-serving shape.
-    val pageable = !naive && scopes.isEmpty &&
+    val pageable = scopes.isEmpty &&
       (tree match { case b: Bool => b.phrase.isEmpty; case _ => false })
     if (pageable && hits.size == k)
       hits.lastOption.foreach { h =>

@@ -20,19 +20,6 @@ import graft.query.Bm25
   */
 object EntryQueries {
 
-  /** Dev-only plan capture (graft.cli.PlanDump): helpers that eagerly
-    * collect their ≤k-row result (the bm25 family) pass the full
-    * distributed plan through here right before the collect, so the
-    * optimization-round plan evidence shows the real computation, not
-    * the LocalRelation wrapper. No-op (identity) unless a hook is
-    * installed; never set outside dev tools. */
-  private[graft] var planHook: DataFrame => Unit = null
-  private def captured(df: DataFrame): DataFrame = {
-    val h = planHook
-    if (h != null) h(df)
-    df
-  }
-
   /** Compute-heavy tables that deserve the small-input rebalance below
     * (dimension tables stay as-is so broadcast planning is untouched). */
   private val FactTables =
@@ -588,7 +575,7 @@ object EntryQueries {
             .orderBy(col("score").desc, col("doc_id"))
             .limit(k)
         }
-      s.createDataFrame(captured(result).collectAsList(), result.schema)
+      s.createDataFrame(result.collectAsList(), result.schema)
     } finally perDoc.unpersist()
   }
 
@@ -938,7 +925,7 @@ object EntryQueries {
       // empty expansion: the r7 shape's empty (doc_id, score) result
       val result = t(s, dir, "documents").filter(lit(false))
         .select(col("doc_id"), round(lit(0.0), 6).as("score"))
-      return s.createDataFrame(captured(result).collectAsList(), result.schema)
+      return s.createDataFrame(result.collectAsList(), result.schema)
     }
     val perDoc = perDocFacts(docs, matched,
       (tfOf, _) => matched.map(tm => tfOf(tm) > 0).reduce(_ || _))

@@ -107,13 +107,6 @@ final case class QueryFilter(role: Option[String] = None,
   def fieldEqs: Seq[(String, String)] =
     role.map("role" -> _).toSeq ++ tool.map("tool" -> _).toSeq
   def hasTs: Boolean = tsFrom.nonEmpty || tsTo.nonEmpty
-  /** Canonical memo-key fragment (order-stable, collision-free with any
-    * analyzed term vector: carries the reserved field marker). */
-  def cacheKey: String =
-    if (isEmpty) ""
-    else Seq(role.getOrElse(""), tool.getOrElse(""),
-      tsFrom.map(_.getTime.toString).getOrElse(""),
-      tsTo.map(_.getTime.toString).getOrElse("")).mkString("\u0000")
 }
 
 object QueryFilter {

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 /** BM25 scoring (north rule: k1 = 1.2, b = 0.75), replacing the reference's
   * sum-tf relevance (SearchServiceImpl.java:202-245 — kept as
-  * [[RefCompatScorer]]).
+  * [[SearchEngine.queryRefCompat]]).
   *
   * idf uses the non-negative Robertson/Lucene form:
   *   idf(df) = ln( (N - df + 0.5) / (df + 0.5) + 1 )
@@ -13,8 +13,9 @@ import org.apache.spark.sql.functions._
   *   idf * tf*(k1+1) / (tf + k1*(1 - b + b*dl/avgdl))
   *
   * The scalar and the Column forms MUST be kept in lockstep: the scalar is
-  * the oracle + WAND executor path, the Column form the naive DataFrame
-  * path; rank-identity tests compare them transitively (SURVEY.md §7.8.1).
+  * the oracle + WAND executor path, the Column form the gate family's
+  * per-doc Catalyst pass (graft.entry.EntryQueries); rank-identity tests
+  * compare them transitively (SURVEY.md §7.8.1).
   * Both compute in Double with the identical operation order, so results
   * are bit-equal.
   */
@@ -47,14 +48,4 @@ object Bm25 extends Serializable {
     log((lit(nDocs.toDouble) - df + lit(0.5)) / (df + lit(0.5)) + lit(1.0)) *
       tf * lit(K1 + 1.0) /
       (tf + lit(K1) * (lit(1.0 - B) + lit(B) * dl / lit(avgdl)))
-}
-
-/** Reference-compatible scorer: relevance = Σ_term tf, normalized by the
-  * page max (SearchServiceImpl.java:202-245, default max 1.0 at :33).
-  * Kept behind the same interface to demonstrate reference semantics
-  * (SURVEY.md §7.0.1). */
-object RefCompatScorer extends Serializable {
-  def absRelevance(tfs: Seq[Int]): Double = tfs.map(_.toDouble).sum
-  def relative(abs: Double, maxAbs: Double): Double =
-    abs / (if (maxAbs <= 0.0) 1.0 else maxAbs)
 }

@@ -48,11 +48,6 @@ import graft.model.{CorpusStats, QueryFilter, QuerySpec, SearchHit, TermStats}
   * | required + any of should / prohibited / proximity | one `Wand.andAllWith` walk: per candidate the admission bound, NOT probes, the ordinal predicate, SHOULD probes, then the canonical fold |
   * | proximity on a positions-free index           | one rescan: complete AND candidates → docs join → verify plus canonical fold from the tokens |
   *
-  * `queryNaive` is the declarative Catalyst twin kept as the correctness
-  * backstop (EngineParitySpec): broadcast dictionary join (J3) → stop-term
-  * cap (F4) → df-asc ordering (O1) → left-semi intersection chain (J1) →
-  * BM25 per (doc, term) → canonical-order sum (A4) → top-k (O2/O4).
-  *
   * Query-time semantics carried over from the reference:
   *  - terms analyzed with the SAME analyzer as the build
   *    (SearchServiceImpl.java:68-70);
@@ -756,23 +751,17 @@ object SearchEngine {
     postingsFor(spark, root, m)
       .filter($"shard".isin(shardsIntersecting(m, lo, hi): _*))
       .filter($"term".isin(terms: _*))
-      .select($"term", $"count", $"docIds", $"tfs", $"dls", $"blockFirst",
-        $"docOff", $"tfOff", $"dlOff", $"blockMaxTf", $"blockMinDl")
+      .select(postingScanColumns(withPos = false): _*)
       .mapPartitions { rows =>
         rows.map { r =>
           val cur = new graft.index.PostingCodec.BlockedCursor(
-            graft.index.PostingCodec.BlockedList(
-              r.getLong(1).toInt, r.getAs[Array[Byte]](2),
-              r.getAs[Array[Byte]](3), r.getAs[Array[Byte]](4),
-              r.getSeq[Long](5).toArray, r.getSeq[Int](6).toArray,
-              r.getSeq[Int](7).toArray, r.getSeq[Int](8).toArray,
-              r.getSeq[Int](9).toArray, r.getSeq[Int](10).toArray))
+            postingRow(r, withPos = false))
           var c = 0L
           segs.foreach { case (sLo, sHi) =>
             cur.advanceTo(sLo)
             while (!cur.exhausted && cur.docId <= sHi) { c += 1; cur.advance() }
           }
-          (r.getString(0), c)
+          (r.getString(1), c)
         }
       }
       .groupByKey(_._1).mapValues(_._2).reduceGroups(_ + _)
@@ -807,16 +796,29 @@ object SearchEngine {
     (segs, shardPrune)
   }
 
-  /** The posting-scan projection [[decodeByTerm]] consumes — one
-    * definition so the select list and the decode's positional getSeq
-    * indices cannot drift apart (r6 review: three hand-written copies
-    * had already diverged into 13- vs 15-column index lists). */
+  /** The posting-scan projection [[postingRow]] decodes — one definition
+    * so the select list and the decode's positional getSeq indices cannot
+    * drift apart (r6 review: three hand-written copies had already
+    * diverged into 13- vs 15-column index lists). */
   private def postingScanColumns(withPos: Boolean): Seq[org.apache.spark.sql.Column] = {
     val base = Seq("shard", "term", "chunk", "count", "docIds", "tfs",
       "dls", "blockFirst", "docOff", "tfOff", "dlOff",
       "blockMaxTf", "blockMinDl")
     (if (withPos) base ++ Seq("positions", "posOff") else base).map(col)
   }
+
+  /** One row of [[postingScanColumns]] → its compressed chunk (the shard
+    * is column 0, the term column 1). */
+  private def postingRow(r: org.apache.spark.sql.Row,
+                         withPos: Boolean): graft.index.PostingCodec.BlockedList =
+    graft.index.PostingCodec.BlockedList(
+      r.getLong(3).toInt, r.getAs[Array[Byte]](4),
+      r.getAs[Array[Byte]](5), r.getAs[Array[Byte]](6),
+      r.getSeq[Long](7).toArray, r.getSeq[Int](8).toArray,
+      r.getSeq[Int](9).toArray, r.getSeq[Int](10).toArray,
+      r.getSeq[Int](11).toArray, r.getSeq[Int](12).toArray,
+      if (withPos) r.getAs[Array[Byte]](13) else null,
+      if (withPos) r.getSeq[Int](14).toArray else null)
 
   /** ONE streaming pass over one shard's run of posting rows (VERDICT r03
     * item 2): it consumes rows while the head row belongs to `shard`, each
@@ -835,15 +837,7 @@ object SearchEngine {
       val r = rows.next()
       byTerm.getOrElseUpdate(r.getString(1),
         scala.collection.mutable.ArrayBuffer
-          .empty[graft.index.PostingCodec.BlockedList]) +=
-        graft.index.PostingCodec.BlockedList(
-          r.getLong(3).toInt, r.getAs[Array[Byte]](4),
-          r.getAs[Array[Byte]](5), r.getAs[Array[Byte]](6),
-          r.getSeq[Long](7).toArray, r.getSeq[Int](8).toArray,
-          r.getSeq[Int](9).toArray, r.getSeq[Int](10).toArray,
-          r.getSeq[Int](11).toArray, r.getSeq[Int](12).toArray,
-          if (withPos) r.getAs[Array[Byte]](13) else null,
-          if (withPos) r.getSeq[Int](14).toArray else null)
+          .empty[graft.index.PostingCodec.BlockedList]) += postingRow(r, withPos)
     }
     byTerm
   }
@@ -1203,9 +1197,11 @@ object SearchEngine {
   /** Proximity on a positions-free index (the rescan fallback):
     *  1. enumerate the COMPLETE required-AND candidates (NOT probes
     *     applied, no top-k cut before the verify, else hits could be
-    *     dropped) in one shard-aligned scan, pinned once
-    *     (localCheckpoint): one evaluation feeds the count, the shard list
-    *     and the join;
+    *     dropped) in one shard-aligned scan, pinned once by the eager
+    *     localCheckpoint job. That job also fills one accumulator with each
+    *     shard's candidate count: it is a result stage, so every task's
+    *     update applies once, and the count and the shard list cost no
+    *     further job;
     *  2. prune the docs scan to the shards that produced candidates;
     *  3. join docs←candidates (broadcast when the candidate count is
     *     small), verify + score each re-analyzed token stream
@@ -1218,19 +1214,22 @@ object SearchEngine {
                          taskRows: Option[org.apache.spark.util.CollectionAccumulator[Long]])
       : (Vector[SearchHit], Int) = {
     import spark.implicits._
+    import scala.jdk.CollectionConverters._
+    val perShard = spark.sparkContext.collectionAccumulator[(Int, Long)]("graft.rescanCandidates")
     val cand = selected.mapPartitions { rows =>
       w.shards(counted(rows, taskRows), withPos = false).flatMap { case (shard, r) =>
-        w.candidates(r).map(d => (shard, d))
+        var n = 0L
+        w.candidates(r).map { d => n += 1; (shard, d) } ++ {
+          if (n > 0) perShard.add((shard, n)); Iterator.empty
+        }
       }
     }.toDF("shard", "docId").localCheckpoint(true)
     try {
-      // ONE action serves the emptiness probe and the broadcast decision
-      // (VERDICT r05 hygiene item 4)
-      val candCount = cand.count()
+      val found = perShard.value.asScala.toVector
+      val candCount = found.map(_._2).sum
       if (candCount == 0L) (Vector.empty, 0)
       else {
-        val candShards =
-          cand.select($"shard").distinct().as[Int].collect().toSeq // O(shards)
+        val candShards = found.map(_._1).distinct
         val candFrame = cand.select($"docId")
         val joinCand =
           if (candCount <= PhraseBroadcastMax) broadcast(candFrame) else candFrame
@@ -1819,49 +1818,6 @@ object SearchEngine {
     search(spark, root, Query.Bool(Vector(mustText), Vector(shouldText),
       Vector(notText), Some(Query.Phrase(phraseText, slop)), minShouldMatch, boosts),
       k, Nil, pinned, filter)
-
-  /** Naive Catalyst path over the uncompressed tf relation — correctness
-    * backstop + the shape the SQL oracle mirrors (SURVEY.md §7.3). */
-  def queryNaive(spark: SparkSession, root: String, queryText: String,
-                 mode: String = "AND", k: Int = 10): DataFrame = {
-    import spark.implicits._
-    requireMode(mode)
-    val stats = statsOf(spark, root)
-    val spec = QuerySpec(
-      Analyzer.analyzeQueryFor(stats.analyzerVersion, queryText), mode, k)
-    val p = plan(spark, root, spec, stats)
-    // unknown terms dropped, reference parity (SearchServiceImpl.java:145-148)
-    val session = spark
-    if (p.terms.isEmpty)
-      return session.emptyDataset[SearchHit].toDF("docId", "score")
-
-    val tf = IndexBuilder.loadTf(spark, root)
-    val termList = p.terms.map(_.term)
-    val qtf = tf.filter($"term".isin(termList: _*))
-
-    val candidates =
-      if (p.mode == "AND") {
-        // J1: left-semi chain, rarest term first (O1 already applied)
-        p.terms.map(t => qtf.filter($"term" === t.term).select($"docId"))
-          .reduce((a, b) => a.join(b, Seq("docId"), "left_semi"))
-      } else {
-        qtf.select($"docId").distinct()
-      }
-
-    // per-(doc, term) BM25 then deterministic canonical-order fold (§7.8.1)
-    val dfCol = typedLit(p.terms.map(t => t.term -> t.df).toMap)
-    val scored = qtf
-      .join(candidates, Seq("docId"), "left_semi")
-      .withColumn("tdf", dfCol($"term"))
-      .withColumn("s", Bm25.scoreCol($"tf", $"tdf", $"dl", stats.nDocs, stats.avgdl))
-      .groupBy($"docId")
-      .agg(aggregate(
-        array_sort(collect_list(struct($"tdf", $"term", $"s"))),
-        lit(0.0),
-        (acc, x) => acc + x.getField("s")).as("score"))
-
-    scored.orderBy($"score".desc, $"docId".asc).limit(k)
-  }
 
   /** Shards that may hold a docId in [lo, hi]: a stamped entry by its
     * manifest docId range; an entry without a range (written before the

@@ -5,6 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestBase
 import graft.index.{IndexBuilder, IndexManifest}
 import graft.model.Turn
+import graft.oracle.Oracle
 import graft.query.{SearchEngine, Snippets}
 
 /** C6 morphology (VERDICT r01 item 8): the deterministic rule-based
@@ -84,10 +85,9 @@ class StemmerSpec extends AnyFunSuite {
     // english: "merge" matches merged/merging
     val merges = SearchEngine.query(spark, root, "merge", "OR", 10)
     assert(merges.size == 2)
-    // naive path agrees with the compressed path on the stemmed index
-    val naive = SearchEngine.queryNaive(spark, root, "лошадь", "OR", 10)
-      .collect().map(r => (r.getLong(0), r.getDouble(1))).toVector
-    assert(naive == hits.map(h => (h.docId, h.score)))
+    // rank-identical (bit-equal scores) to a stemmed scalar oracle
+    assert(hits == new Oracle(turns, Analyzer.StemVersion)
+      .topK("лошадь", "OR", 10))
     // snippets bold the inflected surfaces
     val snip = SearchEngine.queryWithSnippets(spark, root, "лошадь", "OR", 3)
     assert(snip.nonEmpty)

@@ -11,10 +11,10 @@ import graft.oracle.Oracle
 import graft.query.SearchEngine
 
 /** End-to-end rank-identity gate (SURVEY.md §5.2.3, FIXTURES.md §3):
-  * the Spark engine (compressed WAND path AND naive Catalyst path) must
-  * return the oracle's exact top-k docIDs and bit-equal BM25 scores on
-  * the reference query-set categories, plus the per-turn text byte
-  * round-trip invariant and the checkpoint/resume contract. */
+  * the Spark engine must return the oracle's exact top-k docIDs and
+  * bit-equal BM25 scores on the reference query-set categories, plus the
+  * per-turn text byte round-trip invariant and the checkpoint/resume
+  * contract. */
 class EngineParitySpec extends AnyFunSuite {
 
   private lazy val spark = SparkTestBase.spark
@@ -59,15 +59,6 @@ class EngineParitySpec extends AnyFunSuite {
     querySet.foreach { case (q, mode, k) =>
       val expected = oracle.topK(q, mode, k)
       val got = SearchEngine.query(spark, root, q, mode, k)
-      assert(got == expected, s"query '$q' [$mode] k=$k")
-    }
-  }
-
-  test("naive Catalyst path: rank-identical to oracle on the query set") {
-    querySet.foreach { case (q, mode, k) =>
-      val expected = oracle.topK(q, mode, k)
-      val got = SearchEngine.queryNaive(spark, root, q, mode, k)
-        .collect().map(r => SearchHit(r.getLong(0), r.getDouble(1))).toVector
       assert(got == expected, s"query '$q' [$mode] k=$k")
     }
   }
@@ -495,8 +486,6 @@ class EngineParitySpec extends AnyFunSuite {
           "needlemid", bad, 10, Seq("conv-0000001"))),
         "queryWithSnippets" -> (() =>
           SearchEngine.queryWithSnippets(spark, root, "needlemid", bad)),
-        "queryNaive" -> (() =>
-          SearchEngine.queryNaive(spark, root, "needlemid", bad)),
         "executePlan" -> (() =>
           SearchEngine.executePlan(spark, root, p.copy(mode = bad), stats)))
       calls.foreach { case (name, call) =>
@@ -524,14 +513,16 @@ class EngineParitySpec extends AnyFunSuite {
       }
     }
     // CLI refusals exit with the usage line before the Spark session
-    // starts: an unknown mode, k < 1, the naive backstop asked to scope
-    // (it answers unscoped) and two spellings of the scopes at once
+    // starts: an unknown mode, k < 1, two spellings of the scopes at
+    // once, and any argument that is not a known flag (a removed flag or
+    // a typo would otherwise run some other query)
     Seq(
       Seq("--mode", "ANDD"),
       Seq("--k", "0"),
-      Seq("--naive", "--scopes", "conv-0000001"),
-      Seq("--naive", "--conv", "conv-0000001"),
-      Seq("--conv", "conv-0000001", "--scopes", "conv-0000002")
+      Seq("--conv", "conv-0000001", "--scopes", "conv-0000002"),
+      Seq("--naive"),
+      Seq("--mode", "NEAR", "--slp", "5"),
+      Seq("--nto", "x")
     ).foreach { flags =>
       val cli = intercept[RuntimeException](graft.cli.Query.main(
         (Seq(root, "needlemid w0000") ++ flags).toArray))

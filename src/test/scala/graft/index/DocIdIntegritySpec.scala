@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestBase
 import graft.fixtures.TranscriptGen
-import graft.model.SearchHit
+import graft.oracle.Oracle
 import graft.query.SearchEngine
 
 /** docId integrity at a scale where range-boundary drift shows.
@@ -22,7 +22,7 @@ import graft.query.SearchEngine
   *  - docIds are dense: distinct == count == max+1 (no dup, no gap);
   *  - every (conv_id, turn_idx) key appears exactly once;
   *  - manifest shard ranges are disjoint and cover 0..N-1;
-  *  - WAND and naive paths agree (they diverged under the bug);
+  *  - queries equal the scalar oracle's (they diverged under the bug);
   *  - the build is replay-deterministic: a second build from the same
   *    input into a fresh root yields byte-identical docId assignment.
   */
@@ -69,13 +69,13 @@ class DocIdIntegritySpec extends AnyFunSuite {
     }
   }
 
-  test("WAND and naive paths agree at this scale") {
+  test("queries rank-identical to the oracle at this scale") {
+    // the same turns the build's `dataset` generates, conv by conv
+    val oracle = new Oracle(TranscriptGen.corpus(seed = 9L, nConvs = nConvs.toInt))
     Seq(("needlemid w0000", "AND", 10), ("needlemid", "OR", 10),
         ("w0001 w0002", "AND", 10)).foreach { case (q, m, k) =>
       val wand = SearchEngine.query(spark, root, q, m, k)
-      val naive = SearchEngine.queryNaive(spark, root, q, m, k)
-        .collect().map(r => SearchHit(r.getLong(0), r.getDouble(1))).toVector
-      assert(wand == naive, s"path divergence on '$q' [$m]")
+      assert(wand == oracle.topK(q, m, k), s"engine vs oracle on '$q' [$m]")
       assert(wand.nonEmpty)
     }
   }

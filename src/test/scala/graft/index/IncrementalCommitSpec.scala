@@ -2,7 +2,7 @@ package graft.index
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.SparkTestBase
+import graft.{LiveOracle, SparkTestBase}
 import graft.fixtures.TranscriptGen
 import graft.model.Turn
 import graft.query.SearchEngine
@@ -36,33 +36,41 @@ class IncrementalCommitSpec extends AnyFunSuite {
       e.minConv.isDefined && e.maxConv.isDefined),
       "fresh build must stamp shard conv ranges")
     fsckClean(root, "build")
+    // the index's turns by key, tracked through every op for the oracle
+    val live = scala.collection.mutable.Map(corpus.map(t => (t.conv_id, t.turn_idx) -> t): _*)
+    def put(turns: Seq[Turn]): Unit = turns.foreach(t => live((t.conv_id, t.turn_idx)) = t)
 
     // 1. time-ordered append: conv_ids sort AFTER every committed one —
     // the manifest alone proves the keys new, zero shards scanned
-    IndexMaintenance.appendConversations(spark, root, Seq(
+    val appended = Seq(
       Turn("zz-new-1", 0, "user", "zzinc append one needlemid", "", ts),
-      Turn("zz-new-1", 1, "user", "zzinc append two", "", ts)))
+      Turn("zz-new-1", 1, "user", "zzinc append two", "", ts))
+    IndexMaintenance.appendConversations(spark, root, appended)
+    put(appended)
     assert(IndexMaintenance.lastKeyCheckShards.get() == 0,
       "beyond-range append must scan ZERO shards for the dup check")
     fsckClean(root, "time-ordered append")
 
     // 2. delete (in-range): pruned to intersecting shards, totals roll
     IndexMaintenance.deleteConversations(spark, root, Set("conv-00000005"))
+    live.filterInPlace { case ((conv, _), _) => conv != "conv-00000005" }
     assert(IndexMaintenance.lastKeyCheckShards.get() < 8,
       "single-conv delete must prune the candidate shard set")
     fsckClean(root, "delete")
 
     // 3. replace (in-range)
     val target = corpus.find(_.conv_id == "conv-00000010").get
-    IndexMaintenance.replaceTurns(spark, root,
-      Seq(target.copy(text = "zzinc replaced body needlemid w0000")))
+    val replaced = Seq(target.copy(text = "zzinc replaced body needlemid w0000"))
+    IndexMaintenance.replaceTurns(spark, root, replaced)
+    put(replaced)
     assert(IndexMaintenance.lastKeyCheckShards.get() >= 1)
     fsckClean(root, "replace")
 
     // 4. backfill append sorting BEFORE the corpus: also zero-scan (no
     // committed shard's range reaches below "conv-")
-    IndexMaintenance.appendConversations(spark, root, Seq(
-      Turn("aaa-backfill", 0, "user", "zzinc backfill", "", ts)))
+    val backfill = Seq(Turn("aaa-backfill", 0, "user", "zzinc backfill", "", ts))
+    IndexMaintenance.appendConversations(spark, root, backfill)
+    put(backfill)
     fsckClean(root, "backfill append")
 
     // 5. pruned dup/missing checks still enforce key discipline
@@ -77,16 +85,14 @@ class IncrementalCommitSpec extends AnyFunSuite {
     assert(IndexMaintenance.lastKeyCheckShards.get() == 0,
       "beyond-range replace key needs no shard scan to be rejected")
 
-    // 6. rank parity against the naive Catalyst path over the final state
+    // 6. rank parity against the scalar oracle over the final state
     val m1 = IndexManifest.read(root).get
     assert(m1.avgdl == m1.sumDl.toDouble / m1.nDocs)
     Seq(("needlemid w0000", "AND", 10), ("zzinc", "OR", 10)).foreach {
       case (q, mo, k) =>
         val wand = SearchEngine.query(spark, root, q, mo, k)
-        val naive = SearchEngine.queryNaive(spark, root, q, mo, k)
-          .collect().map(r =>
-            graft.model.SearchHit(r.getLong(0), r.getDouble(1))).toVector
-        assert(wand == naive, s"post-chain parity '$q' [$mo]")
+        assert(wand == LiveOracle.topK(spark, root, live.values, q, mo, k),
+          s"post-chain parity '$q' [$mo]")
     }
   }
 
@@ -94,36 +100,38 @@ class IncrementalCommitSpec extends AnyFunSuite {
     // the incremental roll-forward's failure mode is cumulative drift —
     // any error in one op's delta poisons every later snapshot. Drive a
     // seeded mixed sequence at micro-batch cadence and prove the final
-    // state byte-exact against full recomputation + the naive scorer.
+    // state byte-exact against full recomputation + the scalar oracle.
     val corpus = TranscriptGen.corpus(seed = 33L, nConvs = 100)
     val root = SparkTestBase.tmpDir("graft-chain30")
     IndexBuilder.build(spark, spark.createDataset(corpus), root,
       shards = 4, waveSize = 4, maxChunkPostings = 64)
     val rnd = new scala.util.Random(404L)
     var appended = 0
-    val liveConvs = scala.collection.mutable.Set(corpus.map(_.conv_id): _*)
+    val live = scala.collection.mutable.Map(corpus.map(t => (t.conv_id, t.turn_idx) -> t): _*)
+    def liveConvs = live.keySet.map(_._1)
     (1 to 30).foreach { i =>
       rnd.nextInt(10) match {
         case d if d < 6 => // time-ordered micro-append (the hot path)
           appended += 1
           val conv = f"zz-chain-$appended%04d"
-          IndexMaintenance.appendConversations(spark, root,
-            (0 until 1 + rnd.nextInt(3)).map(j =>
-              Turn(conv, j, "user", s"zzchain $conv turn $j w000${rnd.nextInt(5)}",
-                "", ts)))
-          liveConvs += conv
+          val turns = (0 until 1 + rnd.nextInt(3)).map(j =>
+            Turn(conv, j, "user", s"zzchain $conv turn $j w000${rnd.nextInt(5)}",
+              "", ts))
+          IndexMaintenance.appendConversations(spark, root, turns)
+          turns.foreach(t => live((t.conv_id, t.turn_idx)) = t)
           assert(IndexMaintenance.lastKeyCheckShards.get() == 0,
             s"op $i: time-ordered append must scan zero shards")
         case d if d < 8 => // delete a random live conv
           val victim = liveConvs.toSeq.sorted.apply(rnd.nextInt(liveConvs.size))
           IndexMaintenance.deleteConversations(spark, root, Set(victim))
-          liveConvs -= victim
+          live.filterInPlace { case ((conv, _), _) => conv != victim }
         case _ => // replace a RANDOM surviving fixture turn (any shard)
           val survivors = corpus.filter(t => liveConvs(t.conv_id))
           if (survivors.nonEmpty) {
-            val t = survivors(rnd.nextInt(survivors.size))
-            IndexMaintenance.replaceTurns(spark, root,
-              Seq(t.copy(text = s"zzreplaced op$i ${t.text.take(30)}")))
+            val old = survivors(rnd.nextInt(survivors.size))
+            val t = old.copy(text = s"zzreplaced op$i ${old.text.take(30)}")
+            IndexMaintenance.replaceTurns(spark, root, Seq(t))
+            live((t.conv_id, t.turn_idx)) = t
           }
       }
       if (i % 10 == 0) fsckClean(root, s"op $i")
@@ -147,10 +155,8 @@ class IncrementalCommitSpec extends AnyFunSuite {
     Seq(("needlemid w0000", "AND", 10), ("zzchain", "OR", 20),
         ("w0000", "OR", 15)).foreach { case (q, mo, k) =>
       val wand = SearchEngine.query(spark, root, q, mo, k)
-      val naive = SearchEngine.queryNaive(spark, root, q, mo, k)
-        .collect().map(r =>
-          graft.model.SearchHit(r.getLong(0), r.getDouble(1))).toVector
-      assert(wand == naive, s"post-chain parity '$q' [$mo]")
+      assert(wand == LiveOracle.topK(spark, root, live.values, q, mo, k),
+        s"post-chain parity '$q' [$mo]")
     }
     // the previous snapshot stays time-travel-queryable after the chain
     val vs = IndexManifest.versions(root)

@@ -161,7 +161,7 @@ class BoolPhraseSpec extends AnyFunSuite {
       }
       val expected = unfiltered.filter(h => oracle.docPasses(f)(h.docId)).take(k)
       val shape = s"seed $seed: phrase=$phrase~$slop +($must) ?($should) " +
-        s"-($not)>=$mm k=$k filter=${f.cacheKey} boosts=$boosts"
+        s"-($not)>=$mm k=$k filter=$f boosts=$boosts"
       roots.foreach { case (label, root) =>
         val got = phrase match {
           case Some(ph) => SearchEngine.queryBoolPhrase(spark, root, ph, slop,

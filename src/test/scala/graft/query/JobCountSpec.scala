@@ -79,6 +79,9 @@ class JobCountSpec extends AnyFunSuite {
       val (hits, c) = jobs(run())
       assert(hits.nonEmpty && hits == expected, s"rescan $name answer")
       assert(c.stages.nonEmpty && c.stages.forall(_ <= cores), s"rescan $name stages: $c")
+      // the candidate pass, the candidates' broadcast and the docs join;
+      // the count and the shard list come back in the pass's accumulator
+      assert(c.jobs == 4, s"rescan $name jobs: $c")
     }
   }
 
